@@ -2,9 +2,9 @@
 """One-shot codemod: convert allowlisted oracle-SQL `round(X, k)` sites
 to the Shared.roundSql VARCHAR-mirror form so the DuckDB twin computes
 Spark's rendering-HALF_UP kernel instead of DuckDB's multiply-half-away
-kernel (the SURVEY §30.4 engine-ambiguity class; evidence:
-scripts/probe_round_tie.py — 2,860/140,454 synthesized boundary values
-fire on the native kernels, 0/140,454 on the mirror).
+kernel (the SURVEY §30.4 engine-ambiguity class; evidence in SURVEY
+§32.3: 2,860/140,454 synthesized boundary values fire on the native
+kernels, 0/140,454 on the mirror).
 
   round(X, k)  ->  CAST(round(CAST(CAST((X) AS VARCHAR)
                      AS DECIMAL(38,18)), k) AS DOUBLE)

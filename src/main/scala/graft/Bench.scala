@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Benchmark main (driver contract): one JSON line with per-query
   * wall-clock at SPARK_GRAFT_SF_DIR. Results are materialized through
@@ -37,29 +37,28 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // SPARK_GRAFT_ONLY=q_a,q_b times just those queries (A/B pairs);
+    // a subset run leaves BENCH_LOCAL.json, the retry baseline, alone
+    val only = Session.only()
+    val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     // untimed warm-up: JVM/codegen/scheduler spin-up, parquet reader
     // init, and the decimal codegen paths, so the first timed query
-    // isn't charged for them
+    // isn't charged for them. A failed read is reported, not fatal:
+    // the queries that need the table fail (and say so) on their own.
     spark.range(1000000).selectExpr("sum(id * 2)")
       .write.format("noop").mode("overwrite").save()
+    def warm(table: String)(read: => Unit): Unit =
+      try read catch { case NonFatal(e) =>
+        System.err.println(s"[bench] warm-up $table: ${e.getMessage}")
+      }
     graft.sources.Tables.all.foreach { t =>
-      try spark.read.parquet(s"$sfDir/$t.parquet").schema catch { case _: Throwable => () }
+      warm(t)(spark.read.parquet(s"$sfDir/$t.parquet").schema)
     }
-    try {
+    warm("lineitem") {
       spark.read.parquet(s"$sfDir/lineitem.parquet")
         .selectExpr("sum(cast(l_extendedprice as decimal(12,2)))", "max(l_shipdate)")
         .write.format("noop").mode("overwrite").save()
-      spark.read.parquet(s"$sfDir/events.parquet").schema
-    } catch { case _: Throwable => () }
+    }
     // per-query time = median of `runs` executions (default 3): single
     // runs on a shared box swing up to ~13x on identical plans, which
     // drowns any real regression signal in scheduler noise
@@ -93,7 +92,8 @@ object Bench {
           "retry guard is disabled this run")
       parsed
     }
-    def timeOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Option[Double] = {
+    def timeOnce(name: String, fn: Session.Query): Option[Double] = {
+      spark.sparkContext.setJobDescription(s"bench:$name")
       val t0 = System.nanoTime()
       try {
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()
@@ -103,7 +103,7 @@ object Bench {
         None
       }
     }
-    val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+    val results = Session.queries(only).map { case (name, fn) =>
       val times = (1 to runs).flatMap(_ => timeOnce(name, fn))
       // any failed run reports -1, never a partial wall-clock — a
       // broken query must not make the bench look green or faster
@@ -118,13 +118,19 @@ object Bench {
       // "retried"): the adjudication the retry owed never happened, so
       // the original, possibly contention-inflated median must not be
       // recorded as a clean entry.
-      if (ok && needsRetry(median, prior.get(name))) {
-        val again = (1 to runs).flatMap(_ => timeOnce(name, fn))
-        if (again.length == runs) {
-          val m2 = again.sorted.apply(runs / 2)
-          (name, math.min(median, m2), true, Some(median))
-        } else (name, -1.0, false, Some(median))
-      } else (name, median, ok, None)
+      val again =
+        if (ok && needsRetry(median, prior.get(name)))
+          (1 to runs).flatMap(_ => timeOnce(name, fn))
+        else Nil
+      val (value, good, replaced) =
+        if (again.isEmpty) (median, ok, None)
+        else if (again.length == runs)
+          (math.min(median, again.sorted.apply(runs / 2)), true, Some(median))
+        else (-1.0, false, Some(median))
+      val shown = if (good) f"$value%7.3f" else " failed"
+      System.err.println(f"[bench] $name%-24s median=$shown  runs=" +
+        (times ++ again).map(t => f"$t%.3f").mkString(","))
+      (name, value, good, replaced)
     }
     // failed queries serialize as null (JSON has no NaN) and are listed
     // in "failed"; "value" sums SUCCESSFUL queries only — a round with a
@@ -145,7 +151,9 @@ object Bench {
     // 104.9-128.97 s across refreshes (SURVEY §17/§19/§21) — the
     // artifact carries the disclaimer so a reader of the JSON alone
     // can tell cross-refresh deltas from real regressions (which need
-    // an isolated fresh-JVM probe, e.g. ProbeNoiseR11, to confirm)
+    // isolated fresh-JVM medians to confirm: SURVEY §21.1 found two
+    // r10 jumps, 0.35 -> 2.60 s and 1.07 -> 5.24 s, back at their r9
+    // levels in 3 fresh JVMs)
     val noise = "per-query medians of " + runs + " in-process runs; " +
       "same-code TOTALS have varied 104.9-165.5s across refreshes on " +
       "this shared box (SURVEY 17/19/21/22) - compare cross-round " +
@@ -169,7 +177,9 @@ object Bench {
     // stdout is the driver contract, but its tail-scrape truncated the
     // head of the (now ~90-entry) line in round 5 — also write the
     // whole artifact to files the driver (and a human) can read intact
-    for (p <- Seq("/tmp/graft_bench.json", "BENCH_LOCAL.json")) {
+    // (a subset run must not replace the full-run retry baseline)
+    val artifacts = "/tmp/graft_bench.json" +: (if (only.isEmpty) Seq("BENCH_LOCAL.json") else Nil)
+    for (p <- artifacts) {
       try java.nio.file.Files.writeString(java.nio.file.Paths.get(p), json + "\n")
       catch { case _: Throwable => () }
     }

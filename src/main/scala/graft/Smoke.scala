@@ -1,17 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Local replica of the driver's t1 smoke: SparkEntry.entry rows > 0. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local("4")
     val df = SparkEntry.entry(spark)
     val n = df.count()
     df.show(5, truncate = false)

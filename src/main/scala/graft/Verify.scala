@@ -1,20 +1,14 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // SPARK_GRAFT_ONLY=q_a,q_b runs just those queries (local
+    // iteration); unset, the dump covers every query
+    val only = Session.only()
+    val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
     // determinism-sweep breadcrumb: hostile-axis runs (TZ, locale,
     // parallelism, codegen-off) inject conf via -D system properties —
     // echo the codegen axis so a sweep that silently failed to apply
@@ -27,13 +21,7 @@ object Verify {
       spark.conf.get("spark.sql.parquet.enableVectorizedReader", "true") +
       " aqe=" + spark.conf.get("spark.sql.adaptive.enabled", "true"))
     new java.io.File(outDir).mkdirs()
-    // local-iteration filter: SPARK_GRAFT_ONLY=q_a,q_b runs just those
-    // queries (the driver never sets it, so its gate always runs all)
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
+    Session.queries(only).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

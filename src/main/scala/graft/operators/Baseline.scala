@@ -389,7 +389,7 @@ object Baseline {
     *     per-group sort; each sort is ~n/1024 of a group. The hot-group
     *     path for deployments whose network groups go large enough
     *     that a one-task group sort straggles. MEASURED crossover
-    *     (ProbeSkew, local[32]): at a 17M-row hot /24 the bucket
+    *     (SURVEY §15, local[32]): at a 17M-row hot /24 the bucket
     *     kernel wins MAD (14.4 s vs 18.0 s — two selections pay the
     *     one-task sort twice) with p95 at parity; at 1.7M rows the
     *     window kernel still wins locally. Cluster executors with
@@ -402,7 +402,7 @@ object Baseline {
 
   /** Hot-group row-count threshold for `graft.rankKernel=auto`: the
     * bucket kernel takes over when any single group reaches this many
-    * rows. Default sits between the two MEASURED regimes (ProbeSkew,
+    * rows. Default sits between the two MEASURED regimes (SURVEY §15,
     * local[32]): at a 1.7M-row hottest group the window kernel still
     * wins; at 17M the bucket kernel does (MAD 14.4 s vs 18.0 s).
     * Cluster executors with per-task memory caps hit the crossover
@@ -417,7 +417,7 @@ object Baseline {
     * to the hottest group's row count, compared against
     * [[RankKernelAutoThresholdKey]]. This is a driver-side scalar by
     * necessity — a PHYSICAL-plan choice cannot stay lazy — and is the
-    * skew audit (A49) wired into the knob so the ProbeSkew crossover
+    * skew audit (A49) wired into the knob so the SURVEY §15 crossover
     * is an automatic decision instead of operator trivia.
     */
   private[graft] def chooseRankKernel(df: DataFrame, keyCol: String): String = {

@@ -20,8 +20,8 @@ import graft.functions.Hashing
   * `graft.gramSet.broadcastMaxRows` (default 1M) rows, and a
   * spill-safe sort-merge hint past that — at 100 TB the train shingle
   * index is itself huge and must never ride a broadcast bet on
-  * Spark's unmodeled explode estimates (the ProbeC8EvalGrowth
-  * rogue-broadcast lesson).
+  * Spark's unmodeled explode estimates (the rogue-broadcast
+  * lesson of SURVEY §28.6).
   */
 object Contamination {
 
@@ -63,7 +63,7 @@ object Contamination {
     // does not model explode fan-out, so the static estimate of a
     // post-explode distinct can underestimate by orders of magnitude
     // and BROADCAST the train shingle index — the one side that must
-    // never broadcast at scale (ProbeC8EvalGrowth measured this exact
+    // never broadcast at scale (SURVEY §28.6 measured this exact
     // rogue-broadcast class on the C8 scrub: 5.5M rows / 384 MiB
     // hash-relation past the 10 MB threshold). The count-then-hint
     // keeps the small case broadcast and the big case sort-merge.

@@ -27,8 +27,8 @@ object Dedup {
   val AutoBucket: Long = -1L
 
   /** Hottest-band-bucket width at which `maxBucket = AutoBucket`
-    * engages the cap. Default sits between ProbeScaleLshSkew's two
-    * measured regimes (local[32], stop-phrase skew): at hot width
+    * engages the cap. Default sits between the two measured
+    * regimes of SURVEY §26.8 (local[32], stop-phrase skew): at hot width
     * ~2,100 (400k docs) the cap's window cost ≈ its savings; at
     * ~4,200 (800k docs) it decisively pays (24.4 s vs 33.0 s) and the
     * quadratic term only grows from there (~3.5B excess pairs at 8M
@@ -38,7 +38,7 @@ object Dedup {
   val BucketCapAutoThresholdKey = "graft.bucketCap.autoThreshold"
   private val BucketCapThresholdDefault = 4000L
 
-  /** The cap applied when auto engages: ProbeScaleLshSkew's measured
+  /** The cap applied when auto engages: SURVEY §26.8's measured
     * arm (200 kept every planted near-dup at 100% recall while
     * returning the skewed corpus's wall to the uniform arm's slope).
     */
@@ -96,7 +96,7 @@ object Dedup {
     * choice: simhash/bandedHamming pass their (always-materialized —
     * raw-text upstream) frames; the LSH caller passes the plain frame
     * and eats one extra signature agg over its materialized shingle
-    * sets instead (ProbeLshBandsMat: cheaper than a band checkpoint).
+    * sets instead (SURVEY §26.8: cheaper than a band checkpoint).
     */
   private def autoCapped(all: DataFrame, keys: Seq[String]): DataFrame = {
     val spark = all.sparkSession
@@ -149,7 +149,7 @@ object Dedup {
     * window over (band, hash): the window shuffled AND sorted the
     * ENTIRE band frame once per join side — at 4M docs on a 48g
     * local JVM exactly the execution-memory profile that OOMed the
-    * ProbeScaleLshSkew --big auto arm, and at 100 TB a full extra
+    * 4M-doc auto arm of SURVEY §26.8, and at 100 TB a full extra
     * corpus shuffle for a guard that structurally needs only a
     * bucket-count table.
     */
@@ -497,7 +497,6 @@ object Dedup {
       maxIters: Int = 20, pairsCanonical: Boolean = false): DataFrame = {
     requireIntegralId(df, idCol)
     val mat = Materializer.of(df.sparkSession)
-    val dbg = sys.env.contains("GRAFT_CLUSTERS_DEBUG")
     // canonical orientation u > v (each edge points at its smaller
     // end); self-loops carry no connectivity and drop here.
     // `pairsCanonical = true` (r17 opt) asserts the input is already a
@@ -548,21 +547,6 @@ object Dedup {
     // multiset difference. Row-count parity is spec-pinned
     // (DedupSpec), and the oracle gate covers all four cluster
     // queries end-to-end.
-    //
-    // The rewrite also makes the round plan LINEAR in its input (the
-    // old round referenced the frontier ~12x through gamma/join
-    // re-embedding; this one reads it twice, in gamma) — which makes
-    // ROUND BATCHING safe: `graft.clusters.roundsPerHop` rounds run
-    // per materialization+convergence probe. Default 1 — a MEASURED
-    // revert of the depth-2 candidate (VERDICT r17 #4): at gate scale
-    // hop=2 cost 1.5-2x (5-run medians 5.0-5.9 s vs 2.3-3.6 s on the
-    // same box) because the overshoot rounds past the fixpoint plus
-    // the within-hop re-aggregation of the un-checkpointed round-1
-    // frontier exceed the one saved checkpoint+scheduling gap. The
-    // knob stays for deployments where a materialization is a real
-    // HDFS round-trip (graft.materializer=reliable) and the trade
-    // reverses; correctness is hop-independent (fixpoint argument
-    // below).
     def contractRound(e: DataFrame): DataFrame = {
       val wu = Window.partitionBy(col("u"))
       val gamma = e.union(e.select(col("v").as("u"), col("u").as("v")))
@@ -578,34 +562,19 @@ object Dedup {
         .select(col("n").as("u"), col("m").as("v"))
         .distinct()
     }
-    val hop = {
-      val raw = df.sparkSession.conf.get("graft.clusters.roundsPerHop", "1")
-      val v = try raw.toInt catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"graft.clusters.roundsPerHop=$raw (want a positive integer)")
-      }
-      require(v >= 1, s"graft.clusters.roundsPerHop=$v (want >= 1)")
-      v
-    }
+    // one round per materialization: two rounds per checkpoint ran
+    // 5.0-5.9 s vs 2.3-3.6 s at gate scale (OPTIMIZATION_r18.md,
+    // Batch 3, "depth-2 round batching")
     while (!converged && iter < maxIters) {
-      val steps = math.min(hop, maxIters - iter)
-      var frontier = edges
-      for (_ <- 1 to steps) frontier = contractRound(frontier)
-      val (next, nextCount) = Materializer.eagerCounted(mat, frontier)
+      val (next, nextCount) = Materializer.eagerCounted(mat, contractRound(edges))
       // published termination criterion: the iterated edge set reaches
       // a fixpoint (disjoint stars). Both sides are distinct sets, so
       // equal counts + empty difference is exact set equality; the
-      // count gate makes the except() run only on candidate hops.
-      // Batching keeps this exact: rounds are deterministic maps under
-      // a strictly decreasing potential (Kiveris et al.), so
-      // F^steps(E) = E forces F(E) = E — set equality across a hop IS
-      // fixpoint, never a cycle.
+      // count gate makes the except() run only on candidate rounds.
       converged = nextCount == prevCount && next.except(edges).isEmpty
-      if (dbg) System.err.println(
-        s"[clusters] round=${iter + steps} edges=$nextCount converged=$converged")
       edges = next
       prevCount = nextCount
-      iter += steps
+      iter += 1
     }
     if (!converged) throw new IllegalStateException(
       s"Dedup.clusters: star contraction did not converge in $maxIters " +
@@ -1051,7 +1020,7 @@ object Dedup {
     // static planner broadcast a 5.5M-row / 384 MiB eval gram relation
     // off its unmodeled post-explode estimate, and checkpoint stats
     // (originStats) + AQE never correct a statically-chosen broadcast
-    // (ProbeC8EvalGrowth). The count-then-hint makes the degradation
+    // (SURVEY §28.6). The count-then-hint makes the degradation
     // graceful and exact: broadcast while the eval set is genuinely
     // small, spill-safe sort-merge past the cap.
     val evalSh = sizedGramSide(Materializer.of(train.sparkSession)(
@@ -1068,7 +1037,7 @@ object Dedup {
     * explode fan-out, so the STATIC size estimate of a post-explode
     * distinct is wrong by orders of magnitude, and a localCheckpoint
     * carries the pre-checkpoint plan's stats (`originStats`) — AQE
-    * never revisits a statically-chosen broadcast. ProbeC8EvalGrowth
+    * never revisits a statically-chosen broadcast. SURVEY §28.6
     * measured the failure: a 5.5M-row / 384 MiB eval gram relation
     * broadcast past the 10 MB threshold. A 24g local JVM absorbs
     * that; cluster executors OOM. Default 1M rows ~ tens of MB as a
@@ -1132,7 +1101,7 @@ object Dedup {
     * tagged gram set is eval-sized), train never shuffled for the
     * probes (semi/inner joins against the tiny gram tables broadcast;
     * growing eval degrades to a shuffled semi-join, measured in
-    * ProbeC8EvalGrowth), row-local span assembly, and the final
+    * SURVEY §28.6), row-local span assembly, and the final
     * aggregate is suite-cardinality rows. The gram stream is consumed
     * twice (global covered + suite tagging), so it materializes once
     * here.
@@ -1229,7 +1198,7 @@ object Dedup {
     * only over candidates — the 100 TB scale path.
     *
     * `maxBucket` (0 = uncapped, the gate default) guards the skewed-
-    * shingle regime ProbeScaleLshSkew measured: a popular contiguous
+    * shingle regime SURVEY §26.4 measured: a popular contiguous
     * stop-phrase block pins each perm's minimum to the SAME shingle
     * for every doc carrying the block, so docs whose whole band is
     * block-dominated land in ONE bucket — bucket width grows with the
@@ -1260,8 +1229,8 @@ object Dedup {
     // Measured 1.8 -> 1.4 s median at sf0.1; the cluster query
     // consuming this pair set dropped 2.1 -> 1.4 s. Checkpointing the
     // BANDS as well measured no further win (the signature agg is one
-    // pass) — re-confirmed at 400k/800k docs by ProbeLshBandsMat's
-    // interleaved arms: the checkpointed band join reads 15-18%
+    // pass) — re-confirmed at 400k/800k docs by interleaved
+    // arms (SURVEY §26.8): the checkpointed band join reads 15-18%
     // SLOWER (the write costs more than re-running the one-pass agg
     // on each join side saves).
     val sets = Materializer.of(df.sparkSession)(
@@ -1287,7 +1256,7 @@ object Dedup {
       else
         // AutoBucket: the decision re-runs the signature agg once over
         // the MATERIALIZED sets — deliberately NOT checkpointing the
-        // band frame: ProbeLshBandsMat (interleaved arms) measured the
+        // band frame: interleaved arms (SURVEY §26.8) measured the
         // checkpointed band join 15-18% SLOWER than recomputing the
         // one-pass agg on each join side (the write costs more than
         // the agg saves when the shingle index is already local)

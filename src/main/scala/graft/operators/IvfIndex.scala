@@ -81,7 +81,7 @@ object IvfIndex {
     * already carries the norm. The argmin runs over a PRIMITIVE
     * double array (`array_position(__ds, array_min(__ds)) - 1`,
     * first index of the minimum = EXACTLY the head of the (d, cell)
-    * struct sort the query path uses; ProbeArgmin measured the
+    * struct sort the query path uses; SURVEY §24.4 measured the
     * primitive idiom 3x the struct sort and 14x the struct
     * array_min). It takes a DataFrame, not a Column, ON PURPOSE:
     * the O(nlist x dim) distance array must be a NAMED intermediate
@@ -89,7 +89,7 @@ object IvfIndex {
     * Column-returning form inlined the array into both argmin
     * operands and the corpus paid the distance computation twice
     * (q_ann_ivf 0.86 -> 1.79 s committed r12 -> r13; adjudicated
-    * real by ProbeNoiseR14, reverted by this shape). This is the
+    * real in SURVEY §26.1, reverted by this shape). This is the
     * corpus-side hot path: every vector of a 100 TB corpus pays it
     * once per build/route. The struct sort stays only on the QUERY
     * side ([[probeCells]]), where np > 1 needs a real partial order

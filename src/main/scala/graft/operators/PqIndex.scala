@@ -121,7 +121,7 @@ object PqIndex {
       // argmin over a PRIMITIVE double array — first index of the min
       // = lower j on ties, same order as the (d, j) struct sort head;
       // measured 3x the struct sort and 14x the struct array_min
-      // (ProbeArgmin — struct ordering knocks the projection off
+      // (SURVEY §24.4 — struct ordering knocks the projection off
       // codegen); encode is the corpus-side hot path
       (array_position(ds, array_min(ds)) - 1).cast("int")
     }: _*)

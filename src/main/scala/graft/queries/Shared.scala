@@ -101,7 +101,7 @@ object Shared {
     * different function in each engine (Spark rounds the shortest
     * decimal re-rendering HALF_UP; DuckDB multiplies by 10^k and
     * rounds the binary product half-away — both kernels validated
-    * against their engines by ProbeRoundTie, which fires on ~5% of
+    * against their engines in SURVEY §32.3; they differ on ~5% of
     * tie-neighborhood renderings), while floor(x·10^k)/10^k is the
     * identical IEEE op sequence on identical bits in both. Same
     * discipline as [[avg4]]/q_acf, generalized to any scale.
@@ -122,14 +122,14 @@ object Shared {
     * (Spark rounds the shortest-decimal re-rendering HALF_UP via
     * BigDecimal.valueOf; DuckDB multiplies by 10^k and rounds the
     * binary product half-away-from-zero), and they disagree on ~5% of
-    * tie-neighborhood renderings (§30.4; ProbeRoundTie). The mirror
+    * tie-neighborhood renderings (SURVEY §30.4, §32.3). The mirror
     * routes DuckDB through the SAME kernel Spark uses: double →
     * VARCHAR is the shortest-roundtrip rendering (digit sequence
     * unique per double, identical to what BigDecimal.valueOf sees),
     * parsed exactly into a wide decimal (scale 18 ≥ every fractional
     * digit a ≥1e-1-magnitude rendering can carry), rounded HALF_UP as
     * decimal — bit-equal to Spark on the full synthesized boundary
-    * population, both signs (probe_round_tie.py: 0/140454). Use this
+    * population, both signs (SURVEY §32.3: 0/140454). Use this
     * for every oracle `round(<double>, k)`; plain round stays correct
     * for DECIMAL operands (exact in both engines).
     */

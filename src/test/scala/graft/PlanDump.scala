@@ -1,21 +1,15 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
-/** Writes the per-round physical-plan dump (PLANS_r{N}.md) over every
-  * gated query at bench scale — the episodic half of the plan review
-  * (PlanAuditSpec is the continuous half). Run:
-  * `sbt "Test/runMain graft.PlanDump PLANS_r9.md"`.
+/** Writes the executed physical plan of every gated query at bench
+  * scale to one file (default /tmp/plandump.md) — the episodic half of
+  * the plan review (PlanAuditSpec is the continuous half). Run:
+  * `sbt "Test/runMain graft.PlanDump <out.md> <sf-dir>"`.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    val out = args.headOption.getOrElse("PLANS_local.md")
+    val out = args.headOption.getOrElse("/tmp/plandump.md")
     val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local("32", "ERROR")
     val sb = new StringBuilder
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       val bar = "=" * 72

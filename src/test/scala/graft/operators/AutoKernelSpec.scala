@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSuite
 
-/** `graft.rankKernel=auto` must turn the MEASURED ProbeSkew crossover
+/** `graft.rankKernel=auto` must turn the MEASURED crossover (SURVEY §15)
   * into an automatic decision: the skew audit (hottest group's row
   * count vs `graft.rankKernel.autoThreshold`) picks the bucket kernel
   * only for hot-group corpora — and whichever kernel it picks, the

@@ -412,7 +412,7 @@ class DedupSpec extends SparkSuite {
   }
 
   test("sizedGramSide flips broadcast -> sort-merge exactly at the conf cap") {
-    // the ProbeC8EvalGrowth guard: the eval gram side must be an
+    // the SURVEY §28.6 broadcast guard: the eval gram side must be an
     // EXPLICIT hint both ways — estimates cannot be trusted across an
     // explode (see Dedup.GramBroadcastMaxRowsKey scaladoc)
     val passage = (1 to 10).map(i => s"G$i").mkString(" ")

@@ -4,8 +4,8 @@ import graft.{SparkEntry, SparkSuite}
 import graft.operators.Materializer
 
 /** Continuous plan audit over the ENTIRE gated surface — the invariant
-  * half of the per-round PLANS_r{N}.md review, run on every `sbt test`
-  * instead of episodically:
+  * half of the plan review (PlanDump writes the episodic half), run
+  * on every `sbt test` instead of episodically:
   *
   *   1. no query may plan a cartesian product (wrong at every scale
   *      and every stats estimate);
