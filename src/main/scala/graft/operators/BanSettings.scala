@@ -60,14 +60,15 @@ object BanSettings {
   def lifecyclePlan(generated: DataFrame, current: DataFrame,
       removeExisting: Boolean): DataFrame = {
     val extras = generated.columns.filter(_ != "name").toSeq
-    def pad(df: DataFrame): DataFrame =
-      extras.foldLeft(df)((acc, c) =>
-        acc.withColumn(c, lit(null).cast(generated.schema(c).dataType)))
     val cur = current.select(col("name"))
     val removals =
       if (removeExisting) cur.filter(col("name") =!= "global")
       else cur.join(generated.select(col("name")), Seq("name"), "left_semi")
-    pad(removals.select(lit(0).as("step"), lit("remove").as("action"), col("name")))
+    // one projection pads the remove rows with typed nulls (this runs
+    // once per finalized window in StreamingHostgroups' foreachBatch)
+    removals.select(
+        Seq(lit(0).as("step"), lit("remove").as("action"), col("name")) ++
+          extras.map(c => lit(null).cast(generated.schema(c).dataType).as(c)): _*)
       .unionByName(generated.select(
         Seq(lit(1).as("step"), lit("create").as("action"), col("name")) ++
           extras.map(col): _*))

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 import graft.functions.{IpFunctions, Ip6Expressions}
 import graft.functions.IpFunctions.Cidr
@@ -75,13 +76,58 @@ object Baseline {
     */
   private[graft] def toInt64(c: Column): Column = floor(c).cast("long")
 
-  /** Threshold columns over aggregated metrics; <= 0 deactivates the
-    * threshold (main.go:372-377) -> null value + false flag. Shared by
-    * the batch hostgroup pipeline and the streaming variant.
+  /** A projection over `df` built one column at a time with
+    * `Dataset.withColumn`'s semantics, then applied as ONE `select`.
+    * Each `withColumn` call builds a new Dataset and re-analyses the
+    * whole plan beneath it: the 26-rule hostgroup tail was 53 such
+    * calls, about 0.3 s of driver time per query on a 4-core box
+    * (perfbench `hostgroups`, `operators.build_s`). Semantics kept: a
+    * name already present (per `spark.sql.caseSensitive`) is replaced
+    * in place, a later column of the same name replaces an earlier one,
+    * and [[apply]] returns a name's current column, so an expression
+    * over a replaced name reads the replacement.
     */
-  private[graft] def applyThresholds(df: DataFrame, rules: Seq[ThresholdRule]): DataFrame =
-    rules.foldLeft(df) { (acc, rule) =>
-      val raw = ThresholdExpr.withValue(rule.expression, col(rule.metric))
+  private[graft] final class Projection private (
+      df: DataFrame,
+      same: (String, String) => Boolean,
+      cols: Vector[Projection.Out]) {
+
+    def apply(name: String): Column =
+      cols.find(o => same(o.name, name)).fold(col(name))(_.col)
+
+    def withColumn(name: String, c: Column): Projection = {
+      val out = Projection.Out(name, c, derived = true)
+      new Projection(df, same,
+        if (cols.exists(o => same(o.name, name)))
+          cols.map(o => if (same(o.name, name)) out else o)
+        else cols :+ out)
+    }
+
+    def toDF: DataFrame =
+      df.select(cols.map(o => if (o.derived) o.col.as(o.name) else o.col): _*)
+  }
+
+  private[graft] object Projection {
+    private final case class Out(name: String, col: Column, derived: Boolean)
+
+    def apply(df: DataFrame): Projection = {
+      val same: (String, String) => Boolean =
+        if (df.sparkSession.conf.get("spark.sql.caseSensitive").toBoolean) _ == _
+        else _.equalsIgnoreCase(_)
+      new Projection(df, same, df.queryExecution.analyzed.output
+        .map(a => Out(a.name, Bridge.column(a), derived = false)).toVector)
+    }
+  }
+
+  /** Threshold columns over aggregated metrics, `outName` then
+    * `outName_active` per rule in rule order; <= 0 deactivates the
+    * threshold (main.go:372-377) -> null value + false flag. Shared by
+    * the batch hostgroup pipelines and the streaming variant, which each
+    * project the result once ([[Projection]]).
+    */
+  private[graft] def thresholdColumns(p: Projection, rules: Seq[ThresholdRule]): Projection =
+    rules.foldLeft(p) { (acc, rule) =>
+      val raw = ThresholdExpr.withValue(rule.expression, acc(rule.metric))
       val scaled = floor(raw / lit(rule.divisor)).cast("long")
       acc
         .withColumn(rule.outName, when(scaled > 0, scaled))
@@ -114,6 +160,10 @@ object Baseline {
     * network assignment → wide aggregation → threshold expressions →
     * mangled names. Networks with zero in-window rows simply produce no
     * group (the reference's `hosts_with_traffic == 0` skip, main.go:331).
+    * Everything after the aggregate is one projection: the aggregate's
+    * columns, each rule's `outName` and `outName_active` in rule order,
+    * then `hostgroup` — a `withColumn` per column would re-analyse the
+    * whole plan 53 times at 26 rules ([[Projection]]).
     */
   def hostgroups(
       df: DataFrame,
@@ -143,12 +193,13 @@ object Baseline {
       .groupBy(col("network"))
       .agg(count(lit(1)).as("n_rows"), aggs: _*)
 
-    val withThresholds = applyThresholds(base, cfg.rules)
+    val tail = thresholdColumns(Projection(base), cfg.rules)
 
     // Hostgroup name mangling: '.'/'/' -> '_' (main.go:342-344).
-    withThresholds
+    tail
       .withColumn("hostgroup",
-        regexp_replace(regexp_replace(col("network"), "\\.", "_"), "/", "_"))
+        regexp_replace(regexp_replace(tail("network"), "\\.", "_"), "/", "_"))
+      .toDF
   }
 
   /** R19 (beyond the reference): exponentially-decayed event-rate
@@ -706,9 +757,11 @@ object Baseline {
         col("__ip") >= col("__start") && col("__ip") <= col("__end"))
       .groupBy(col("network"))
       .agg(count(lit(1)).as("n_rows"), aggs: _*)
-    applyThresholds(base, cfg.rules)
+    val tail = thresholdColumns(Projection(base), cfg.rules)
+    tail
       .withColumn("hostgroup",
         regexp_replace(regexp_replace(regexp_replace(
-          col("network"), ":", "_"), "\\.", "_"), "/", "_"))
+          tail("network"), ":", "_"), "\\.", "_"), "/", "_"))
+      .toDF
   }
 }

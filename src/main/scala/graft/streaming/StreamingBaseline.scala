@@ -43,6 +43,6 @@ object StreamingBaseline {
         window(col(cfg.tsCol), windowDuration, slideDuration),
         col("network"))
       .agg(count(lit(1)).as("n_rows"), aggs: _*)
-    Baseline.applyThresholds(base, cfg.rules)
+    Baseline.thresholdColumns(Baseline.Projection(base), cfg.rules).toDF
   }
 }

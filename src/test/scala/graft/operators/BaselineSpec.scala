@@ -3,11 +3,14 @@ package graft.operators
 import java.sql.Timestamp
 
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan, Project}
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.SparkSuite
 import graft.functions.IpFunctions.Cidr
 import graft.operators.Baseline.{BaselineConfig, ThresholdRule}
+import graft.streaming.{Ev, StreamingBaseline}
 
 class BaselineSpec extends SparkSuite {
   import spark.implicits._
@@ -47,6 +50,57 @@ class BaselineSpec extends SparkSuite {
     assert(r.isNullAt(r.fieldIndex("threshold_neg"))) // zero/neg deactivates
     assert(!r.getAs[Boolean]("threshold_neg_active"))
     assert(r.getAs[String]("hostgroup") == "10_0_0_0_24")
+  }
+
+  test("threshold tail keeps withColumn semantics for colliding names") {
+    val collide = cfg.copy(rules = Seq(
+      // outName is an aggregate column: replaced in place (150 -> 300)
+      ThresholdRule("packets", "value * 2", "packets"),
+      // a later rule reads the replaced column: 300 + 1, not 150 + 1
+      ThresholdRule("packets", "value + 1", "threshold_pps"),
+      // a shared outName: the last rule wins, in the first one's place
+      ThresholdRule("packets", "value * 3", "threshold_pps"),
+      // names match case-insensitively: n_rows is replaced AND renamed
+      ThresholdRule("packets", "value - 1", "N_ROWS")))
+    val out = Baseline.hostgroups(df, collide, Seq(Cidr.parse("10.0.0.0/24")))
+    assert(out.columns.toSeq == Seq("network", "N_ROWS", "packets",
+      "packets_active", "threshold_pps", "threshold_pps_active",
+      "N_ROWS_active", "hostgroup"))
+    val r = out.collect().head
+    assert(r.getAs[Long]("N_ROWS") == 299L)
+    assert(r.getAs[Long]("packets") == 300L)
+    assert(r.getAs[Long]("threshold_pps") == 900L)
+    assert(r.getAs[Boolean]("threshold_pps_active"))
+    assert(r.getAs[String]("hostgroup") == "10_0_0_0_24")
+  }
+
+  /** Projects stacked between the plan root and the nearest Aggregate. */
+  private def projectsAboveAggregate(plan: LogicalPlan): Int = plan match {
+    case _: Aggregate => 0
+    case p: Project => 1 + projectsAboveAggregate(p.child)
+    case other =>
+      assert(other.children.size == 1, s"no Aggregate under ${other.nodeName}")
+      projectsAboveAggregate(other.children.head)
+  }
+
+  test("26-rule threshold tail is one projection over the aggregate") {
+    val metrics = (0 until 26).map(i => f"m$i%02d")
+    val wide = cfg.copy(
+      metrics = metrics.map(_ -> col("value")).toMap,
+      rules = metrics.reverse.map(m => ThresholdRule(m, "value * 2", s"threshold_$m")))
+    val thresholds = wide.rules.flatMap(r => Seq(r.outName, s"${r.outName}_active"))
+    val batch = Baseline.hostgroups(df, wide, Seq(Cidr.parse("10.0.0.0/24")))
+    assert(projectsAboveAggregate(batch.queryExecution.analyzed) <= 1)
+    assert(batch.columns.toSeq ==
+      Seq("network", "n_rows") ++ metrics ++ thresholds :+ "hostgroup")
+
+    implicit val ctx = spark.sqlContext
+    val stream = StreamingBaseline.perNetwork(MemoryStream[Ev].toDF(), wide,
+      prefix = 24, windowDuration = "10 minutes", slideDuration = "10 minutes",
+      watermarkDelay = "5 minutes")
+    assert(projectsAboveAggregate(stream.queryExecution.analyzed) <= 1)
+    assert(stream.columns.toSeq ==
+      Seq("window", "network", "n_rows") ++ metrics ++ thresholds)
   }
 
   test("empty networks produce no rows (main.go:331-334)") {

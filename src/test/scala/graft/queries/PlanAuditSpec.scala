@@ -29,7 +29,8 @@ import graft.operators.Materializer
 class PlanAuditSpec extends SparkSuite {
 
   /** Queries whose plans legitimately sort-merge: both sides are
-    * data-sized at scale (per the PLANS_r8 review — corpus x corpus
+    * data-sized at scale (per the r8 plan review,
+    * `git show c64ac5c:PLANS_r8.md` — corpus x corpus
     * joins in dedup/contamination/snapshot-diff, the bucket kernel's
     * rank join, and Q2's part x partsupp min-cost correlation).
     */
@@ -40,7 +41,8 @@ class PlanAuditSpec extends SparkSuite {
     // chains (D10 = the ngram posting self-join + the LSH band join;
     // D4b = two simhash band self-joins) and add a truth x found pair
     // join whose sides are both data-sized pair sets — same class,
-    // same rationale, documented in SURVEY §24 and PLANS_r13
+    // same rationale, documented in SURVEY §24 and the r13 plan dump
+    // (`git show c64ac5c:PLANS_r13.md`)
     "q_dedup_recall", "q_simhash_recall",
     // ER's left x right posting join on the shingle hash — the same
     // data-sized x data-sized class as q_dedup_ngram's self-join;
@@ -110,7 +112,8 @@ class PlanAuditSpec extends SparkSuite {
     // SMJ only under THIS audit's lazy materializer: at runtime these
     // materialize their shared truth/index/frontier subplans, the
     // consumers read small materialized tables, and the SMJs are gone
-    // (verified in the PLANS_r8 dump after the r8 sharing fix). The
+    // (verified in the r8 plan dump after the r8 sharing fix,
+    // `git show c64ac5c:PLANS_r8.md`). The
     // lazy audit keeps the full un-truncated lineage, so the planner
     // sees the pre-materialization join shape.
     Set("q_ann_recall", "q_ann_ivf_sweep", "q_dedup_clusters",
@@ -119,7 +122,8 @@ class PlanAuditSpec extends SparkSuite {
       // blame) and materialize once at runtime (Dedup.scrubAttribution
       // wraps both); under the lazy audit the planner sees the full
       // unshared lineage on both sides of the suite joins. Runtime
-      // plan: eval-sized tables broadcast (PLANS_r15 dump).
+      // plan: eval-sized tables broadcast (r15 plan dump,
+      // `git show c64ac5c:PLANS_r15.md`).
       "q_decontaminate_by",
       // pagerank's per-iteration edges x ranks join: both sides are
       // node/edge-scale (data x data at any graph size — a web graph's
@@ -128,7 +132,8 @@ class PlanAuditSpec extends SparkSuite {
       // materializer each round joins a small materialized frontier
       // and AQE picks the strategy per round.
       "q_pagerank") ++
-    // SMJ at sf0.1+ only (PLANS_r9, AQE-final plans): both join
+    // SMJ at sf0.1+ only (AQE-final plans in the r9 plan dump,
+    // `git show c64ac5c:PLANS_r9.md`): both join
     // per-network aggregates that the preceding rank/spine window
     // already hash-partitioned on network — the SMJ reuses that
     // partitioning with a sort and no exchange, where a broadcast
