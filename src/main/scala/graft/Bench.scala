@@ -81,7 +81,7 @@ object Bench {
       val txt =
         try Some(new String(java.nio.file.Files.readAllBytes(
           java.nio.file.Paths.get("BENCH_LOCAL.json"))))
-        catch { case _: Throwable => None }
+        catch { case NonFatal(_) => None }
       val parsed = txt.map(parsePrior(_, sfDir)).getOrElse(Map.empty)
       // a present-but-unparseable baseline silently disables the retry
       // guard — make that state visible in the run log so format drift
@@ -98,7 +98,7 @@ object Bench {
       try {
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         Some((System.nanoTime() - t0) / 1e9)
-      } catch { case e: Throwable =>
+      } catch { case NonFatal(e) =>
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
         None
       }
@@ -181,7 +181,9 @@ object Bench {
     val artifacts = "/tmp/graft_bench.json" +: (if (only.isEmpty) Seq("BENCH_LOCAL.json") else Nil)
     for (p <- artifacts) {
       try java.nio.file.Files.writeString(java.nio.file.Paths.get(p), json + "\n")
-      catch { case _: Throwable => () }
+      catch { case NonFatal(e) =>
+        System.err.println(s"[bench] artifact $p not written: $e")
+      }
     }
     println(json)
     // Tail-safe closer (r18, contract restoration): the driver's

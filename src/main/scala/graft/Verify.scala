@@ -1,5 +1,6 @@
 package graft
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -21,13 +22,18 @@ object Verify {
       spark.conf.get("spark.sql.parquet.enableVectorizedReader", "true") +
       " aqe=" + spark.conf.get("spark.sql.adaptive.enabled", "true"))
     new java.io.File(outDir).mkdirs()
-    Session.queries(only).foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+    // a failed query is reported and the dump carries on; the closing
+    // line names every failure so none can scroll past unnoticed
+    val queries = Session.queries(only)
+    val failed = queries.filterNot { case (name, fn) =>
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+        true
+      } catch { case NonFatal(e) =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        false
       }
-    }
+    }.map(_._1)
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -43,6 +49,9 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    if (failed.nonEmpty)
+      System.err.println(s"[verify] failed ${failed.size}/${queries.size}: " +
+        failed.mkString(", "))
     spark.stop()
   }
 }

@@ -183,12 +183,13 @@ object Ip6Expressions {
   final case class Cidr6(networkString: String, start: Array[Byte], end: Array[Byte])
 
   object Cidr6 {
+    /** Parse "address/prefix", normalizing to the network address; a
+      * malformed entry raises an IllegalArgumentException naming it.
+      */
     def parse(s: String): Cidr6 = {
-      val Array(ip, p) = s.split("/")
-      val prefix = p.toInt
-      require(prefix >= 0 && prefix <= 128, s"bad prefix in $s")
+      val (ip, prefix) = IpFunctions.splitCidr(s, 128)
       val raw = Ip6Kernels.parse(ip)
-      require(raw != null, s"bad IPv6 in $s")
+      if (raw == null) throw IpFunctions.badNetwork(s, "bad IPv6 address")
       val start = raw.clone(); val end = raw.clone()
       var bit = prefix
       var i = 0

@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** IPv4 + CIDR functions — the ClickHouse surface the reference leans on
   * (`IPv4StringToNum` / `IPv4NumToString`, /root/reference/main.go:238)
@@ -28,30 +29,41 @@ object IpFunctions {
     def count: Long = 1L << (32 - prefix)
     /** inclusive last address */
     def end: Long = start + count - 1
-    /** hostgroup name mangling from the reference (main.go:342-344). */
-    def mangledName: String =
-      networkString.replace(".", "_").replace("/", "_")
   }
 
   object Cidr {
     /** Parse "a.b.c.d/p", normalizing to the network address (the
       * reference does the same via net.ParseCIDR — main.go:236-238 notes
-      * customers write 192.168.1.33/24 meaning 192.168.1.0/24).
+      * customers write 192.168.1.33/24 meaning 192.168.1.0/24). The
+      * address goes through the row kernel's parser; a malformed entry
+      * raises an IllegalArgumentException naming it.
       */
     def parse(s: String): Cidr = {
-      val Array(ip, p) = s.split("/")
-      val prefix = p.toInt
-      require(prefix >= 0 && prefix <= 32, s"bad prefix in $s")
-      val quads = ip.split("\\.").map(_.toLong)
-      require(quads.length == 4 && quads.forall(q => q >= 0 && q <= 255),
-        s"bad IPv4 in $s")
-      val raw = (quads(0) << 24) | (quads(1) << 16) | (quads(2) << 8) | quads(3)
-      val mask = if (prefix == 0) 0L else (0xffffffffL << (32 - prefix)) & 0xffffffffL
-      val start = raw & mask
-      val normIp = s"${(start >> 24) & 255}.${(start >> 16) & 255}.${(start >> 8) & 255}.${start & 255}"
-      Cidr(s"$normIp/$prefix", start, prefix)
+      val (ip, prefix) = splitCidr(s, 32)
+      val raw = GraftKernels.ip4ToNum(UTF8String.fromString(ip))
+      if (raw < 0) throw badNetwork(s, "bad IPv4 address")
+      val start = raw & prefixMask(prefix)
+      Cidr(s"${GraftKernels.numToIp4(start)}/$prefix", start, prefix)
     }
   }
+
+  private[functions] def badNetwork(s: String, why: String) =
+    new IllegalArgumentException(s"malformed network '$s': $why")
+
+  /** Split a network-list entry "address/prefix" into its address text
+    * and a decimal prefix in [0, maxPrefix]; anything else (no '/', a
+    * second '/', an empty or non-decimal prefix, a space) raises.
+    */
+  private[functions] def splitCidr(s: String, maxPrefix: Int): (String, Int) =
+    s.split("/", -1) match {
+      case Array(ip, p) if p.nonEmpty && p.length <= 3 &&
+          p.forall(c => c >= '0' && c <= '9') && p.toInt <= maxPrefix =>
+        (ip, p.toInt)
+      case _ => throw badNetwork(s, s"want address/prefix with prefix 0-$maxPrefix")
+    }
+
+  private def prefixMask(prefix: Int): Long =
+    if (prefix == 0) 0L else (0xffffffffL << (32 - prefix)) & 0xffffffffL
 
   /** Membership of a numeric IP column in a CIDR — a closed numeric range,
     * so it's sargable (parquet min/max pruning + pushdown). The reference
@@ -68,8 +80,13 @@ object IpFunctions {
   /** The /prefix network a numeric IP falls into, as a long (network
     * address). Used to assign rows to networks without any join.
     */
-  def networkOf(ipNum: Column, prefix: Int): Column = {
-    val mask = if (prefix == 0) 0L else (0xffffffffL << (32 - prefix)) & 0xffffffffL
-    ipNum.bitwiseAND(lit(mask))
-  }
+  def networkOf(ipNum: Column, prefix: Int): Column =
+    ipNum.bitwiseAND(lit(prefixMask(prefix)))
+
+  /** The /prefix network of a dotted-quad host, as its bare network
+    * address (`10.1.2.3`, 24 -> `10.1.2.0`): every fixed-prefix
+    * baseline, batch and streaming, assigns rows to networks with this.
+    */
+  def prefixNetwork(host: Column, prefix: Int): Column =
+    numToIp4(networkOf(ip4ToNum(host), prefix))
 }

@@ -1,9 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, RelationalGroupedDataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
+
+import scala.reflect.runtime.universe.TypeTag
 
 import graft.functions.{IpFunctions, Ip6Expressions}
 import graft.functions.IpFunctions.Cidr
@@ -48,16 +50,25 @@ object Baseline {
       metrics: Map[String, Column] = Map.empty,
       rules: Seq[ThresholdRule] = Nil)
 
-  /** Trailing time window relative to the newest row — the reference's
-    * `metricDateTime >= now() - P` (main.go:275) made reproducible on
-    * fixed data by anchoring at max(ts) instead of wall-clock now().
+  /** The window anchor: `df` with the newest timestamp attached to
+    * every row as `__anchor` — the reference's `now()` (main.go:275)
+    * made reproducible on fixed data by anchoring at max(ts) instead of
+    * the wall clock. Every trailing window, history/current split and
+    * hour index measures back from it.
     */
-  def trailingWindow(df: DataFrame, tsCol: String, seconds: Long): DataFrame = {
-    val maxTs = df.agg(max(col(tsCol)).as("__window_end"))
-    df.crossJoin(broadcast(maxTs))
-      .filter(col(tsCol) >= col("__window_end") - expr(s"INTERVAL $seconds SECONDS"))
-      .drop("__window_end")
-  }
+  private[graft] def anchored(df: DataFrame, tsCol: String): DataFrame =
+    df.crossJoin(broadcast(df.agg(max(col(tsCol)).as("__anchor"))))
+
+  /** `tsCol` no more than `seconds` before the [[anchored]] `__anchor`. */
+  private[graft] def within(tsCol: String, seconds: Long): Column =
+    col(tsCol) >= col("__anchor") - expr(s"INTERVAL $seconds SECONDS")
+
+  /** Trailing time window relative to the newest row — the reference's
+    * `metricDateTime >= now() - P` (main.go:275) on the [[anchored]]
+    * max(ts).
+    */
+  def trailingWindow(df: DataFrame, tsCol: String, seconds: Long): DataFrame =
+    anchored(df, tsCol).filter(within(tsCol, seconds)).drop("__anchor")
 
   private[graft] def aggFor(fn: String)(c: Column): Column = fn match {
     case "avg" =>
@@ -75,6 +86,26 @@ object Baseline {
     * zero to a long. Metrics are non-negative so floor == trunc.
     */
   private[graft] def toInt64(c: Column): Column = floor(c).cast("long")
+
+  /** The wide aggregate (main.go:240-272) over `grouped`: `n_rows`, then
+    * every metric in name order as `toInt64(agg(metric))`. Shared by the
+    * hostgroup pipelines, the per-prefix baselines and the streaming
+    * variant.
+    */
+  private[graft] def metricAggregate(grouped: RelationalGroupedDataset,
+      cfg: BaselineConfig): DataFrame =
+    grouped.agg(count(lit(1)).as("n_rows"),
+      cfg.metrics.toSeq.sortBy(_._1).map { case (name, c) =>
+        toInt64(aggFor(cfg.aggregationFunction)(c)).as(name)
+      }: _*)
+
+  /** Hostgroup name of a network (main.go:342-344): '.' and '/' become
+    * '_', and so does IPv6's ':' — `10.0.0.0/24` -> `10_0_0_0_24`,
+    * `2001:db8::/32` -> `2001_db8___32`. Shared by the batch pipelines
+    * and [[graft.streaming.StreamingHostgroups]].
+    */
+  private[graft] def hostgroupName(network: Column): Column =
+    translate(network, ".:/", "___")
 
   /** A projection over `df` built one column at a time with
     * `Dataset.withColumn`'s semantics, then applied as ONE `select`.
@@ -138,23 +169,15 @@ object Baseline {
     * in the data), no explicit network list needed: assignment is a mask
     * on the numeric IP — zero joins, fully codegen'd.
     */
-  def aggregateByPrefix(
-      df: DataFrame,
-      cfg: BaselineConfig,
-      prefix: Int): DataFrame = {
-    val windowed = trailingWindow(df, cfg.tsCol, cfg.windowSeconds)
-    val aggs = cfg.metrics.toSeq.sortBy(_._1).map { case (name, c) =>
-      toInt64(aggFor(cfg.aggregationFunction)(c)).as(name)
-    }
-    // materialize ip_num once: the string-split parse must not be
-    // re-evaluated by every downstream reference
-    windowed
-      .withColumn("__ip_num", IpFunctions.ip4ToNum(col(cfg.hostCol)))
-      .withColumn("network",
-        IpFunctions.numToIp4(IpFunctions.networkOf(col("__ip_num"), prefix)))
-      .groupBy(col("network"))
-      .agg(count(lit(1)).as("n_rows"), aggs: _*)
-  }
+  def aggregateByPrefix(df: DataFrame, cfg: BaselineConfig, prefix: Int): DataFrame =
+    byPrefix(df, cfg, prefix)
+
+  /** [[aggregateByPrefix]] grouped by `keys` after `network`. */
+  private def byPrefix(df: DataFrame, cfg: BaselineConfig, prefix: Int,
+      keys: Column*): DataFrame =
+    metricAggregate(trailingWindow(df, cfg.tsCol, cfg.windowSeconds)
+      .withColumn("network", IpFunctions.prefixNetwork(col(cfg.hostCol), prefix))
+      .groupBy(col("network") +: keys: _*), cfg)
 
   /** End-to-end hostgroup generation (main.go:212-444): window filter →
     * network assignment → wide aggregation → threshold expressions →
@@ -168,38 +191,34 @@ object Baseline {
   def hostgroups(
       df: DataFrame,
       cfg: BaselineConfig,
-      networks: Seq[Cidr]): DataFrame = {
-    val windowed = trailingWindow(df, cfg.tsCol, cfg.windowSeconds)
-    val aggs = cfg.metrics.toSeq.sortBy(_._1).map { case (name, c) =>
-      toInt64(aggFor(cfg.aggregationFunction)(c)).as(name)
-    }
-    // Network assignment = broadcast range join against the (tiny,
-    // config-sized) networks table. Two reasons over a when-chain:
-    // (1) the join boundary materializes the parsed ip as ONE long per
-    // row — inlining the parse into a 9-CIDR filter/key chain
-    // re-evaluated the dotted-quad split ~27x per row (a measured 9x
-    // slowdown at sf0.1); (2) it is reference-faithful: main.go queries
-    // every network independently, so an IP inside two CIDRs counts in
-    // both (when-chain first-match would not).
-    val spark = df.sparkSession
-    import spark.implicits._
-    val netDf = networks.zipWithIndex
-      .map { case (c, i) => (i.toLong, c.start, c.end, c.networkString) }
-      .toDF("__net_idx", "__start", "__end", "network")
-    val base = windowed
-      .withColumn("__ip_num", IpFunctions.ip4ToNum(col(cfg.hostCol)))
+      networks: Seq[Cidr]): DataFrame =
+    hostgroupsOver(df, cfg, IpFunctions.ip4ToNum(col(cfg.hostCol)),
+      networks.map(c => (c.start, c.end, c.networkString)))
+
+  /** The body of [[hostgroups]] and [[hostgroups6]]: `addr` is the
+    * parsed host address and `networks` holds each network's inclusive
+    * (start, end) bounds in the same encoding, and its name.
+    *
+    * Network assignment = broadcast range join against the (tiny,
+    * config-sized) networks table. Two reasons over a when-chain:
+    * (1) the join boundary materializes the parsed address as ONE value
+    * per row — inlining the parse into a 9-CIDR filter/key chain
+    * re-evaluated the dotted-quad split ~27x per row (a measured 9x
+    * slowdown at sf0.1); (2) it is reference-faithful: main.go queries
+    * every network independently, so an IP inside two CIDRs counts in
+    * both (when-chain first-match would not).
+    */
+  private def hostgroupsOver[A: TypeTag](df: DataFrame, cfg: BaselineConfig,
+      addr: Column, networks: Seq[(A, A, String)]): DataFrame = {
+    val netDf = df.sparkSession.createDataFrame(networks)
+      .toDF("__start", "__end", "network")
+    val base = metricAggregate(trailingWindow(df, cfg.tsCol, cfg.windowSeconds)
+      .withColumn("__addr", addr)
       .join(broadcast(netDf),
-        col("__ip_num") >= col("__start") && col("__ip_num") <= col("__end"))
-      .groupBy(col("network"))
-      .agg(count(lit(1)).as("n_rows"), aggs: _*)
-
+        col("__addr") >= col("__start") && col("__addr") <= col("__end"))
+      .groupBy(col("network")), cfg)
     val tail = thresholdColumns(Projection(base), cfg.rules)
-
-    // Hostgroup name mangling: '.'/'/' -> '_' (main.go:342-344).
-    tail
-      .withColumn("hostgroup",
-        regexp_replace(regexp_replace(tail("network"), "\\.", "_"), "/", "_"))
-      .toDF
+    tail.withColumn("hostgroup", hostgroupName(tail("network"))).toDF
   }
 
   /** R19 (beyond the reference): exponentially-decayed event-rate
@@ -223,22 +242,7 @@ object Baseline {
     */
   def ewmaRate(df: DataFrame, hostCol: String, tsCol: String,
       windowHours: Int, prefix: Int): DataFrame = {
-    require(windowHours > 0, s"windowHours=$windowHours")
-    val hourUs = 3600L * 1000000L
-    val maxTs = df.agg(max(unix_micros(col(tsCol))).as("__end"))
-    val counted = df.crossJoin(broadcast(maxTs))
-      .withColumn("__us", unix_micros(col(tsCol)))
-      .withColumn("__ago", expr(s"(__end - __us) div $hourUs"))
-      .filter(col("__ago") < windowHours)
-      .withColumn("__ip_num", IpFunctions.ip4ToNum(col(hostCol)))
-      .withColumn("network",
-        IpFunctions.numToIp4(IpFunctions.networkOf(col("__ip_num"), prefix)))
-      .withColumn("h", (lit(windowHours - 1) - col("__ago")).cast("int"))
-      .groupBy(col("network"), col("h"))
-      .agg(count(lit(1)).as("n"))
-    val hours = df.sparkSession.range(1)
-      .select(explode(sequence(lit(0), lit(windowHours - 1))).as("__h"))
-      .select(col("__h").cast("int").as("h"))
+    val (counted, hours) = hourlyCounts(df, hostCol, tsCol, windowHours, prefix)
     val spine = counted.select(col("network")).distinct()
       .crossJoin(broadcast(hours))
     spine.join(counted, Seq("network", "h"), "left")
@@ -248,6 +252,30 @@ object Baseline {
         expr("aggregate(sort_array(collect_list(struct(h, n))), 0L," +
           " (s, x) -> s div 2 + x.n)").as("ewma_rate"),
         sum(col("n")).as("n_events"))
+  }
+
+  /** The prelude [[ewmaRate]] and [[holtForecast]] share: event counts
+    * `n` per (network, h) over the [[anchored]] `windowHours`, where
+    * `h` counts hours from the window's oldest (0) to the anchor's
+    * (`windowHours - 1`), and the dense hour spine `h` = 0 until
+    * `windowHours` the folds zero-fill against.
+    */
+  private def hourlyCounts(df: DataFrame, hostCol: String, tsCol: String,
+      windowHours: Int, prefix: Int): (DataFrame, DataFrame) = {
+    require(windowHours > 0, s"windowHours=$windowHours")
+    val hourUs = 3600L * 1000000L
+    val counted = anchored(df, tsCol)
+      .withColumn("__us", unix_micros(col(tsCol)))
+      .withColumn("__ago", expr(s"(unix_micros(__anchor) - __us) div $hourUs"))
+      .filter(col("__ago") < windowHours)
+      .withColumn("network", IpFunctions.prefixNetwork(col(hostCol), prefix))
+      .withColumn("h", (lit(windowHours - 1) - col("__ago")).cast("int"))
+      .groupBy(col("network"), col("h"))
+      .agg(count(lit(1)).as("n"))
+    val hours = df.sparkSession.range(1)
+      .select(explode(sequence(lit(0), lit(windowHours - 1))).as("__h"))
+      .select(col("__h").cast("int").as("h"))
+    (counted, hours)
   }
 
   /** Absolute-hour variant of [[ewmaRate]] — the streaming twin's
@@ -263,9 +291,7 @@ object Baseline {
   def ewmaRateAbsolute(df: DataFrame, hostCol: String, tsCol: String,
       prefix: Int): DataFrame = {
     val hourUs = 3600L * 1000000L
-    df.withColumn("__ip_num", IpFunctions.ip4ToNum(col(hostCol)))
-      .withColumn("network",
-        IpFunctions.numToIp4(IpFunctions.networkOf(col("__ip_num"), prefix)))
+    df.withColumn("network", IpFunctions.prefixNetwork(col(hostCol), prefix))
       .withColumn("__us", unix_micros(col(tsCol)))
       .withColumn("h", expr(s"__us div $hourUs"))
       .groupBy(col("network"), col("h"))
@@ -316,23 +342,8 @@ object Baseline {
     */
   def holtForecast(df: DataFrame, hostCol: String, tsCol: String,
       windowHours: Int, prefix: Int, horizonHours: Int = 1): DataFrame = {
-    require(windowHours > 0, s"windowHours=$windowHours")
     require(horizonHours >= 0, s"horizonHours=$horizonHours")
-    val hourUs = 3600L * 1000000L
-    val maxTs = df.agg(max(unix_micros(col(tsCol))).as("__end"))
-    val counted = df.crossJoin(broadcast(maxTs))
-      .withColumn("__us", unix_micros(col(tsCol)))
-      .withColumn("__ago", expr(s"(__end - __us) div $hourUs"))
-      .filter(col("__ago") < windowHours)
-      .withColumn("__ip_num", IpFunctions.ip4ToNum(col(hostCol)))
-      .withColumn("network",
-        IpFunctions.numToIp4(IpFunctions.networkOf(col("__ip_num"), prefix)))
-      .withColumn("h", (lit(windowHours - 1) - col("__ago")).cast("int"))
-      .groupBy(col("network"), col("h"))
-      .agg(count(lit(1)).as("n"))
-    val hours = df.sparkSession.range(1)
-      .select(explode(sequence(lit(0), lit(windowHours - 1))).as("__h"))
-      .select(col("__h").cast("int").as("h"))
+    val (counted, hours) = hourlyCounts(df, hostCol, tsCol, windowHours, prefix)
     // the spine zero-fills GAPS, not the left edge: it starts at each
     // network's first ACTIVE hour (init = that hour's count), so a
     // network that appears mid-window folds the same series the
@@ -377,19 +388,8 @@ object Baseline {
       cfg: BaselineConfig,
       prefix: Int,
       seasonOf: Column => Column,
-      seasonName: String = "season"): DataFrame = {
-    val windowed = trailingWindow(df, cfg.tsCol, cfg.windowSeconds)
-    val aggs = cfg.metrics.toSeq.sortBy(_._1).map { case (name, c) =>
-      toInt64(aggFor(cfg.aggregationFunction)(c)).as(name)
-    }
-    windowed
-      .withColumn("__ip_num", IpFunctions.ip4ToNum(col(cfg.hostCol)))
-      .withColumn("network",
-        IpFunctions.numToIp4(IpFunctions.networkOf(col("__ip_num"), prefix)))
-      .withColumn(seasonName, seasonOf(col(cfg.tsCol)).cast("long"))
-      .groupBy(col("network"), col(seasonName))
-      .agg(count(lit(1)).as("n_rows"), aggs: _*)
-  }
+      seasonName: String = "season"): DataFrame =
+    byPrefix(df, cfg, prefix, seasonOf(col(cfg.tsCol)).cast("long").as(seasonName))
 
   /** R14 (beyond the reference's avg/max): exact percentile baseline
     * per fixed-prefix network — the p95-style threshold detectors
@@ -418,10 +418,8 @@ object Baseline {
       den: Long): DataFrame = {
     require(num > 0 && den >= num, s"invalid percentile $num/$den")
     val assigned = trailingWindow(df, tsCol, windowSeconds)
-      .withColumn("__ip_num", IpFunctions.ip4ToNum(col(hostCol)))
-      .withColumn("network",
-        IpFunctions.numToIp4(IpFunctions.networkOf(col("__ip_num"), prefix)))
-      .select(col("network"), col(valueCol).as("__val"))
+      .select(IpFunctions.prefixNetwork(col(hostCol), prefix).as("network"),
+        col(valueCol).as("__val"))
     rankSelect(assigned, "network", "__val", num, den)
       .select(col("network"), col("n").as("n_events"),
         toInt64(col("sel")).as("p_value"))
@@ -535,20 +533,8 @@ object Baseline {
       prefix: Int,
       kNum: Long,
       kDen: Long): DataFrame = {
-    require(currentSeconds > 0 && currentSeconds < windowSeconds,
-      s"invalid windows: $windowSeconds/$currentSeconds")
-    // ONE max(ts) scan serves both the trailing-window filter and the
-    // history/current split (calling trailingWindow and then computing
-    // max(ts) again would scan the corpus twice for the same scalar)
-    val maxTs = df.agg(max(col(tsCol)).as("__end"))
-    val split = df.crossJoin(broadcast(maxTs))
-      .filter(col(tsCol) >=
-        col("__end") - expr(s"INTERVAL $windowSeconds SECONDS"))
-      .withColumn("__ip_num", IpFunctions.ip4ToNum(col(hostCol)))
-      .withColumn("network",
-        IpFunctions.numToIp4(IpFunctions.networkOf(col("__ip_num"), prefix)))
-      .withColumn("__is_current",
-        col(tsCol) >= col("__end") - expr(s"INTERVAL $currentSeconds SECONDS"))
+    val split = windowSplit(df, hostCol, tsCol, windowSeconds,
+      currentSeconds, prefix)
     // the history projection is the operator's fan-out point: the
     // median selection, the deviation build, and the MAD selection all
     // consume it (3 executions under the window kernel, ~7 under the
@@ -585,6 +571,23 @@ object Baseline {
         curAvg.as("current_avg"),
         (abs(curAvg - col("med")) * kDen > lit(kNum) * col("mad"))
           .as("is_anomaly"))
+  }
+
+  /** The window split [[madAnomaly]] and [[zscoreAnomaly]] share: rows
+    * within `windowSeconds` of the [[anchored]] max(ts), keyed by their
+    * /prefix `network`, with `__is_current` marking the newest
+    * `currentSeconds`. ONE max(ts) scan serves both bounds (calling
+    * trailingWindow and then computing max(ts) again would scan the
+    * corpus twice for the same scalar).
+    */
+  private def windowSplit(df: DataFrame, hostCol: String, tsCol: String,
+      windowSeconds: Long, currentSeconds: Long, prefix: Int): DataFrame = {
+    require(currentSeconds > 0 && currentSeconds < windowSeconds,
+      s"invalid windows: $windowSeconds/$currentSeconds")
+    anchored(df, tsCol)
+      .filter(within(tsCol, windowSeconds))
+      .withColumn("network", IpFunctions.prefixNetwork(col(hostCol), prefix))
+      .withColumn("__is_current", within(tsCol, currentSeconds))
   }
 
   /** R23 (beyond the reference): parametric z-score anomaly — flag
@@ -627,17 +630,8 @@ object Baseline {
       prefix: Int,
       kNum: Long,
       kDen: Long): DataFrame = {
-    require(currentSeconds > 0 && currentSeconds < windowSeconds,
-      s"invalid windows: $windowSeconds/$currentSeconds")
-    val maxTs = df.agg(max(col(tsCol)).as("__end"))
-    val split = df.crossJoin(broadcast(maxTs))
-      .filter(col(tsCol) >=
-        col("__end") - expr(s"INTERVAL $windowSeconds SECONDS"))
-      .withColumn("__ip_num", IpFunctions.ip4ToNum(col(hostCol)))
-      .withColumn("network",
-        IpFunctions.numToIp4(IpFunctions.networkOf(col("__ip_num"), prefix)))
-      .withColumn("__is_current",
-        col(tsCol) >= col("__end") - expr(s"INTERVAL $currentSeconds SECONDS"))
+    val split = windowSplit(df, hostCol, tsCol, windowSeconds,
+        currentSeconds, prefix)
       .withColumn("__v6", round(col(valueCol) * 1e6).cast("long"))
     val d38 = "decimal(38,0)"
     // sums accumulate in decimal(38,0), NOT long: Spark's non-ANSI
@@ -702,9 +696,7 @@ object Baseline {
     */
   def profileState(df: DataFrame, hostCol: String, valueCol: String,
       prefix: Int): DataFrame =
-    df.withColumn("__ip_num", IpFunctions.ip4ToNum(col(hostCol)))
-      .withColumn("network",
-        IpFunctions.numToIp4(IpFunctions.networkOf(col("__ip_num"), prefix)))
+    df.withColumn("network", IpFunctions.prefixNetwork(col(hostCol), prefix))
       .groupBy(col("network"))
       .agg(count(col(valueCol)).as("n_rows"),
         sum(col(valueCol).cast("decimal(28,10)")).as("sum_v"),
@@ -741,27 +733,7 @@ object Baseline {
   def hostgroups6(
       df: DataFrame,
       cfg: BaselineConfig,
-      networks: Seq[Cidr6]): DataFrame = {
-    val windowed = trailingWindow(df, cfg.tsCol, cfg.windowSeconds)
-    val aggs = cfg.metrics.toSeq.sortBy(_._1).map { case (name, c) =>
-      toInt64(aggFor(cfg.aggregationFunction)(c)).as(name)
-    }
-    val spark = df.sparkSession
-    import spark.implicits._
-    val netDf = networks.zipWithIndex
-      .map { case (c, i) => (i.toLong, c.start, c.end, c.networkString) }
-      .toDF("__net_idx", "__start", "__end", "network")
-    val base = windowed
-      .withColumn("__ip", Ip6Expressions.ip6ToBytes(col(cfg.hostCol)))
-      .join(broadcast(netDf),
-        col("__ip") >= col("__start") && col("__ip") <= col("__end"))
-      .groupBy(col("network"))
-      .agg(count(lit(1)).as("n_rows"), aggs: _*)
-    val tail = thresholdColumns(Projection(base), cfg.rules)
-    tail
-      .withColumn("hostgroup",
-        regexp_replace(regexp_replace(regexp_replace(
-          tail("network"), ":", "_"), "\\.", "_"), "/", "_"))
-      .toDF
-  }
+      networks: Seq[Cidr6]): DataFrame =
+    hostgroupsOver(df, cfg, Ip6Expressions.ip6ToBytes(col(cfg.hostCol)),
+      networks.map(c => (c.start, c.end, c.networkString)))
 }

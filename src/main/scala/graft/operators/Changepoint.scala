@@ -202,12 +202,9 @@ object Changepoint {
       windowSeconds: Long, topK: Int): DataFrame = {
     require(windowSeconds > 0 && topK > 0,
       s"want positive window/topK, got $windowSeconds/$topK")
-    val maxTs = events.agg(max(col(tsCol)).as("__end"))
-    val counts = events.crossJoin(broadcast(maxTs))
-      .filter(col(tsCol) >=
-        col("__end") - expr(s"INTERVAL ${2 * windowSeconds} SECONDS"))
-      .withColumn("__cur", (col(tsCol) >=
-        col("__end") - expr(s"INTERVAL $windowSeconds SECONDS")).cast("long"))
+    val counts = Baseline.anchored(events, tsCol)
+      .filter(Baseline.within(tsCol, 2 * windowSeconds))
+      .withColumn("__cur", Baseline.within(tsCol, windowSeconds).cast("long"))
       .groupBy(col(keyCol))
       .agg(sum(col("__cur")).as("n_cur"),
         sum(lit(1L) - col("__cur")).as("n_prev"))

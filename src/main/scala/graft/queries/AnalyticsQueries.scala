@@ -792,7 +792,8 @@ object AnalyticsQueries {
     * the expand runs over the ~12-row partial table instead of the
     * corpus. The oracles are unchanged.
     */
-  private def flagStatusPartials(s: SparkSession, dir: String): DataFrame =
+  private def flagStatusPartials(s: SparkSession, dir: String): DataFrame = {
+    val qty = col("l_quantity")
     t(s, dir, "lineitem")
       .groupBy(col("l_returnflag"), col("l_linestatus"))
       .agg(count(lit(1)).as("__n"),
@@ -801,9 +802,13 @@ object AnalyticsQueries {
         // doubles summing under 2^53" — the per-row cast is exact for
         // integral quantities (the generator's contract, checked by the
         // oracle's own long cast) and long sums reassociate exactly at
-        // any scale
-        sum(col("l_quantity").cast("long")).as("__qty"),
+        // any scale. A fractional quantity breaks that contract: the
+        // cast would truncate it silently, so it raises instead.
+        sum(when(qty =!= floor(qty), raise_error(concat(
+            lit("flagStatusPartials: non-integral l_quantity "), qty.cast("string"))))
+          .otherwise(qty.cast("long"))).as("__qty"),
         sum(money(col("l_extendedprice"))).as("__price"))
+  }
 
   private def flagStatusReAgg(
       g: org.apache.spark.sql.RelationalGroupedDataset): DataFrame =

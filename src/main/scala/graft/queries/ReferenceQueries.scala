@@ -94,9 +94,7 @@ object ReferenceQueries {
   // shuffle computes count/avg/max/sum for every event type at once.
   def qMetricsWide(s: SparkSession, dir: String): DataFrame = {
     val e = hostEvents(s, dir)
-      .withColumn("ip_num", IpFunctions.ip4ToNum(col("host")))
-      .withColumn("network",
-        IpFunctions.numToIp4(IpFunctions.networkOf(col("ip_num"), 24)))
+      .withColumn("network", IpFunctions.prefixNetwork(col("host"), 24))
     val windowed = Baseline.trailingWindow(e, "ts", week)
     val aggs = eventTypes.flatMap { ty =>
       val v = when(col("event_type") === ty, col("value"))
@@ -272,13 +270,9 @@ object ReferenceQueries {
     withBucketKernel(s)(qMadAnomaly(s, dir))
 
   /** R20/R21 share the per-/24 keying the other baselines use. */
-  private def netEvents(s: SparkSession, dir: String): DataFrame = {
-    import graft.functions.IpFunctions
+  private def netEvents(s: SparkSession, dir: String): DataFrame =
     hostEvents(s, dir)
-      .withColumn("ip_num", IpFunctions.ip4ToNum(col("host")))
-      .withColumn("network",
-        IpFunctions.numToIp4(IpFunctions.networkOf(col("ip_num"), 24)))
-  }
+      .withColumn("network", IpFunctions.prefixNetwork(col("host"), 24))
 
   // R20: one-sided CUSUM changepoint per /24 on hourly event counts —
   // allowance 7 (above the corpus hourly mean), alarm at 15. The
@@ -328,16 +322,12 @@ object ReferenceQueries {
   // one host at HHI ~1 and a botnet at HHI ~1/n are the same pps.
   // (/26 so small SFs, whose hosts all sit in 10.0.0.x, still
   // exercise multiple groups — the Shared.netList rationale.)
-  def qConcentration(s: SparkSession, dir: String): DataFrame = {
-    import graft.functions.IpFunctions
+  def qConcentration(s: SparkSession, dir: String): DataFrame =
     graft.operators.Changepoint.concentration(
         hostEvents(s, dir)
-          .withColumn("ip_num", IpFunctions.ip4ToNum(col("host")))
-          .withColumn("network", IpFunctions.numToIp4(
-            IpFunctions.networkOf(col("ip_num"), 26))),
+          .withColumn("network", IpFunctions.prefixNetwork(col("host"), 26)),
         "network", "host")
       .orderBy("network")
-  }
 
   // R27: which HOSTS changed most between the two most recent days —
   // the deltoid triage table (new talkers and gone-silent keys rank

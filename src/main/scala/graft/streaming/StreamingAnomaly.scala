@@ -34,11 +34,9 @@ object StreamingAnomaly {
       watermarkDelay: String,
       kNum: Long,
       kDen: Long): DataFrame = {
-    val ipNum = IpFunctions.ip4ToNum(col(hostCol))
-    val net = IpFunctions.numToIp4(IpFunctions.networkOf(ipNum, prefix))
     val cur = events
       .withWatermark(tsCol, watermarkDelay)
-      .withColumn("network", net)
+      .withColumn("network", IpFunctions.prefixNetwork(col(hostCol), prefix))
       .groupBy(window(col(tsCol), windowDuration, slideDuration),
         col("network"))
       .agg(count(lit(1)).as("n_current"),

@@ -21,8 +21,12 @@ object StreamingBaseline {
   /** Continuous per-network baseline over sliding event-time windows.
     * Input must be a streaming DataFrame (spark.readStream...). Output
     * schema: window(start,end), network, n_rows, metric columns, plus
-    * threshold columns from cfg.rules — identical semantics to the
-    * batch [[Baseline.hostgroups]] on the window's slice of events.
+    * threshold columns from cfg.rules — the batch [[Baseline.hostgroups]]
+    * aggregate and thresholds on the window's slice of events, with one
+    * difference: `network` is the bare network address (`10.100.0.0`),
+    * not the batch twin's `10.100.0.0/24`, so a hostgroup named from it
+    * reads `10_100_0_0` where the batch pipeline and the reference name
+    * the same group `10_100_0_0_24`.
     */
   def perNetwork(
       events: DataFrame,
@@ -31,18 +35,12 @@ object StreamingBaseline {
       windowDuration: String,
       slideDuration: String,
       watermarkDelay: String): DataFrame = {
-    val ipNum = IpFunctions.ip4ToNum(col(cfg.hostCol))
-    val net = IpFunctions.numToIp4(IpFunctions.networkOf(ipNum, prefix))
-    val aggs = cfg.metrics.toSeq.sortBy(_._1).map { case (name, c) =>
-      Baseline.toInt64(Baseline.aggFor(cfg.aggregationFunction)(c)).as(name)
-    }
-    val base = events
+    val base = Baseline.metricAggregate(events
       .withWatermark(cfg.tsCol, watermarkDelay)
-      .withColumn("network", net)
+      .withColumn("network", IpFunctions.prefixNetwork(col(cfg.hostCol), prefix))
       .groupBy(
         window(col(cfg.tsCol), windowDuration, slideDuration),
-        col("network"))
-      .agg(count(lit(1)).as("n_rows"), aggs: _*)
+        col("network")), cfg)
     Baseline.thresholdColumns(Baseline.Projection(base), cfg.rules).toDF
   }
 }

@@ -44,8 +44,7 @@ object StreamingCusum {
     val spark = events.sparkSession
     import spark.implicits._
     events
-      .withColumn("key", IpFunctions.numToIp4(IpFunctions.networkOf(
-        IpFunctions.ip4ToNum(col(hostCol)), prefix)))
+      .withColumn("key", IpFunctions.prefixNetwork(col(hostCol), prefix))
       .withColumn("__us", unix_micros(col(tsCol)))
       .withColumn("bucket",
         expr(s"__us div ${bucketSeconds * 1000000L}"))

@@ -50,8 +50,7 @@ object StreamingEwma {
     val spark = events.sparkSession
     import spark.implicits._
     events
-      .withColumn("network", IpFunctions.numToIp4(IpFunctions.networkOf(
-        IpFunctions.ip4ToNum(col(hostCol)), prefix)))
+      .withColumn("network", IpFunctions.prefixNetwork(col(hostCol), prefix))
       .withColumn("__us", unix_micros(col(tsCol)))
       .withColumn("hourIdx",
         expr(s"__us div ${3600L * 1000000L}"))

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.operators.BanSettings
+import graft.operators.{BanSettings, Baseline}
 import graft.operators.Baseline.BaselineConfig
 
 /** The reference's ENTIRE cron loop as one continuous query
@@ -20,7 +20,8 @@ object StreamingHostgroups {
 
   /** Start the continuous reconciliation. Per trigger with finalized
     * windows: the newest finalized window per network becomes a
-    * hostgroup (name-mangled, thresholds applied, payload rendered),
+    * hostgroup (named by [[Baseline.hostgroupName]], thresholds
+    * applied, payload rendered),
     * [[BanSettings.lifecyclePlan]] diffs those against
     * `currentHostgroups` (the reference's GetAllHostgroups read), and
     * the ordered action rows go to `applyActions` — one row per API
@@ -29,6 +30,11 @@ object StreamingHostgroups {
     * reference's loop). Triggers with no finalized window are no-ops
     * (the batch reference regenerates groups every tick; a stream only
     * acts when a window closes).
+    *
+    * Group names diverge from the batch pipeline's: streaming networks
+    * are bare addresses ([[StreamingBaseline.perNetwork]]), so a /24
+    * group is `10_100_0_0` here and `10_100_0_0_24` in
+    * [[Baseline.hostgroups]] and the reference.
     */
   def run(
       events: DataFrame,
@@ -53,8 +59,7 @@ object StreamingHostgroups {
           val latest = batch
             .withColumn("__rn", row_number().over(newest))
             .filter(col("__rn") === 1)
-            .withColumn("hostgroup",
-              regexp_replace(regexp_replace(col("network"), "\\.", "_"), "/", "_"))
+            .withColumn("hostgroup", Baseline.hostgroupName(col("network")))
           val generated = BanSettings.fromHostgroups(latest)
           val plan = BanSettings.lifecyclePlan(
             generated, currentHostgroups(batch.sparkSession), removeExisting)

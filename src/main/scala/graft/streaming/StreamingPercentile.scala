@@ -42,11 +42,9 @@ object StreamingPercentile {
       prefix: Int,
       accuracy: Int = 10000): DataFrame = {
     require(fraction > 0 && fraction <= 1, s"invalid fraction $fraction")
-    val ipNum = IpFunctions.ip4ToNum(col(hostCol))
-    val net = IpFunctions.numToIp4(IpFunctions.networkOf(ipNum, prefix))
     events
       .withWatermark(tsCol, watermarkDelay)
-      .withColumn("network", net)
+      .withColumn("network", IpFunctions.prefixNetwork(col(hostCol), prefix))
       .groupBy(
         window(col(tsCol), windowDuration, slideDuration),
         col("network"))

@@ -52,8 +52,7 @@ object StreamingZscore extends Serializable {
     val spark = events.sparkSession
     import spark.implicits._
     events
-      .withColumn("key", IpFunctions.numToIp4(IpFunctions.networkOf(
-        IpFunctions.ip4ToNum(col(hostCol)), prefix)))
+      .withColumn("key", IpFunctions.prefixNetwork(col(hostCol), prefix))
       .withColumn("v6", round(col(valueCol) * 1e6).cast("long"))
       .select(col("key"), col("v6"))
       .as[Obs]

@@ -47,6 +47,16 @@ class Ip6ExpressionsSpec extends SparkSuite {
     assert(got.forall(identity))
   }
 
+  test("Cidr6.parse rejects malformed network-list entries by name") {
+    val bad = Seq("2001:db8::", "2001:db8::/", "2001:db8::/32/8",
+      "2001:db8::/3x", "2001:db8::g/32", " 2001:db8::/32", "2001:db8::/32 ",
+      "2001:db8::/129", "::1::2/64", "/64", "")
+    bad.foreach { s =>
+      val e = intercept[IllegalArgumentException](Cidr6.parse(s))
+      assert(e.getMessage.contains(s"'$s'"), e.getMessage)
+    }
+  }
+
   test("cidr6Contains is an inclusive binary range with correct order") {
     val c = Cidr6.parse("2001:db8::/32")
     assert(c.networkString == "2001:db8::/32")

@@ -27,7 +27,16 @@ class IpFunctionsSpec extends SparkSuite {
     assert(c.networkString == "192.168.1.0/24")
     assert(c.start == (192L << 24 | 168L << 16 | 1L << 8))
     assert(c.count == 256L)
-    assert(c.mangledName == "192_168_1_0_24")
+  }
+
+  test("Cidr.parse rejects malformed network-list entries by name") {
+    val bad = Seq("10.0.0.0", "10.0.0.0/", "10.0.0.0/24/8", "10.0.0.0/x4",
+      "10.0.0.x/24", " 10.0.0.0/24", "10.0.0.0/24 ", "10.0.0.0/33",
+      "10.0.0.256/24", "10.0.0/24", "10.0.0.0./24", "/24", "")
+    bad.foreach { s =>
+      val e = intercept[IllegalArgumentException](Cidr.parse(s))
+      assert(e.getMessage.contains(s"'$s'"), e.getMessage)
+    }
   }
 
   test("cidrContains is an inclusive range (no reference off-by-one)") {
@@ -46,5 +55,8 @@ class IpFunctionsSpec extends SparkSuite {
       .select(numToIp4(networkOf(ip4ToNum(col("ip")), 16)))
       .as[String].head()
     assert(got == "10.1.0.0")
+    val bare = Seq("10.1.2.3").toDF("ip")
+      .select(prefixNetwork(col("ip"), 24)).as[String].head()
+    assert(bare == "10.1.2.0")
   }
 }

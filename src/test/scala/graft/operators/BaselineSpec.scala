@@ -50,6 +50,24 @@ class BaselineSpec extends SparkSuite {
     assert(r.isNullAt(r.fieldIndex("threshold_neg"))) // zero/neg deactivates
     assert(!r.getAs[Boolean]("threshold_neg_active"))
     assert(r.getAs[String]("hostgroup") == "10_0_0_0_24")
+
+    // one naming rule (main.go:342-344) for every pipeline: the IPv4 and
+    // IPv6 batch groups, and the streaming groups, whose networks are
+    // bare addresses (StreamingHostgroupsSpec expects `10_0_0_0`)
+    val e6 = Seq(("2001:db8::1", ts("2024-01-10 00:00:00"), 1.0))
+      .toDF("host", "ts", "value")
+    val batch = Seq(
+      Baseline.hostgroups(df, cfg, Seq(Cidr.parse("10.0.0.0/24"))),
+      Baseline.hostgroups6(e6, cfg,
+        Seq(graft.functions.Ip6Expressions.Cidr6.parse("2001:db8::/32"))))
+      .map(_.select(col("hostgroup"),
+        Baseline.hostgroupName(col("network")).as("named")).as[(String, String)].head())
+    assert(batch == Seq(("10_0_0_0_24", "10_0_0_0_24"),
+      ("2001_db8___32", "2001_db8___32")))
+    val named = Seq(Cidr.parse("192.168.1.33/24").networkString, "10.0.0.0")
+      .toDF("network").select(Baseline.hostgroupName(col("network")))
+      .as[String].collect().toSeq
+    assert(named == Seq("192_168_1_0_24", "10_0_0_0"))
   }
 
   test("threshold tail keeps withColumn semantics for colliding names") {
