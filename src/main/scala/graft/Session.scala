@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.operators.Materializer
+
 /** The SparkSession every graft main runs on, and the two environment
   * inputs the mains share:
   *
@@ -11,8 +13,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   - `SPARK_GRAFT_ONLY=q_a,q_b`: the `SparkEntry.queries` subset to
   *     run (unset or blank runs them all).
   *
-  * Both are validated before any session starts: a malformed entry or
-  * an unknown query name fails the run instead of silently changing it.
+  * Both are validated before any session starts: a malformed entry, an
+  * unknown `graft.*` key or an unknown query name fails the run instead
+  * of silently changing it.
   */
 object Session {
 
@@ -44,11 +47,18 @@ object Session {
       overrides ++ graftConf.toSeq.flatMap(parseConf)
 
   /** `k=v;k2=v2` → entries; empty segments are skipped and a value may
-    * itself contain `=`.
+    * itself contain `=`. The only `graft.*` key graft reads is
+    * [[graft.operators.Materializer.ConfKey]]; any other (a removed
+    * knob, a typo) fails instead of being silently ignored.
     */
   private[graft] def parseConf(raw: String): Seq[(String, String)] =
     raw.split(";").toSeq.filter(_.trim.nonEmpty).map { kv =>
       kv.split("=", 2) match {
+        case Array(k, _) if k.trim.startsWith("graft.") &&
+            k.trim != Materializer.ConfKey =>
+          throw new IllegalArgumentException(
+            s"SPARK_GRAFT_CONF entry '$kv': graft reads no conf key " +
+              s"'${k.trim}' (the only graft.* key is ${Materializer.ConfKey})")
         case Array(k, v) if k.trim.nonEmpty => k.trim -> v
         case _ => throw new IllegalArgumentException(
           s"SPARK_GRAFT_CONF entry '$kv' is not key=value")

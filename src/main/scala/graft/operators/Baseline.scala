@@ -405,7 +405,7 @@ object Baseline {
     * corpus sorts in a single task — for that regime use the quantile
     * sketch (AnalyticsQueries.qSketchQuantile, constant memory per
     * group) and reserve this operator for exact reporting over
-    * bounded groups.
+    * bounded groups, or pass `bucketKernel = true` (see [[rankSelect]]).
     */
   def percentileByPrefix(
       df: DataFrame,
@@ -415,96 +415,56 @@ object Baseline {
       windowSeconds: Long,
       prefix: Int,
       num: Long,
-      den: Long): DataFrame = {
+      den: Long,
+      bucketKernel: Boolean = false): DataFrame = {
     require(num > 0 && den >= num, s"invalid percentile $num/$den")
     val assigned = trailingWindow(df, tsCol, windowSeconds)
       .select(IpFunctions.prefixNetwork(col(hostCol), prefix).as("network"),
         col(valueCol).as("__val"))
-    rankSelect(assigned, "network", "__val", num, den)
+    rankSelect(assigned, "network", "__val", num, den, bucketKernel)
       .select(col("network"), col("n").as("n_events"),
         toInt64(col("sel")).as("p_value"))
-  }
-
-  /** Kernel knob for the per-network rank selections: `graft.rankKernel`
-    * = `"window"` (default) or `"bucket"`. Both select the IDENTICAL
-    * element (the same integer rank arithmetic), so the oracles are
-    * unchanged — the knob only chooses the physical plan:
-    *
-    *   - `window`: one per-group sort window. MEASURED faster when the
-    *     group key already bounds the population (sf0.1, /24 networks:
-    *     p95 1.1 s vs 1.6 s, MAD 1.3 s vs 3.7 s — the bucket kernel's
-    *     fixed stage count dominates small groups).
-    *   - `bucket`: [[RankSelect.quantiles]] — histogram + offsets, no
-    *     per-group sort; each sort is ~n/1024 of a group. The hot-group
-    *     path for deployments whose network groups go large enough
-    *     that a one-task group sort straggles. MEASURED crossover
-    *     (SURVEY §15, local[32]): at a 17M-row hot /24 the bucket
-    *     kernel wins MAD (14.4 s vs 18.0 s — two selections pay the
-    *     one-task sort twice) with p95 at parity; at 1.7M rows the
-    *     window kernel still wins locally. Cluster executors with
-    *     per-task memory caps hit the crossover earlier.
-    *
-    * Contract (both kernels): the value population must be non-null —
-    * callers pass metric columns, which are.
-    */
-  val RankKernelKey = "graft.rankKernel"
-
-  /** Hot-group row-count threshold for `graft.rankKernel=auto`: the
-    * bucket kernel takes over when any single group reaches this many
-    * rows. Default sits between the two MEASURED regimes (SURVEY §15,
-    * local[32]): at a 1.7M-row hottest group the window kernel still
-    * wins; at 17M the bucket kernel does (MAD 14.4 s vs 18.0 s).
-    * Cluster executors with per-task memory caps hit the crossover
-    * earlier — deployments tune this down with the conf.
-    */
-  val RankKernelAutoThresholdKey = "graft.rankKernel.autoThreshold"
-  private val AutoThresholdDefault = 4L * 1000 * 1000
-
-  /** The `auto` decision: ONE count-per-key aggregate (map-side
-    * combinable — the cheapest possible pass over the selection input,
-    * the same audit shape as Profiling.keySkew's first stage) reduced
-    * to the hottest group's row count, compared against
-    * [[RankKernelAutoThresholdKey]]. This is a driver-side scalar by
-    * necessity — a PHYSICAL-plan choice cannot stay lazy — and is the
-    * skew audit (A49) wired into the knob so the SURVEY §15 crossover
-    * is an automatic decision instead of operator trivia.
-    */
-  private[graft] def chooseRankKernel(df: DataFrame, keyCol: String): String = {
-    val threshold = df.sparkSession.conf
-      .get(RankKernelAutoThresholdKey, AutoThresholdDefault.toString).toLong
-    val row = df.groupBy(col(keyCol)).agg(count(lit(1)).as("__n"))
-      .agg(max(col("__n"))).head()
-    val hottest = if (row.isNullAt(0)) 0L else row.getLong(0)
-    if (hottest >= threshold) "bucket" else "window"
   }
 
   /** Exact `num/den`-percentile of `valCol` per `keyCol` via integer
     * rank selection (see [[percentileByPrefix]]): returns one row per
     * key with the selected element as `sel` plus the group size `n`.
-    * Physical plan per [[RankKernelKey]]; `auto` delegates to
-    * [[chooseRankKernel]].
+    * Both kernels select the IDENTICAL element (the same integer rank
+    * arithmetic), so the oracles are unchanged; `bucketKernel` only
+    * chooses the physical plan:
+    *
+    *   - `false` (window): one per-group sort window. MEASURED faster
+    *     when the group key already bounds the population (sf0.1, /24
+    *     networks: p95 1.1 s vs 1.6 s, MAD 1.3 s vs 3.7 s — the bucket
+    *     kernel's fixed stage count dominates small groups).
+    *   - `true` (bucket): [[RankSelect.quantiles]] — histogram +
+    *     offsets, no per-group sort; each sort is ~n/1024 of a group.
+    *     The hot-group path for deployments whose network groups go
+    *     large enough that a one-task group sort straggles. MEASURED
+    *     crossover (SURVEY §15, local[32]): at a 17M-row hot /24 the
+    *     bucket kernel wins MAD (14.4 s vs 18.0 s — two selections pay
+    *     the one-task sort twice) with p95 at parity; at 1.7M rows the
+    *     window kernel still wins locally.
+    *
+    * Contract (both kernels): the value population must be non-null —
+    * callers pass metric columns, which are.
     */
   private[graft] def rankSelect(df: DataFrame, keyCol: String,
-      valCol: String, num: Long, den: Long): DataFrame = {
-    def run(kernel: String): DataFrame = kernel match {
-      case "window" =>
-        val w = Window.partitionBy(col(keyCol))
-        df.select(col(keyCol), col(valCol).as("__v"))
-          .withColumn("__rk", row_number().over(w.orderBy(col("__v"))))
-          .withColumn("__n", count(lit(1)).over(w))
-          .filter(col("__rk") * den >= lit(num) * col("__n"))
-          .groupBy(col(keyCol))
-          .agg(max(col("__n")).as("n"), min(col("__v")).as("sel"))
-      case "bucket" =>
-        RankSelect.quantiles(df, keyCol, valCol,
-            Seq(("sel", num, den)), countCol = Some("n"))
-          .select(col(keyCol), col("n"), col("sel"))
-      case "auto" => run(chooseRankKernel(df, keyCol))
-      case other => throw new IllegalArgumentException(
-        s"$RankKernelKey=$other (want window | bucket | auto)")
+      valCol: String, num: Long, den: Long,
+      bucketKernel: Boolean = false): DataFrame =
+    if (bucketKernel)
+      RankSelect.quantiles(df, keyCol, valCol,
+          Seq(("sel", num, den)), countCol = Some("n"))
+        .select(col(keyCol), col("n"), col("sel"))
+    else {
+      val w = Window.partitionBy(col(keyCol))
+      df.select(col(keyCol), col(valCol).as("__v"))
+        .withColumn("__rk", row_number().over(w.orderBy(col("__v"))))
+        .withColumn("__n", count(lit(1)).over(w))
+        .filter(col("__rk") * den >= lit(num) * col("__n"))
+        .groupBy(col(keyCol))
+        .agg(max(col("__n")).as("n"), min(col("__v")).as("sel"))
     }
-    run(df.sparkSession.conf.get(RankKernelKey, "window"))
-  }
 
   /** R16 (beyond the reference): robust anomaly scoring — flag
     * networks whose CURRENT traffic deviates from the historical
@@ -521,7 +481,8 @@ object Baseline {
     * in both windows drop out (no history -> nothing to compare).
     *
     * Scale: two rank windows keyed by network + one broadcast-sized
-    * join — the same shuffle family as the percentile baseline.
+    * join — the same shuffle family as the percentile baseline;
+    * `bucketKernel` picks both selections' plan (see [[rankSelect]]).
     */
   def madAnomaly(
       df: DataFrame,
@@ -532,7 +493,8 @@ object Baseline {
       currentSeconds: Long,
       prefix: Int,
       kNum: Long,
-      kDen: Long): DataFrame = {
+      kDen: Long,
+      bucketKernel: Boolean = false): DataFrame = {
     val split = windowSplit(df, hostCol, tsCol, windowSeconds,
       currentSeconds, prefix)
     // the history projection is the operator's fan-out point: the
@@ -553,12 +515,12 @@ object Baseline {
       .agg(count(lit(1)).as("n_current"),
         aggFor("avg")(col(valueCol)).as("current_avg"))
 
-    val med = mat(rankSelect(hist, "network", "v", 1, 2)
+    val med = mat(rankSelect(hist, "network", "v", 1, 2, bucketKernel)
       .select(col("network"), col("n").as("n_hist"), col("sel").as("med")))
     val mad = rankSelect(
         hist.join(med.select(col("network"), col("med")), "network")
           .select(col("network"), abs(col("v") - col("med")).as("dev")),
-        "network", "dev", 1, 2)
+        "network", "dev", 1, 2, bucketKernel)
       .select(col("network"), col("sel").as("mad"))
 
     // ONE rounded expression feeds both the output column and the flag

@@ -17,7 +17,7 @@ import graft.functions.Hashing
   * |test| x |train|. The train index side is explicitly SIZED
   * ([[Dedup.sizedGramSide]]): a count over its checkpoint picks a
   * broadcast hint while it genuinely fits
-  * `graft.gramSet.broadcastMaxRows` (default 1M) rows, and a
+  * [[Dedup.GramBroadcastMaxRows]] (1M) rows, and a
   * spill-safe sort-merge hint past that — at 100 TB the train shingle
   * index is itself huge and must never ride a broadcast bet on
   * Spark's unmodeled explode estimates (the rogue-broadcast

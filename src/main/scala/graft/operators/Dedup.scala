@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -19,101 +19,13 @@ object Dedup {
 
   def tokens(text: Column): Column = split(trim(text), "\\s+")
 
-  /** Sentinel for the band-join `maxBucket` params: decide the cap
-    * automatically from a one-pass hottest-bucket count (the
-    * `rankKernel=auto` pattern applied to the D3/D4/M7 hot-bucket
-    * guard). See [[autoCapped]].
+  /** The one check of the band joins' `maxBucket`: 0 = uncapped,
+    * > 0 = drop band buckets wider than the cap. A negative value is
+    * rejected loudly instead of silently disabling the guard.
     */
-  val AutoBucket: Long = -1L
-
-  /** Hottest-band-bucket width at which `maxBucket = AutoBucket`
-    * engages the cap. Default sits between the two measured
-    * regimes of SURVEY §26.8 (local[32], stop-phrase skew): at hot width
-    * ~2,100 (400k docs) the cap's window cost ≈ its savings; at
-    * ~4,200 (800k docs) it decisively pays (24.4 s vs 33.0 s) and the
-    * quadratic term only grows from there (~3.5B excess pairs at 8M
-    * docs). Cluster deployments with per-task memory caps tune this
-    * down.
-    */
-  val BucketCapAutoThresholdKey = "graft.bucketCap.autoThreshold"
-  private val BucketCapThresholdDefault = 4000L
-
-  /** The cap applied when auto engages: SURVEY §26.8's measured
-    * arm (200 kept every planted near-dup at 100% recall while
-    * returning the skewed corpus's wall to the uniform arm's slope).
-    */
-  val BucketCapAutoValueKey = "graft.bucketCap.autoValue"
-  private val BucketCapValueDefault = 200L
-
-  /** Validated read of one bucket-cap conf key: numeric and strictly
-    * positive, with the key named in the error (the [[Materializer.of]]
-    * conf-error style). A non-positive autoValue would otherwise make
-    * an "engaged" decision silently behave as uncapped.
-    */
-  private def capConf(spark: SparkSession, key: String,
-      default: Long): Long = {
-    val raw = spark.conf.get(key, default.toString)
-    val v =
-      try raw.toLong
-      catch {
-        case _: NumberFormatException =>
-          throw new IllegalArgumentException(
-            s"$key=$raw (want a positive integer)")
-      }
-    require(v > 0, s"$key=$v (want a positive integer)")
-    v
-  }
-
-  /** The engage half of the `AutoBucket` decision for callers that
-    * already know their hottest bucket width (the streaming band
-    * indexes, whose materialized per-band candidate arrays make the
-    * width a cheap max): the configured cap iff `hottest` reaches the
-    * threshold, else 0 (uncapped). Same conf keys, same validation,
-    * same crossover as [[autoCapped]].
-    */
-  private[graft] def autoCapDecision(spark: SparkSession,
-      hottest: Long): Long = {
-    val threshold =
-      capConf(spark, BucketCapAutoThresholdKey, BucketCapThresholdDefault)
-    val capValue = capConf(spark, BucketCapAutoValueKey, BucketCapValueDefault)
-    if (hottest >= threshold) capValue else 0L
-  }
-
-  /** The `AutoBucket` decision AND its anti-join side from ONE
-    * count-per-bucket aggregate (map-side combinable — one row per
-    * distinct bucket). r14 ran that aggregate twice — a
-    * hottest-bucket scalar, then the hot-set build; here the
-    * materialized table keeps every bucket wider than
-    * min(autoValue, autoThreshold - 1) — at most bandRows/that rows
-    * by construction — so the hottest width is a max over the tiny
-    * checkpoint (any bucket reaching the threshold is in it, the cut
-    * sits below the threshold) and its `> autoValue` slice is the
-    * anti-join set, no second pass. The engage check is driver-side
-    * by necessity — whether the O(width²) guard is worth it is a plan
-    * choice that cannot stay lazy — and it is exactly the skew audit
-    * a 100 TB operator would run before an LSH join, wired into the
-    * knob. Materialization of the band frame stays the CALLER's
-    * choice: simhash/bandedHamming pass their (always-materialized —
-    * raw-text upstream) frames; the LSH caller passes the plain frame
-    * and eats one extra signature agg over its materialized shingle
-    * sets instead (SURVEY §26.8: cheaper than a band checkpoint).
-    */
-  private def autoCapped(all: DataFrame, keys: Seq[String]): DataFrame = {
-    val spark = all.sparkSession
-    val threshold =
-      capConf(spark, BucketCapAutoThresholdKey, BucketCapThresholdDefault)
-    val capValue = capConf(spark, BucketCapAutoValueKey, BucketCapValueDefault)
-    val lowCut = math.min(capValue, threshold - 1)
-    val wide = Materializer.of(spark)(
-      all.groupBy(keys.map(col): _*).agg(count(lit(1)).as("__w"))
-        .filter(col("__w") > lowCut))
-    val row = wide.agg(max(col("__w"))).head()
-    val hottest = if (row.isNullAt(0)) 0L else row.getLong(0)
-    if (hottest >= threshold)
-      all.join(wide.filter(col("__w") > capValue).select(keys.map(col): _*),
-        keys, "left_anti")
-    else all
-  }
+  private[graft] def requireBucketCap(maxBucket: Long): Unit =
+    require(maxBucket >= 0,
+      s"maxBucket=$maxBucket: 0 = uncapped, > 0 = cap on band-bucket width")
 
   /** The buckets wider than `cap`: one map-side-combinable count per
     * bucket filtered to the hot set — AT MOST bandRows/cap rows by
@@ -139,8 +51,8 @@ object Dedup {
         .filter(col("__df") > maxDf)
         .select(col("sh")))
 
-  /** Drops band buckets wider than `cap` before they emit O(width²)
-    * pairs: LEFT ANTI join against the materialized [[hotBuckets]]
+  /** Drops band buckets wider than `cap` (0 = uncapped: the identity)
+    * before they emit O(width²) pairs: LEFT ANTI join against the materialized [[hotBuckets]]
     * set. With the hot set small (its structural common case) AQE
     * plans a broadcast anti join, so the band frame is NEVER shuffled
     * for the guard; in the adversarial worst case (all buckets just
@@ -155,25 +67,21 @@ object Dedup {
     */
   private def widthFiltered(src: DataFrame, keys: Seq[String],
       cap: Long): DataFrame =
-    src.join(hotBuckets(src, keys, cap), keys, "left_anti")
+    if (cap == 0) src
+    else src.join(hotBuckets(src, keys, cap), keys, "left_anti")
 
   /** Band-frame cap plumbing for the MATERIALIZING band joins
     * (simhash, bandedHamming): the bands are always checkpointed once
     * (their upstream is the full raw-text pipeline — measured
-    * 2.5 -> 1.4 s); explicit caps and the engaged `AutoBucket` then
-    * apply the [[widthFiltered]] anti join over that checkpoint (the
-    * filtered frame itself is NOT re-checkpointed: each self-join
-    * side re-runs only a broadcast anti probe over local blocks).
+    * 2.5 -> 1.4 s); a cap then applies the [[widthFiltered]] anti join
+    * over that checkpoint (the filtered frame itself is NOT
+    * re-checkpointed: each self-join side re-runs only a broadcast
+    * anti probe over local blocks).
     */
   private def cappedBands(bands0: DataFrame, keys: Seq[String],
       maxBucket: Long): DataFrame = {
-    require(maxBucket >= AutoBucket,
-      s"maxBucket=$maxBucket: 0 = uncapped, > 0 = explicit cap, " +
-        s"$AutoBucket = auto")
-    val all = Materializer.of(bands0.sparkSession)(bands0)
-    if (maxBucket == 0) all
-    else if (maxBucket > 0) widthFiltered(all, keys, maxBucket)
-    else autoCapped(all, keys)
+    requireBucketCap(maxBucket)
+    widthFiltered(Materializer.of(bands0.sparkSession)(bands0), keys, maxBucket)
   }
 
   /** D1: exact dedup — one hash-partial-aggregated groupBy on a 128-bit
@@ -206,15 +114,56 @@ object Dedup {
       tokenHash: Column => Column = Hashing.h30): DataFrame =
     shingleSetsWith(df, idCol, textCol, n, tokenHash, Seq.empty)
 
-  /** [[shingleSets]] with passthrough columns riding the explode
-    * (r17 opt): `extraCols` must exist on `df` and land verbatim on
-    * every (doc_id, sh) row. This replaces the former pattern of
-    * joining the exploded frame BACK to the doc table to re-attach
-    * doc-level columns — that join shuffled the entire shingle frame
-    * on doc_id (and at corpus scale tempts the planner into
-    * broadcasting a data-sized doc table); a projection through the
-    * explode costs neither (guide §2.4: remove shuffles outright).
+  /** Planned-split estimate for the narrow single-scan pipelines
+    * [[withScanParallelism]] wraps, WITHOUT compiling a physical plan
+    * (ADVICE r17: `df.rdd` planned — then discarded — a full physical
+    * plan per guard call, so every guarded query paid double driver
+    * planning; on the sf0.1 `documents` file in a warm `local[4]`
+    * session, 4-core Xeon, a fresh frame's estimate took a median
+    * 3.4 ms, analysis included, and its `.rdd.getNumPartitions`
+    * 46 ms). Runs the file scan's own split arithmetic —
+    * `FilePartition.maxSplitBytes`, `PartitionedFileUtil.splitFiles`
+    * and `FilePartition.getFilePartitions`, as `FileSourceScanExec`
+    * calls them — over the relation's (already session-cached) file
+    * listing. `None` on any shape other than narrow-ops-over-one-
+    * unbucketed-unpartitioned-file-scan (a bucketed scan splits per
+    * bucket, a partitioned one prunes by its filters), where the caller
+    * falls back to the exact `.rdd` probe.
     */
+  private[graft] def plannedScanSplits(df: DataFrame): Option[Int] = {
+    import org.apache.spark.sql.catalyst.plans.{logical => lg}
+    import org.apache.spark.sql.execution.PartitionedFileUtil
+    import org.apache.spark.sql.execution.datasources.{FilePartition, HadoopFsRelation, LogicalRelation}
+    val plan = df.queryExecution.analyzed
+    val wide = plan.exists {
+      case _: lg.Join | _: lg.Aggregate | _: lg.Distinct |
+           _: lg.Deduplicate | _: lg.Sort | _: lg.Window |
+           _: lg.RepartitionOperation | _: lg.GlobalLimit |
+           _: lg.SetOperation | _: lg.Union => true
+      case _ => false
+    }
+    if (wide) return None
+    plan.collectLeaves() match {
+      case Seq(lr: LogicalRelation) => lr.relation match {
+        case fs: HadoopFsRelation
+            if fs.bucketSpec.isEmpty && fs.partitionSchema.isEmpty =>
+          val spark = fs.sparkSession
+          val listed = fs.location.listFiles(Nil, Nil)
+          val maxSplit = FilePartition.maxSplitBytes(spark, listed)
+          val pieces = listed.flatMap { dir =>
+            dir.files.flatMap { f =>
+              PartitionedFileUtil.splitFiles(f, f.getPath,
+                fs.fileFormat.isSplitable(spark, fs.options, f.getPath),
+                maxSplit, dir.values)
+            }
+          }.sortBy(-_.length)
+          Some(FilePartition.getFilePartitions(spark, pieces, maxSplit).size)
+        case _ => None
+      }
+      case _ => None
+    }
+  }
+
   /** Ensure CPU-bound narrow work (tokenize + per-token hashing +
     * explode) runs with at least the session's core count of tasks
     * (r17 opt): input partitioning follows FILE layout, and a small
@@ -227,71 +176,6 @@ object Dedup {
     * shuffle appears; only an under-split input pays one round-robin
     * of its raw rows to unlock the cores.
     */
-  /** Planned-split estimate for the narrow single-scan pipelines
-    * [[withScanParallelism]] wraps, WITHOUT compiling a physical plan
-    * (ADVICE r17: `df.rdd` planned — then discarded — a full physical
-    * plan per guard call, so every guarded query paid double driver
-    * planning). Replicates `FilePartition.maxSplitBytes`'s bin-packing
-    * arithmetic over the relation's (already session-cached) file
-    * listing; `None` on any shape other than narrow-ops-over-one-file-
-    * scan, where the caller falls back to the exact `.rdd` probe.
-    */
-  private[graft] def plannedScanSplits(df: DataFrame): Option[Int] = {
-    import org.apache.spark.sql.catalyst.plans.{logical => lg}
-    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-    val plan = df.queryExecution.analyzed
-    val wide = plan.exists {
-      case _: lg.Join | _: lg.Aggregate | _: lg.Distinct |
-           _: lg.Deduplicate | _: lg.Sort | _: lg.Window |
-           _: lg.RepartitionOperation | _: lg.GlobalLimit |
-           _: lg.SetOperation | _: lg.Union => true
-      case _ => false
-    }
-    if (wide) return None
-    plan.collectLeaves() match {
-      case Seq(lr: LogicalRelation) => lr.relation match {
-        case fs: HadoopFsRelation =>
-          val sess = df.sparkSession
-          val conf = sess.sessionState.conf
-          val openCost = conf.filesOpenCostInBytes
-          val minPar = conf.filesMinPartitionNum
-            .getOrElse(sess.sparkContext.defaultParallelism)
-          val sizes = fs.location.listFiles(Nil, Nil)
-            .flatMap(_.files).map(_.getLen)
-          if (sizes.isEmpty) Some(0)
-          else {
-            // FilePartition.maxSplitBytes, verbatim
-            val totalBytes = sizes.map(_ + openCost).sum
-            val bytesPerCore = totalBytes / math.max(1, minPar)
-            val maxSplit = math.max(1L, math.min(
-              conf.filesMaxPartitionBytes,
-              math.max(openCost, bytesPerCore)))
-            // chop each (splittable parquet) file at maxSplit
-            // boundaries, then greedy-pack the pieces in length-desc
-            // order — FilePartition.getFilePartitions' exact loop
-            // (close when length alone overflows; open-cost only
-            // accumulates), so the estimate equals the planned split
-            // count (spec-pinned in ScanParallelismSpec)
-            val pieces = sizes.flatMap { s =>
-              if (s <= 0L) Seq(0L)
-              else (0L until s by maxSplit).map(off => math.min(maxSplit, s - off))
-            }.sortBy(-_)
-            var n = 0
-            var cur = 0L
-            var open = false
-            pieces.foreach { len =>
-              if (open && cur + len > maxSplit) { n += 1; cur = 0L }
-              open = true
-              cur += len + openCost
-            }
-            Some(if (open) n + 1 else n)
-          }
-        case _ => None
-      }
-      case _ => None
-    }
-  }
-
   private[graft] def withScanParallelism(df: DataFrame,
       keys: Seq[Column] = Seq.empty): DataFrame = {
     // streaming frames: micro-batch partitioning is the source's
@@ -309,6 +193,15 @@ object Dedup {
     else df.repartition(target)
   }
 
+  /** [[shingleSets]] with passthrough columns riding the explode
+    * (r17 opt): `extraCols` must exist on `df` and land verbatim on
+    * every (doc_id, sh) row. This replaces the former pattern of
+    * joining the exploded frame BACK to the doc table to re-attach
+    * doc-level columns — that join shuffled the entire shingle frame
+    * on doc_id (and at corpus scale tempts the planner into
+    * broadcasting a data-sized doc table); a projection through the
+    * explode costs neither (guide §2.4: remove shuffles outright).
+    */
   def shingleSetsWith(df: DataFrame, idCol: String, textCol: String,
       n: Int, tokenHash: Column => Column,
       extraCols: Seq[String]): DataFrame = {
@@ -1040,23 +933,18 @@ object Dedup {
     * never revisits a statically-chosen broadcast. SURVEY §28.6
     * measured the failure: a 5.5M-row / 384 MiB eval gram relation
     * broadcast past the 10 MB threshold. A 24g local JVM absorbs
-    * that; cluster executors OOM. Default 1M rows ~ tens of MB as a
-    * HashedRelation — tune per deployment.
+    * that; cluster executors OOM. 1M rows ~ tens of MB as a
+    * HashedRelation.
     */
-  val GramBroadcastMaxRowsKey = "graft.gramSet.broadcastMaxRows"
-  private val GramBroadcastMaxRowsDefault = 1000000L
+  private[operators] val GramBroadcastMaxRows = 1000000L
 
   /** Size a MATERIALIZED gram-set join side explicitly: one count over
-    * the checkpoint (cheap, and the skew-audit-as-knob discipline of
-    * [[autoCapped]]/`rankKernel=auto`), then a broadcast hint under
-    * [[GramBroadcastMaxRowsKey]] rows or a sort-merge hint over it —
+    * the checkpoint (cheap), then a broadcast hint up to
+    * [[GramBroadcastMaxRows]] rows or a sort-merge hint over it —
     * spill-safe, never an executor-memory bet on a misestimate.
     */
-  private[operators] def sizedGramSide(df: DataFrame): DataFrame = {
-    val maxRows =
-      capConf(df.sparkSession, GramBroadcastMaxRowsKey, GramBroadcastMaxRowsDefault)
-    if (df.count() <= maxRows) broadcast(df) else df.hint("merge")
-  }
+  private[operators] def sizedGramSide(df: DataFrame): DataFrame =
+    if (df.count() <= GramBroadcastMaxRows) broadcast(df) else df.hint("merge")
 
   /** Shared front half of the C8 scrub family: materialized train
     * (doc_id, toks, th) + the positional gram stream (doc_id, pos,
@@ -1210,13 +1098,7 @@ object Dedup {
     * survive a 200-cap at 100% while the skewed corpus's wall returns
     * to the uniform arm's.
     *
-    * `maxBucket = AutoBucket` (-1) makes the cap an automatic
-    * decision: ONE map-side-combinable hottest-bucket count over the
-    * (checkpointed-once) band rows, capped at
-    * `graft.bucketCap.autoValue` iff the hottest bucket reaches
-    * `graft.bucketCap.autoThreshold` (see [[autoCapped]]) — the
-    * probe's crossover wired into the knob, so a deployment need not
-    * know its corpus's stop-phrase skew in advance.
+    * A negative `maxBucket` is rejected ([[requireBucketCap]]).
     */
   def minhashLsh(df: DataFrame, idCol: String, textCol: String,
       n: Int, num: Long, den: Long,
@@ -1245,22 +1127,14 @@ object Dedup {
     */
   private[operators] def lshPairsFromSets(sets: DataFrame, num: Long,
       den: Long, maxBucket: Long = 0): DataFrame = {
-    require(maxBucket >= AutoBucket,
-      s"maxBucket=$maxBucket: 0 = uncapped, > 0 = explicit cap, " +
-        s"$AutoBucket = auto")
-    val lshKeys = Seq("band", "bh")
-    val all = bandHashes(minhashSignatures(sets))
-    val bands =
-      if (maxBucket == 0) all
-      else if (maxBucket > 0) widthFiltered(all, lshKeys, maxBucket)
-      else
-        // AutoBucket: the decision re-runs the signature agg once over
-        // the MATERIALIZED sets — deliberately NOT checkpointing the
-        // band frame: interleaved arms (SURVEY §26.8) measured the
-        // checkpointed band join 15-18% SLOWER than recomputing the
-        // one-pass agg on each join side (the write costs more than
-        // the agg saves when the shingle index is already local)
-        autoCapped(all, lshKeys)
+    requireBucketCap(maxBucket)
+    // the band frame is deliberately NOT checkpointed: interleaved
+    // arms (SURVEY §26.8) measured the checkpointed band join 15-18%
+    // SLOWER than recomputing the one-pass signature agg on each join
+    // side (the write costs more than the agg saves when the shingle
+    // index is already local)
+    val bands = widthFiltered(bandHashes(minhashSignatures(sets)),
+      Seq("band", "bh"), maxBucket)
     val cand = bands.as("x")
       .join(bands.as("y"), Seq("band", "bh"))
       .filter(col("x.doc_id") < col("y.doc_id"))
@@ -1430,9 +1304,8 @@ object Dedup {
     * `maxBucket > 0` drops band buckets wider than maxBucket from
     * candidate generation — a popular band value (boilerplate-heavy
     * corpora collapse many docs into one bucket) would otherwise emit
-    * O(width²) pairs in a single task; `AutoBucket` (-1) decides from
-    * a one-pass hottest-bucket count (see [[autoCapped]]). Run
-    * exact dedup FIRST: a bucket that is wide because of true
+    * O(width²) pairs in a single task; a negative value is rejected
+    * ([[requireBucketCap]]). Run exact dedup FIRST: a bucket that is wide because of true
     * byte-identical duplicates should never reach this operator.
     */
   def simhashNearDup(df: DataFrame, idCol: String, textCol: String,
@@ -1457,7 +1330,7 @@ object Dedup {
     // materialized once: BOTH sides of the self-join read the band
     // rows, so the shingle+simhash pipeline (and the bucket-width
     // window when capped) would run twice (measured 2.5 -> 1.4 s
-    // median at sf0.1); AutoBucket decides off the materialized frame
+    // median at sf0.1); the cap filters the materialized frame
     val bands = cappedBands(all, Seq("band", "bv"), maxBucket)
     bands.as("x").join(bands.as("y"), Seq("band", "bv"))
       .filter(col("x.doc_id") < col("y.doc_id"))
@@ -1539,8 +1412,8 @@ object Dedup {
     * volume is proportional to true bucket collisions, never |corpus|².
     * `maxBucket` drops degenerate buckets (a flat fingerprint shared
     * by a huge corpus slice) before they emit O(width²) pairs
-    * (`AutoBucket` decides from a one-pass hottest-bucket count, see
-    * [[autoCapped]]); run exact dedup first so byte-identical
+    * (a negative value is rejected, see [[requireBucketCap]]); run
+    * exact dedup first so byte-identical
     * media never reaches here.
     */
   def bandedHammingPairs(hashes: DataFrame, idCol: String, hashCol: String,
@@ -1566,8 +1439,8 @@ object Dedup {
       .select(col("doc_id"), col("h"),
         col("b.band").as("band"), col("b.bv").as("bv"))
     // materialized once — both sides of the self-join read the band
-    // rows (same device as simhashNearDup); AutoBucket decides off
-    // the materialized frame
+    // rows (same device as simhashNearDup); the cap filters the
+    // materialized frame
     val bands = cappedBands(all, Seq("band", "bv"), maxBucket)
     // r17 opt: the Hamming filter runs BEFORE the pair distinct. The
     // filter is row-local (one bit_count), while the distinct is the

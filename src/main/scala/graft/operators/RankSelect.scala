@@ -90,10 +90,9 @@ object RankSelect {
     * range scalar, the histogram lineage, and the rank side of the
     * offset join) — materialize it first if its lineage is expensive.
     * The (lo, hi) range is read driver-side at PLAN-BUILD
-    * time (the [[graft.operators.Dedup]] AutoBucket /
-    * `rankKernel=auto` discipline: a physical range split cannot stay
-    * lazy, and the scalar costs one map-side-combinable pass over the
-    * — ideally checkpointed — input) and lands in the plan as
+    * time (a physical range split cannot stay lazy, and the scalar
+    * costs one map-side-combinable pass over the — ideally
+    * checkpointed — input) and lands in the plan as
     * literals, saving the broadcast cross-join stage a column-side
     * range would need. The long→double cast of the range endpoints is
     * monotone, so bucket assignment stays order-preserving even past

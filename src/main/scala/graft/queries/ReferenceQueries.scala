@@ -131,8 +131,12 @@ object ReferenceQueries {
   // R14: exact p95 baseline per /24 — rank selection by integer
   // arithmetic, so both engines pick the identical element.
   def qBaselineP95(s: SparkSession, dir: String): DataFrame =
+    baselineP95(s, dir, bucketKernel = false)
+
+  private def baselineP95(s: SparkSession, dir: String,
+      bucketKernel: Boolean): DataFrame =
     Baseline.percentileByPrefix(hostEvents(s, dir), "host", "value", "ts",
-        week, 24, num = 19, den = 20)
+        week, 24, num = 19, den = 20, bucketKernel = bucketKernel)
       .withColumnRenamed("p_value", "p95_value")
       .orderBy("network")
 
@@ -245,29 +249,24 @@ object ReferenceQueries {
   // R16: robust MAD anomaly scoring — last hour vs 7-day median/MAD
   // per /24, threshold 3x MAD.
   def qMadAnomaly(s: SparkSession, dir: String): DataFrame =
+    madAnomaly(s, dir, bucketKernel = false)
+
+  private def madAnomaly(s: SparkSession, dir: String,
+      bucketKernel: Boolean): DataFrame =
     Baseline.madAnomaly(hostEvents(s, dir), "host", "value", "ts",
         windowSeconds = week, currentSeconds = 3600L, prefix = 24,
-        kNum = 3, kDen = 1)
+        kNum = 3, kDen = 1, bucketKernel = bucketKernel)
       .orderBy("network")
 
-  /** Build a query under the bucket-offset rank kernel
-    * (graft.rankKernel=bucket): the conf is read at PLAN-BUILD time, so
-    * scoping the set around construction pins the kernel for the
-    * returned (lazy) DataFrame.
-    */
-  private def withBucketKernel(s: SparkSession)(build: => DataFrame): DataFrame = {
-    s.conf.set(Baseline.RankKernelKey, "bucket")
-    try build finally s.conf.unset(Baseline.RankKernelKey)
-  }
-
-  // R14b/R16 on the RankSelect kernel — gated against the IDENTICAL
-  // oracle SQL as the window formulation: both kernels must select the
-  // same element, making the hot-group plan a verified drop-in.
+  // R14b/R16 on the RankSelect bucket kernel — gated against the
+  // IDENTICAL oracle SQL as the window formulation: both kernels must
+  // select the same element, making the hot-group plan a verified
+  // drop-in.
   def qBaselineP95Rs(s: SparkSession, dir: String): DataFrame =
-    withBucketKernel(s)(qBaselineP95(s, dir))
+    baselineP95(s, dir, bucketKernel = true)
 
   def qMadAnomalyRs(s: SparkSession, dir: String): DataFrame =
-    withBucketKernel(s)(qMadAnomaly(s, dir))
+    madAnomaly(s, dir, bucketKernel = true)
 
   /** R20/R21 share the per-/24 keying the other baselines use. */
   private def netEvents(s: SparkSession, dir: String): DataFrame =

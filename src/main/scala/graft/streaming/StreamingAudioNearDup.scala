@@ -11,7 +11,7 @@ import graft.operators.Multimodal
   * fingerprint index with ZERO streaming state through the generic
   * band-match core ([[StreamingHammingMatch]] — the M7s serving shape
   * with the audio kernel swapped in; index shape, pigeonhole
-  * exactness, and the AutoBucket cap contract documented there). The
+  * exactness, and the `maxBucket` cap contract documented there). The
   * spec pins the streamed pair set equal to a brute-force stream x
   * corpus scan on real decoded bytes.
   */

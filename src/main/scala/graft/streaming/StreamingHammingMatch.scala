@@ -25,8 +25,8 @@ import graft.operators.{Dedup, Materializer}
   * ([[graft.operators.Dedup.bandedHammingPairs]]). Append mode,
   * unbounded-history safe; `maxBucket` caps corpus-side bucket width
   * (a flat fingerprint shared corpus-wide would otherwise ride into
-  * every matching stream row's candidate array); `Dedup.AutoBucket`
-  * auto-decides the cap from the hottest materialized band bucket.
+  * every matching stream row's candidate array); 0 = uncapped, and a
+  * negative value is rejected ([[graft.operators.Dedup.requireBucketCap]]).
   */
 object StreamingHammingMatch {
 
@@ -39,12 +39,7 @@ object StreamingHammingMatch {
   def matchHashed(streamHashed: DataFrame, corpusHashed: DataFrame,
       totalBits: Int, maxHamming: Int, nBands: Int,
       maxBucket: Long): DataFrame = {
-    // same sentinel contract as the batch band joins: 0 = uncapped,
-    // > 0 = explicit cap, Dedup.AutoBucket = auto-decide; other
-    // negatives reject loudly instead of silently disabling the guard
-    require(maxBucket >= Dedup.AutoBucket,
-      s"maxBucket=$maxBucket: 0 = uncapped, > 0 = explicit cap, " +
-        s"${Dedup.AutoBucket} = auto")
+    Dedup.requireBucketCap(maxBucket)
     require(nBands > 0 && totalBits % nBands == 0,
       s"nBands=$nBands must divide $totalBits")
     val width = totalBits / nBands
@@ -54,28 +49,15 @@ object StreamingHammingMatch {
     // static side: one fingerprint pass feeds the hash table AND
     // every band index
     val corpusH = mat(corpusHashed)
-    val rawIdx = (0 until nBands).map { j =>
-      mat(corpusH
-        .withColumn(s"__bv_$j", shiftright(col("__rh"), width * j).bitwiseAND(lit(mask)))
-        .groupBy(col(s"__bv_$j"))
-        .agg(collect_set(col("right_id")).as(s"__cand_$j")))
-    }
-    // AutoBucket: the hottest bucket width is a max over the already
-    // materialized per-band candidate arrays (no extra corpus pass);
-    // the engage crossover is Dedup's (same conf keys)
-    val cap =
-      if (maxBucket == Dedup.AutoBucket) {
-        val hottest = (0 until nBands).map { j =>
-          val r = rawIdx(j).agg(max(size(col(s"__cand_$j")))).head()
-          if (r.isNullAt(0)) 0L else r.getInt(0).toLong
-        }.max
-        Dedup.autoCapDecision(corpusHashed.sparkSession, hottest)
-      } else maxBucket
     // cap filters run over the materialized index blocks — cheap, and
     // the filtered frames need no re-checkpoint
     val bandIdx = (0 until nBands).map { j =>
-      if (cap <= 0) rawIdx(j)
-      else rawIdx(j).filter(size(col(s"__cand_$j")) <= cap)
+      val idx = mat(corpusH
+        .withColumn(s"__bv_$j", shiftright(col("__rh"), width * j).bitwiseAND(lit(mask)))
+        .groupBy(col(s"__bv_$j"))
+        .agg(collect_set(col("right_id")).as(s"__cand_$j")))
+      if (maxBucket == 0) idx
+      else idx.filter(size(col(s"__cand_$j")) <= maxBucket)
     }
 
     var out = streamHashed

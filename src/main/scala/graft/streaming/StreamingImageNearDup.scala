@@ -10,7 +10,7 @@ import graft.operators.Multimodal
   * dHash, the M5 kernel) and matched against a STATIC corpus
   * fingerprint index with ZERO streaming state through the generic
   * band-match core ([[StreamingHammingMatch]] — index shape, the
-  * pigeonhole exactness argument, and the AutoBucket cap contract
+  * pigeonhole exactness argument, and the `maxBucket` cap contract
   * documented there); the spec pins the streamed pair set equal to a
   * brute-force stream x corpus scan.
   */

@@ -21,6 +21,17 @@ class SessionSpec extends AnyFunSuite {
       .getMessage.contains("'=v'"))
   }
 
+  test("SPARK_GRAFT_CONF: a graft.* key other than graft.materializer fails naming the token") {
+    assert(Session.parseConf("graft.materializer=lazy;spark.sql.adaptive.enabled=false") ==
+      Seq("graft.materializer" -> "lazy", "spark.sql.adaptive.enabled" -> "false"))
+    for (token <- Seq("graft.rankKernel=bucket", " graft.bucketCap.autoThreshold=5",
+        "graft.gramSet.broadcastMaxRows=7", "graft.materializerr=lazy")) {
+      val e = intercept[IllegalArgumentException](
+        Session.parseConf(s"spark.sql.adaptive.enabled=false;$token"))
+      assert(e.getMessage.contains(s"'$token'"), e.getMessage)
+    }
+  }
+
   test("SPARK_GRAFT_CONF entries come after, so override, the helper's defaults") {
     val s = Session.settings("4", Seq("spark.sql.adaptive.enabled" -> "false"),
       Some("spark.sql.adaptive.enabled=true;spark.sql.shuffle.partitions=8"))

@@ -414,33 +414,24 @@ class DedupSpec extends SparkSuite {
   test("sizedGramSide flips broadcast -> sort-merge exactly at the conf cap") {
     // the SURVEY §28.6 broadcast guard: the eval gram side must be an
     // EXPLICIT hint both ways — estimates cannot be trusted across an
-    // explode (see Dedup.GramBroadcastMaxRowsKey scaladoc)
+    // explode (see Dedup.GramBroadcastMaxRows scaladoc)
+    import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, ResolvedHint, SHUFFLE_MERGE}
+    def hintOf(rows: Long) =
+      Dedup.sizedGramSide(spark.range(rows).toDF("sh"))
+        .queryExecution.analyzed.collect { case h: ResolvedHint => h.hints.strategy }
+    assert(Dedup.GramBroadcastMaxRows == 1000000L)
+    assert(hintOf(Dedup.GramBroadcastMaxRows) == Seq(Some(BROADCAST)), "cap is inclusive")
+    assert(hintOf(Dedup.GramBroadcastMaxRows + 1) == Seq(Some(SHUFFLE_MERGE)))
+    // end to end: a tiny eval gram side broadcasts into the semi join
     val passage = (1 to 10).map(i => s"G$i").mkString(" ")
     val train = Seq((1L, s"t1 t2 $passage t3")).toDF("doc_id", "text")
     val evalc = Seq((100L, s"e1 $passage e2")).toDF("doc_id", "text")
-    def semiOf(): String = {
-      val df = Dedup.scrubContamination(train, evalc, "doc_id", "text", 5, 8)
-      df.collect() // finalize THIS queryExecution's adaptive plan
-      val plan = df.queryExecution.executedPlan.toString
-      "(BroadcastHashJoin|SortMergeJoin)[^\\n]*LeftSemi".r
-        .findAllMatchIn(plan).map(_.group(1)).toSeq.distinct.mkString("+")
-    }
-    // eval passage "e1 <10 tokens> e2" has 8 distinct 5-grams: a cap
-    // of 7 forces the merge hint, the default cap (1M) broadcasts
-    spark.conf.set(Dedup.GramBroadcastMaxRowsKey, "7")
-    try assert(semiOf() == "SortMergeJoin")
-    finally spark.conf.unset(Dedup.GramBroadcastMaxRowsKey)
-    assert(semiOf() == "BroadcastHashJoin")
-    spark.conf.set(Dedup.GramBroadcastMaxRowsKey, "8")
-    try assert(semiOf() == "BroadcastHashJoin", "cap is inclusive")
-    finally spark.conf.unset(Dedup.GramBroadcastMaxRowsKey)
-    // conf validation mirrors the bucketCap style: loud, names the key
-    spark.conf.set(Dedup.GramBroadcastMaxRowsKey, "lots")
-    try {
-      val e = intercept[IllegalArgumentException](
-        Dedup.scrubContamination(train, evalc, "doc_id", "text", 5, 8))
-      assert(e.getMessage.contains(Dedup.GramBroadcastMaxRowsKey))
-    } finally spark.conf.unset(Dedup.GramBroadcastMaxRowsKey)
+    val df = Dedup.scrubContamination(train, evalc, "doc_id", "text", 5, 8)
+    df.collect() // finalize THIS queryExecution's adaptive plan
+    val semi = "(BroadcastHashJoin|SortMergeJoin)[^\\n]*LeftSemi".r
+      .findAllMatchIn(df.queryExecution.executedPlan.toString)
+      .map(_.group(1)).toSeq.distinct
+    assert(semi == Seq("BroadcastHashJoin"))
   }
 
   test("decontamination scrub: repeats WITHIN train never trigger removal") {
@@ -645,98 +636,29 @@ class DedupSpec extends SparkSuite {
     (carriers ++ planted).toDF("doc_id", "text")
   }
 
-  test("lsh AutoBucket engages on a degenerate bucket, equals the " +
-      "explicit cap, and keeps the planted near-dup") {
+  test("lsh explicit cap drops the block-dominated buckets and keeps " +
+      "the planted near-dup") {
     val corpus = skewedCorpus
     def pairSet(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"))).toSet
     val uncapped = pairSet(
       Dedup.minhashLsh(corpus, "doc_id", "text", 3, 1, 2))
-    val explicit = pairSet(
+    val capped = pairSet(
       Dedup.minhashLsh(corpus, "doc_id", "text", 3, 1, 2, maxBucket = 10))
-    spark.conf.set(Dedup.BucketCapAutoThresholdKey, "5")
-    spark.conf.set(Dedup.BucketCapAutoValueKey, "10")
-    try {
-      val auto = pairSet(Dedup.minhashLsh(corpus, "doc_id", "text", 3, 1, 2,
-        maxBucket = Dedup.AutoBucket))
-      assert(auto == explicit)
-      assert(auto.contains((900L, 901L)))
-      // the cap really engaged: the block-dominated pairs are gone
-      assert(auto.subsetOf(uncapped) && auto.size < uncapped.size)
-    } finally {
-      spark.conf.unset(Dedup.BucketCapAutoThresholdKey)
-      spark.conf.unset(Dedup.BucketCapAutoValueKey)
-    }
-  }
-
-  test("lsh AutoBucket stays uncapped below the threshold") {
-    // default threshold (4000) - nothing in the 4-doc corpus is hot
-    val uncapped = Dedup.minhashLsh(docs, "doc_id", "text", 3, 1, 2)
-      .collect().map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"))).toSet
-    val auto = Dedup.minhashLsh(docs, "doc_id", "text", 3, 1, 2,
-        maxBucket = Dedup.AutoBucket)
-      .collect().map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"))).toSet
-    assert(auto == uncapped && auto.contains((1L, 2L)))
-  }
-
-  test("AutoBucket on an empty corpus returns empty (decision sees " +
-      "a NULL max)") {
-    val empty = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      docs.schema)
-    assert(Dedup.minhashLsh(empty, "doc_id", "text", 3, 1, 2,
-      maxBucket = Dedup.AutoBucket).count() == 0)
-  }
-
-  test("bucketCap conf values are validated loudly, naming the key") {
-    spark.conf.set(Dedup.BucketCapAutoThresholdKey, "not-a-number")
-    try {
-      val e = intercept[IllegalArgumentException](
-        Dedup.minhashLsh(docs, "doc_id", "text", 3, 1, 2,
-          maxBucket = Dedup.AutoBucket))
-      assert(e.getMessage.contains(Dedup.BucketCapAutoThresholdKey))
-    } finally spark.conf.unset(Dedup.BucketCapAutoThresholdKey)
-    // autoValue <= 0 rejects instead of silently behaving as uncapped
-    // on an "engaged" decision
-    spark.conf.set(Dedup.BucketCapAutoValueKey, "0")
-    try {
-      val e = intercept[IllegalArgumentException](
-        Dedup.minhashLsh(docs, "doc_id", "text", 3, 1, 2,
-          maxBucket = Dedup.AutoBucket))
-      assert(e.getMessage.contains(Dedup.BucketCapAutoValueKey))
-    } finally spark.conf.unset(Dedup.BucketCapAutoValueKey)
+    assert(capped.contains((900L, 901L)))
+    assert(capped.subsetOf(uncapped) && capped.size < uncapped.size)
   }
 
   test("maxBucket below the AutoBucket sentinel is rejected loudly") {
-    intercept[IllegalArgumentException](
-      Dedup.minhashLsh(docs, "doc_id", "text", 3, 1, 2, maxBucket = -2L))
-    intercept[IllegalArgumentException](
-      Dedup.bandedHammingPairs(Seq((1L, 7L)).toDF("doc_id", "h"),
-        "doc_id", "h", 30, 5, 1, maxBucket = -2L))
-  }
-
-  test("bandedHamming AutoBucket drops the degenerate fingerprint " +
-      "bucket and keeps the width-2 pair") {
-    // 30 docs share one flat fingerprint (every band bucket width 30);
-    // two docs one bit apart share 4-of-5 bands at width 2
-    val flat = (0 until 30).map(i => (100L + i, 12345L))
-    val planted = Seq((1L, 1L << 20), (2L, (1L << 20) | 1L))
-    val hashes = (flat ++ planted).toDF("doc_id", "h")
-    spark.conf.set(Dedup.BucketCapAutoThresholdKey, "5")
-    spark.conf.set(Dedup.BucketCapAutoValueKey, "4")
-    try {
-      val auto = Dedup.bandedHammingPairs(hashes, "doc_id", "h",
-          totalBits = 30, nBands = 5, maxHamming = 1,
-          maxBucket = Dedup.AutoBucket)
-        .collect().map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"))).toSet
-      assert(auto == Set((1L, 2L)))
-      val explicit = Dedup.bandedHammingPairs(hashes, "doc_id", "h",
-          totalBits = 30, nBands = 5, maxHamming = 1, maxBucket = 4)
-        .collect().map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"))).toSet
-      assert(auto == explicit)
-    } finally {
-      spark.conf.unset(Dedup.BucketCapAutoThresholdKey)
-      spark.conf.unset(Dedup.BucketCapAutoValueKey)
+    // no negative value has a meaning, -1 included
+    for (bad <- Seq(-1L, -2L)) {
+      intercept[IllegalArgumentException](
+        Dedup.minhashLsh(docs, "doc_id", "text", 3, 1, 2, maxBucket = bad))
+      intercept[IllegalArgumentException](
+        Dedup.bandedHammingPairs(Seq((1L, 7L)).toDF("doc_id", "h"),
+          "doc_id", "h", 30, 5, 1, maxBucket = bad))
+      intercept[IllegalArgumentException](
+        Dedup.simhashNearDup(docs, "doc_id", "text", 3, maxBucket = bad))
     }
   }
 }

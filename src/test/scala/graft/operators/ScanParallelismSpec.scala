@@ -4,12 +4,14 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSuite
 
-/** Pins the r18 `plannedScanSplits` probe (the cheap replacement for
-  * the guard's `df.rdd.getNumPartitions`, ADVICE r17) and the guard's
-  * identity on a WELL-SPLIT input — the multi-file evidence VERDICT
-  * r17 #7 asked for: on an input whose scan already yields at least
-  * half the session's cores of splits, `withScanParallelism` must
-  * return the SAME DataFrame (no repartition, no extra exchange).
+/** Pins the `plannedScanSplits` probe (the cheap replacement for the
+  * guard's `df.rdd.getNumPartitions`, ADVICE r17), its fallback to the
+  * exact probe where file listing alone cannot tell the split count
+  * (ADVICE r18), and the guard's identity on a WELL-SPLIT input — the
+  * multi-file evidence VERDICT r17 #7 asked for: on an input whose scan
+  * already yields at least half the session's cores of splits,
+  * `withScanParallelism` must return the SAME DataFrame (no
+  * repartition, no extra exchange).
   */
 class ScanParallelismSpec extends SparkSuite {
   import spark.implicits._
@@ -38,6 +40,21 @@ class ScanParallelismSpec extends SparkSuite {
     assert(Dedup.plannedScanSplits(df.groupBy("doc_id").count()).isEmpty)
     assert(Dedup.plannedScanSplits(df.join(df, "doc_id")).isEmpty)
     assert(Dedup.plannedScanSplits(df.distinct()).isEmpty)
+  }
+
+  test("a partitioned scan pruned to no files decides from the exact probe") {
+    // 8 partition directories: listing them all would count 8+ splits,
+    // but the filter prunes every one, so the scan has no split at all
+    val dir = "/tmp/graft_scanpar_parts"
+    (0L until 400L).map(i => (i, s"doc $i text", i % 8)).toDF("doc_id", "text", "p")
+      .write.mode("overwrite").partitionBy("p").parquet(dir)
+    val df = spark.read.parquet(dir).filter(col("p") === 99)
+      .select(col("doc_id"), col("text"))
+    assert(Dedup.plannedScanSplits(df).isEmpty)
+    assert(df.rdd.getNumPartitions * 2 < spark.sparkContext.defaultParallelism)
+    val guarded = Dedup.withScanParallelism(df, Seq(col("doc_id")))
+    assert(guarded ne df, "an under-split scan must be repartitioned")
+    assert(guarded.collect().isEmpty)
   }
 
   test("guard is the IDENTITY on a well-split scan (no extra exchange)") {

@@ -4,7 +4,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.SparkSuite
-import graft.operators.{Dedup, Multimodal}
+import graft.operators.Multimodal
 
 final case class MediaRow(doc_id: Long, media: Array[Byte])
 
@@ -70,34 +70,27 @@ class StreamingImageNearDupSpec extends SparkSuite {
     } finally query.stop()
   }
 
-  test("matchAgainst AutoBucket engages on a flat corpus and stays " +
-      "uncapped below the threshold") {
+  test("matchAgainst explicit cap drops a flat corpus bucket, keeps " +
+      "one at the cap") {
     // three corpus images with IDENTICAL rasters (the 5376 synthesis
     // period): every band bucket has width 3
     val flat = Seq(3L, 3L + 5376L, 3L + 2 * 5376L)
     val probe = Seq(3L + 3 * 5376L)
-    spark.conf.set(Dedup.BucketCapAutoValueKey, "2")
-    try {
-      // hottest (3) >= threshold (3): cap 2 drops every flat bucket,
-      // so the identical probe finds NO candidates
-      spark.conf.set(Dedup.BucketCapAutoThresholdKey, "3")
-      assert(runOnce(flat, probe, "img_auto_on", Dedup.AutoBucket).isEmpty)
-      // hottest (3) < threshold (4): uncapped, all three pairs match
-      spark.conf.set(Dedup.BucketCapAutoThresholdKey, "4")
-      assert(runOnce(flat, probe, "img_auto_off", Dedup.AutoBucket) ==
-        flat.map(r => (probe.head, r)).toSet)
-    } finally {
-      spark.conf.unset(Dedup.BucketCapAutoThresholdKey)
-      spark.conf.unset(Dedup.BucketCapAutoValueKey)
-    }
+    // cap 2 drops every flat bucket, so the identical probe finds NO
+    // candidates; cap 3 keeps them and all three pairs match
+    assert(runOnce(flat, probe, "img_cap_2", 2L).isEmpty)
+    assert(runOnce(flat, probe, "img_cap_3", 3L) ==
+      flat.map(r => (probe.head, r)).toSet)
   }
 
   test("matchAgainst rejects negatives below the AutoBucket sentinel") {
     implicit val ctx = spark.sqlContext
     val in = MemoryStream[MediaRow]
-    intercept[IllegalArgumentException](
-      StreamingImageNearDup.matchAgainst(in.toDF(),
-        mediaOf(corpusIds).toDF(), "doc_id", "media", maxBucket = -2L))
+    // no negative value has a meaning, -1 included
+    for (bad <- Seq(-1L, -2L))
+      intercept[IllegalArgumentException](
+        StreamingImageNearDup.matchAgainst(in.toDF(),
+          mediaOf(corpusIds).toDF(), "doc_id", "media", maxBucket = bad))
   }
 
   test("append mode, zero streaming state: plan has no stateful operator") {
