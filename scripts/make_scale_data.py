@@ -68,7 +68,7 @@ def main():
             pc.max(loaded[t].column(c)).as_py()
             for t, cols in fam.items() for c in cols
             if c in loaded[t].schema.names)
-        s = stride(fam_max * k)
+        s = stride(fam_max)
         for t, cols in fam.items():
             for c in cols:
                 col_stride[(t, c)] = s

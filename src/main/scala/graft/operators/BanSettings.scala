@@ -65,7 +65,8 @@ object BanSettings {
       if (removeExisting) cur.filter(col("name") =!= "global")
       else cur.join(generated.select(col("name")), Seq("name"), "left_semi")
     // one projection pads the remove rows with typed nulls (this runs
-    // once per finalized window in StreamingHostgroups' foreachBatch)
+    // once per finalizing trigger in StreamingHostgroups' foreachBatch,
+    // over that trigger's collected windows as a one-partition frame)
     removals.select(
         Seq(lit(0).as("step"), lit("remove").as("action"), col("name")) ++
           extras.map(c => lit(null).cast(generated.schema(c).dataType).as(c)): _*)
