@@ -4,7 +4,7 @@ import org.apache.spark.sql.{AnalysisException, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-import graft.functions.{BytesToIp6, CmsEstimate, CountMinAgg, DotProduct, HeavyHittersAgg, Ip4ToNum, Ip6ToBytes, MomentsAgg, NumToIp4, TopKAgg, ZOrder2}
+import graft.functions.{BytesToIp6, CmsEstimate, CountMinAgg, DotProduct, Ip4ToNum, Ip6ToBytes, MomentsAgg, NumToIp4, TopKAgg, ZOrder2}
 
 /** Spark extension entry point: registers graft's native expressions
   * into the session's function registry, so the library's surface is
@@ -73,14 +73,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       FunctionIdentifier("graft_zorder2"),
       new ExpressionInfo(classOf[ZOrder2].getName, "graft_zorder2"),
       (args: Seq[Expression]) => { arity("graft_zorder2", 2, args); ZOrder2(args(0), args(1)) }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_heavy_hitters"),
-      new ExpressionInfo(classOf[HeavyHittersAgg].getName, "graft_heavy_hitters"),
-      (args: Seq[Expression]) => {
-        arity("graft_heavy_hitters", 2, args)
-        val k = intLiteral("graft_heavy_hitters", args(1))
-        HeavyHittersAgg(args(0), k).toAggregateExpression()
-      }))
     ext.injectFunction((
       FunctionIdentifier("graft_topk"),
       new ExpressionInfo(classOf[TopKAgg].getName, "graft_topk"),

@@ -15,8 +15,8 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Count-min sketch (Cormode & Muthukrishnan, J. Algorithms 2005):
   * approximate per-item frequency with depth x width longs of state —
-  * the frequency counterpart of A10's HLL distinct. Where Misra-Gries
-  * (graft_heavy_hitters) answers "which items are hot", CMS answers
+  * the frequency counterpart of A10's HLL distinct. Where the heavy
+  * hitters (`approx_top_k`) answer "which items are hot", CMS answers
   * "how often is THIS item seen" for any item, without shuffling the
   * distinct-item set: a 100 TB scan aggregates to one depth x width
   * grid per group (mergeable, map-side combinable), and lookups are
@@ -27,6 +27,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * epsilon = e / width, delta = e^-depth — the banded self-check the
   * gate asserts. Both the aggregate and [[CountMin.estimate]] hash
   * through the SAME private function, so the pair cannot drift.
+  *
+  * Why not Spark's `count_min_sketch`: it has no SQL estimate
+  * function, and the streaming twin estimates each batch's own items
+  * against the cumulative grid, which a streaming aggregation's output
+  * cannot carry.
   */
 object CountMin {
 

@@ -1,141 +1,53 @@
 package graft.functions
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
-
-import scala.collection.mutable
-
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.functions.{array_sort, call_function, lit, slice, when}
 
-/** Misra-Gries heavy hitters as a custom TypedImperativeAggregate:
-  * top frequent strings per group with O(k) state per group regardless
-  * of group size — the sketch counterpart of an exact
-  * groupBy(item).count().orderBy.limit(k), which shuffles every
-  * distinct item. Guarantees: any item with frequency > n/(k+1) is
-  * present; reported counts undercount by at most n/(k+1).
+/** Heavy hitters on Spark's `approx_top_k` sketch family: the top k
+  * most frequent items of a column per group, the sketch counterpart
+  * of an exact groupBy(item).count().orderBy.limit(k), which shuffles
+  * every distinct item. The batch form calls `approx_top_k`; the
+  * streaming twin ([[graft.streaming.StreamingHeavyHitters]]) keeps an
+  * `approx_top_k_accumulate` sketch as its aggregation state and reads
+  * it with `approx_top_k_estimate`. Both pass through [[top]].
   *
-  * State is mergeable (map-side partial aggregation works), serialized
-  * compactly between stages. Registered in SQL as
-  * graft_heavy_hitters(col, k) by [[graft.GraftExtensions]].
+  * Range: counts are EXACT while a group's distinct items fit the
+  * sketch's capacity ([[MaxItemsTracked]], Spark's default
+  * `maxItemsTracked`), whatever k is; per-group state is bounded by
+  * that capacity, not by k. Past it the sketch purges and counts
+  * become estimates. A NULL item counts as an item.
+  *
+  * Ties: with a plain `approx_top_k(c, k)`, which tied items survive
+  * the cut, and their order, depend on input order. So the sketch is
+  * asked for every tracked item and [[top]] sorts by (count DESC,
+  * item ASC) before slicing to k — the same rows as
+  * `ORDER BY n DESC, item` over exact counts.
   */
-case class HeavyHittersAgg(
-    child: Expression,
-    k: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[mutable.HashMap[UTF8String, Long]] {
-
-  override def children: Seq[Expression] = Seq(child)
-  override def nullable: Boolean = false
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("item", StringType), StructField("count", LongType))))
-  override def prettyName: String = "graft_heavy_hitters"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType && k > 0) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires (string column, k > 0)")
-
-  override def createAggregationBuffer(): mutable.HashMap[UTF8String, Long] =
-    mutable.HashMap.empty
-
-  override def update(
-      buf: mutable.HashMap[UTF8String, Long],
-      input: InternalRow): mutable.HashMap[UTF8String, Long] = {
-    val v = child.eval(input)
-    if (v != null) {
-      val key = v.asInstanceOf[UTF8String]
-      buf.get(key) match {
-        case Some(c) => buf.update(key, c + 1)
-        case None if buf.size < k => buf.update(key.clone(), 1L)
-        case None => // decrement-all step of Misra-Gries
-          val dead = mutable.ArrayBuffer.empty[UTF8String]
-          buf.keysIterator.foreach { key2 =>
-            val c = buf(key2) - 1
-            if (c <= 0) dead += key2 else buf.update(key2, c)
-          }
-          dead.foreach(buf.remove)
-      }
-    }
-    buf
-  }
-
-  override def merge(
-      buf: mutable.HashMap[UTF8String, Long],
-      other: mutable.HashMap[UTF8String, Long]): mutable.HashMap[UTF8String, Long] = {
-    other.foreach { case (key, c) =>
-      buf.update(key, buf.getOrElse(key, 0L) + c)
-    }
-    if (buf.size > k) {
-      // subtract the (k+1)-th largest count from everything (the
-      // mergeable-MG reduction), then drop non-positive entries
-      val counts = buf.values.toArray.sorted(Ordering[Long].reverse)
-      val cut = counts(k)
-      val dead = mutable.ArrayBuffer.empty[UTF8String]
-      buf.keysIterator.foreach { key =>
-        val c = buf(key) - cut
-        if (c <= 0) dead += key else buf.update(key, c)
-      }
-      dead.foreach(buf.remove)
-    }
-    buf
-  }
-
-  override def eval(buf: mutable.HashMap[UTF8String, Long]): Any = {
-    val sorted = buf.toSeq.sortBy { case (key, c) => (-c, key) }
-    new GenericArrayData(sorted.map { case (key, c) =>
-      InternalRow(key, c)
-    }.toArray[Any])
-  }
-
-  override def serialize(buf: mutable.HashMap[UTF8String, Long]): Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
-    val out = new DataOutputStream(bos)
-    out.writeInt(buf.size)
-    buf.foreach { case (key, c) =>
-      val b = key.getBytes
-      out.writeInt(b.length)
-      out.write(b)
-      out.writeLong(c)
-    }
-    out.flush()
-    bos.toByteArray
-  }
-
-  override def deserialize(bytes: Array[Byte]): mutable.HashMap[UTF8String, Long] = {
-    val in = new DataInputStream(new ByteArrayInputStream(bytes))
-    val n = in.readInt()
-    val buf = mutable.HashMap.empty[UTF8String, Long]
-    var i = 0
-    while (i < n) {
-      val len = in.readInt()
-      val b = new Array[Byte](len)
-      in.readFully(b)
-      buf.update(UTF8String.fromBytes(b), in.readLong())
-      i += 1
-    }
-    buf
-  }
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): HeavyHittersAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): HeavyHittersAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): HeavyHittersAgg =
-    copy(child = newChildren.head)
-}
-
 object HeavyHitters {
-  /** Column-level entry: top-k heavy hitters of a string column. */
+
+  /** The sketch's tracked-item capacity, and so the largest k. */
+  val MaxItemsTracked: Int = 10000
+
+  /** Column-level entry: top-k heavy hitters of a string column, typed
+    * `array<struct<item: string, count: bigint>>` with nullable
+    * elements and fields (`approx_top_k` declares them non-null), so
+    * the schema callers and written files see stays what this
+    * function has always declared.
+    */
   def heavyHitters(c: Column, k: Int): Column =
-    Bridge.column(HeavyHittersAgg(Bridge.expression(c), k)
-      .toAggregateExpression())
+    top(call_function("approx_top_k", c, lit(MaxItemsTracked),
+      lit(MaxItemsTracked)), k)
+      .cast("array<struct<item:string,count:bigint>>")
+
+  /** The first k of a sketch's array<struct<item, count>> by
+    * (count DESC, item ASC).
+    */
+  def top(items: Column, k: Int): Column = {
+    require(k > 0 && k <= MaxItemsTracked,
+      s"heavy hitters: k=$k (want 1..$MaxItemsTracked)")
+    slice(array_sort(items, (a, b) =>
+      when(a("count") > b("count"), -1).when(a("count") < b("count"), 1)
+        .when(a("item") < b("item"), -1).when(a("item") > b("item"), 1)
+        .otherwise(0)), 1, k)
+  }
 }

@@ -36,6 +36,9 @@ import org.apache.spark.sql.types._
   *
   * Buffer layout: count, then d 128-bit Σx cells, then d(d+1)/2
   * 128-bit Σx_i·x_j upper-triangle cells (row-major, j >= i).
+  *
+  * Why not a Spark built-in: no built-in aggregate gives these exact
+  * decimal moments, bit-equal to `Pca`'s path.
   */
 object Moments {
 
@@ -55,8 +58,8 @@ object Moments {
       .doubleValue()
   }
 
-  // ---- the shared fold kernel: the batch aggregate and the streaming
-  // ---- twin (graft.streaming.StreamingMoments) run THESE functions,
+  // ---- the fold kernel of [[MomentsAgg]]; the streaming twin
+  // ---- (graft.streaming.StreamingMoments) runs the aggregate itself,
   // ---- so a streamed buffer and a batch buffer over identical rows
   // ---- are the same Array[Long] by construction (spec-pinned)
 

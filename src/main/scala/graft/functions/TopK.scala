@@ -36,6 +36,10 @@ import org.apache.spark.sql.types._
   * the two plans are row-identical; callers with nullable or NaN-able
   * values must normalize (filter or coalesce) before relying on
   * window-parity.
+  *
+  * Why not a Spark built-in: Spark 4.1.2's `max_by` takes no k
+  * (`max_by(x, y, 2)` raises `WRONG_NUM_ARGS`), and `approx_top_k`
+  * ranks by frequency, not by value.
   */
 case class TopKAgg(
     value: Expression,

@@ -1049,10 +1049,10 @@ object PipelineQueries {
       .orderBy("domain")
   }
 
-  // A16: per-language token heavy hitters via the custom Misra-Gries
-  // TypedImperativeAggregate. k=64 exceeds every group's distinct
-  // token count (31), so the sketch is exact here and the oracle can
-  // check it; under-k domains are where MG guarantees exactness.
+  // A16: per-language token heavy hitters via Spark's approx_top_k
+  // sketch. Every group's distinct tokens (31 at most) fit the
+  // sketch's capacity, so counts are exact and the oracle can check
+  // them; ties are cut by item, as in the oracle's ORDER BY n DESC, item.
   def qHeavyHitters(s: SparkSession, dir: String): DataFrame =
     t(s, dir, "documents")
       .select(col("lang"), explode(TextAnalysis.tokens(col("text"))).as("tok"))

@@ -9,10 +9,9 @@ import graft.functions.CountMin
 /** Streaming twin of the count-min aggregate (A53): a continuously-
   * maintained CMS grid per group, answering "how often has THIS item
   * been seen so far" for every item as it arrives — the live
-  * frequency panel next to the Misra-Gries top-k
-  * (StreamingHeavyHitters), with the same state bound (depth x width
-  * longs per group forever, no watermark needed) but point-lookup
-  * semantics instead of top-k.
+  * frequency panel next to the top-k (StreamingHeavyHitters), with a
+  * fixed state bound (depth x width longs per group forever, no
+  * watermark needed) and point-lookup semantics instead of top-k.
   *
   * The grid hashes through CountMin.hashAt — the SAME function as the
   * batch aggregate and the graft_cms_estimate expression — so a
@@ -24,6 +23,9 @@ import graft.functions.CountMin
   *
   * Each micro-batch emits the refreshed estimate for the batch's
   * DISTINCT items (Update mode) plus the group's exact row total.
+  * That is why it stays a `flatMapGroupsWithState` fold: it estimates
+  * each batch's own items against the cumulative grid, which a
+  * streaming aggregation's output cannot carry.
   */
 object StreamingCountMin {
 

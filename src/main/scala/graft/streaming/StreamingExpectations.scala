@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** V1s: streaming data-contract audit — the live twin of
   * [[graft.operators.Expectations.audit]]: every arriving row is
@@ -23,10 +22,10 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *     all row-local/stateless, then each row emits one key row per
   *     VIOLATED expectation plus one row-counter key — a <= nExp+1
   *     config-sized fanout;
-  *   - [[counts]] (stateful): ONE LONG of state per key, key domain
-  *     bounded by nExp+1 forever. Counters are a commutative monoid:
-  *     late or reordered rows fold EXACTLY at any depth, no
-  *     watermark;
+  *   - [[counts]] (stateful): a streaming `count` aggregation — ONE
+  *     LONG of state per key, key domain bounded by nExp+1 forever.
+  *     Counters are a commutative monoid: late or reordered rows fold
+  *     EXACTLY at any depth, no watermark;
   *   - the report is the batch [[graft.operators.Expectations
   *     .assembleAudit]] tail SHARED over the compacted latest-emit
   *     snapshot — the fail_rate/pass semantics (including
@@ -87,18 +86,7 @@ object StreamingExpectations {
   def counts(keys: Dataset[KeyRow]): Dataset[KeyCount] = {
     val spark = keys.sparkSession
     import spark.implicits._
-
-    def update(key: Long, rows: Iterator[KeyRow],
-        state: GroupState[Long]): Iterator[KeyCount] = {
-      var n = state.getOption.getOrElse(0L)
-      rows.foreach(_ => n += 1L)
-      state.update(n)
-      Iterator.single(KeyCount(key, n))
-    }
-
-    keys.groupByKey(_.exp_no)
-      .flatMapGroupsWithState(
-        OutputMode.Update(), GroupStateTimeout.NoTimeout())(update)
+    keys.groupBy(col("exp_no")).agg(count(lit(1)).as("c")).as[KeyCount]
   }
 
   /** The audit report over a compacted (exp_no, c) snapshot: rebuild

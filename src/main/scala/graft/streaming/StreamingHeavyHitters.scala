@@ -1,26 +1,28 @@
 package graft.streaming
 
-import scala.collection.mutable
-
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.functions.{call_function, col, lit, posexplode}
 
-/** Streaming counterpart of the Misra-Gries heavy-hitters aggregate
+import graft.functions.HeavyHitters
+
+/** Streaming counterpart of the heavy-hitters aggregate
   * (graft.functions.HeavyHitters): a continuously-maintained top-k of
-  * a string column per group, with O(k) state per group no matter how
-  * long the stream runs — the live "top talkers / top tokens" panel
-  * next to the batch sketch.
+  * a string column per group — the live "top talkers / top tokens"
+  * panel next to the batch sketch.
   *
-  * Same MG semantics as the batch TypedImperativeAggregate (insert
-  * below capacity, decrement-all at capacity), so the same guarantees
-  * hold per group: any item with frequency > n/(k+1) over the stream
-  * so far is present, counts undercount by at most n/(k+1), and when
-  * the group's distinct-item count never exceeds k the counts are
-  * EXACT (asserted against the batch aggregate in the spec).
+  * A Spark streaming aggregation: the per-group state is Spark's
+  * `approx_top_k_accumulate` sketch, read each micro-batch with
+  * `approx_top_k_estimate` and cut to k by the batch's own
+  * [[HeavyHitters.top]], so both modes rank (count DESC, item ASC).
+  * Counts are EXACT while a group's distinct items fit the sketch's
+  * capacity (`HeavyHitters.MaxItemsTracked`), whatever k is (asserted
+  * against the batch aggregate in the spec). State per group is
+  * bounded by that capacity, not by k; the output is capped at k.
   *
-  * Each micro-batch emits the group's refreshed top list (Update
-  * mode); state never grows past k entries, so no watermark/timeout is
-  * needed for boundedness.
+  * Each micro-batch emits the touched groups' refreshed top lists
+  * (Update mode). The state schema is the sketch, so a checkpoint
+  * written by the former Misra-Gries `flatMapGroupsWithState` form
+  * cannot be restored.
   */
 object StreamingHeavyHitters {
 
@@ -29,35 +31,17 @@ object StreamingHeavyHitters {
   final case class TopItem(grp: String, pos: Int, item: String, count: Long)
 
   def topK(items: DataFrame, k: Int): Dataset[TopItem] = {
-    require(k > 0, s"invalid k=$k")
     val spark = items.sparkSession
     import spark.implicits._
-
-    def update(grp: String, rows: Iterator[Item],
-        state: GroupState[Map[String, Long]]): Iterator[TopItem] = {
-      val buf = mutable.HashMap.empty[String, Long]
-      buf ++= state.getOption.getOrElse(Map.empty)
-      rows.foreach { r =>
-        buf.get(r.item) match {
-          case Some(c) => buf.update(r.item, c + 1)
-          case None if buf.size < k => buf.update(r.item, 1L)
-          case None => // decrement-all step of Misra-Gries
-            val dead = mutable.ArrayBuffer.empty[String]
-            buf.keysIterator.foreach { it =>
-              val c = buf(it) - 1
-              if (c <= 0) dead += it else buf.update(it, c)
-            }
-            dead.foreach(buf.remove)
-        }
-      }
-      state.update(buf.toMap)
-      buf.toSeq.sortBy { case (it, c) => (-c, it) }.zipWithIndex.iterator
-        .map { case ((it, c), pos) => TopItem(grp, pos, it, c) }
-    }
-
-    items.as[Item]
-      .groupByKey(_.grp)
-      .flatMapGroupsWithState(
-        OutputMode.Update(), GroupStateTimeout.NoTimeout())(update)
+    val tracked = lit(HeavyHitters.MaxItemsTracked)
+    items.as[Item].groupBy(col("grp"))
+      .agg(call_function("approx_top_k_accumulate", col("item"), tracked)
+        .as("sketch"))
+      .select(col("grp"), posexplode(HeavyHitters.top(
+        call_function("approx_top_k_estimate", col("sketch"), tracked), k))
+        .as(Seq("pos", "e")))
+      .select(col("grp"), col("pos"), col("e.item").as("item"),
+        col("e.count").as("count"))
+      .as[TopItem]
   }
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** F2s: streaming per-rule marginals — the live twin of
   * [[graft.operators.QualityCascade.marginals]], completing the
@@ -19,10 +18,11 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *     it FAILS plus one `nRules` row (the doc counter) — a
   *     config-sized fanout (<= nRules+1 per doc), not a shuffle
   *     amplifier;
-  *   - [[counts]] (stateful): ONE LONG of state per key, key domain
-  *     bounded by nRules+1 forever — the F1s state class. Counters
-  *     are a commutative monoid: late or reordered docs fold EXACTLY
-  *     at any depth, no watermark, no horizon;
+  *   - [[counts]] (stateful): a streaming `count` aggregation — ONE
+  *     LONG of state per key, key domain bounded by nRules+1 forever
+  *     — the F1s state class. Counters are a commutative monoid: late
+  *     or reordered docs fold EXACTLY at any depth, no watermark, no
+  *     horizon;
   *   - the table is the batch [[graft.operators.QualityCascade
   *     .assembleMarginals]] tail SHARED over the compacted
   *     latest-emit snapshot, so parity holds by construction.
@@ -56,18 +56,7 @@ object StreamingMarginals {
   def counts(keys: Dataset[KeyRow]): Dataset[KeyCount] = {
     val spark = keys.sparkSession
     import spark.implicits._
-
-    def update(key: Long, rows: Iterator[KeyRow],
-        state: GroupState[Long]): Iterator[KeyCount] = {
-      var n = state.getOption.getOrElse(0L)
-      rows.foreach(_ => n += 1L)
-      state.update(n)
-      Iterator.single(KeyCount(key, n))
-    }
-
-    keys.groupByKey(_.rule_no)
-      .flatMapGroupsWithState(
-        OutputMode.Update(), GroupStateTimeout.NoTimeout())(update)
+    keys.groupBy(col("rule_no")).agg(count(lit(1)).as("c")).as[KeyCount]
   }
 
   /** The marginals table over a compacted (rule_no, c) snapshot — the

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.functions.col
 
 import graft.functions.Moments
 
@@ -11,22 +11,23 @@ import graft.functions.Moments
   * (n, Σx, Σx·xᵀ) state a PCA/anisotropy monitor reads continuously
   * instead of rescanning the corpus.
   *
-  * State per group is EXACTLY the batch aggregate's buffer — one
-  * Array[Long] of 1 + d(d+3) slots (count + d + d(d+1)/2 signed-128-bit
-  * cells, ~34 KB at d=64), folded through the SAME
-  * [[Moments.updateBuf]] kernel the batch TypedImperativeAggregate
-  * runs. Because every cell is an exact integer sum, the fold is
+  * It IS the batch aggregate, run as a Spark streaming aggregation:
+  * `groupBy(grp).agg(Moments.matrix(vec, dim))`, whose partial buffer
+  * — one Array[Long] of 1 + d(d+3) slots (count + d + d(d+1)/2
+  * signed-128-bit cells, ~34 KB at d=64) — is the per-group state.
+  * Because every cell is an exact integer sum, the fold is
   * ORDER-INDEPENDENT: any micro-batch split, arrival order, or
   * partitioning reproduces the identical buffer, so a streamed matrix
   * equals a batch-built matrix over the same rows TO THE LAST BIT
-  * (spec-asserted — the float fold this replaces could not make that
-  * promise across splits). No watermark needed: state is bounded by
+  * (spec-asserted). No watermark needed: state is bounded by
   * groups × d², never by rows, and "late" data is simply more data —
   * moments have no event-time window to violate.
   *
-  * Each micro-batch emits the group's refreshed matrix row (Update
-  * mode): the same (n, sx, sxy) triple the batch struct carries, with
-  * the same scale-6 HALF_UP display rounding.
+  * Each micro-batch emits the touched groups' refreshed matrix rows
+  * (Update mode): the same (n, sx, sxy) triple the batch struct
+  * carries, with the same scale-6 HALF_UP display rounding. The state
+  * schema is the aggregate's buffer, so a checkpoint written by the
+  * former `flatMapGroupsWithState` form cannot be restored.
   */
 object StreamingMoments {
 
@@ -39,18 +40,8 @@ object StreamingMoments {
     require(dim > 0, s"dim=$dim (want > 0)")
     val spark = vecs.sparkSession
     import spark.implicits._
-
-    def update(grp: String, it: Iterator[Vec],
-        state: GroupState[Array[Long]]): Iterator[MomentsRow] = {
-      val buf = state.getOption.getOrElse(new Array[Long](Moments.bufLen(dim)))
-      it.foreach(r => Moments.updateBuf(buf, r.vec.toArray, dim))
-      state.update(buf)
-      Iterator.single(MomentsRow(grp, buf(0),
-        Moments.evalSx(buf, dim).toSeq, Moments.evalSxy(buf, dim).toSeq))
-    }
-
-    vecs.groupByKey(_.grp)
-      .flatMapGroupsWithState(
-        OutputMode.Update(), GroupStateTimeout.NoTimeout())(update)
+    vecs.groupBy(col("grp")).agg(Moments.matrix(col("vec"), dim).as("m"))
+      .select(col("grp"), col("m.n"), col("m.sx"), col("m.sxy"))
+      .as[MomentsRow]
   }
 }

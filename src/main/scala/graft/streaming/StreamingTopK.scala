@@ -1,9 +1,9 @@
 package graft.streaming
 
-import scala.collection.mutable
-
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.functions.{col, posexplode}
+
+import graft.functions.TopK
 
 /** Streaming twin of the exact top-k-by-value aggregate
   * (`graft.functions.TopKAgg`): a continuously maintained per-group
@@ -11,16 +11,18 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * matter how long the stream runs — the live "top flows / largest
   * documents" panel next to the batch aggregate.
   *
-  * Same ordering contract as the batch TypedImperativeAggregate:
-  * (value DESC, id ASC), null-free input assumed (the batch doc
-  * spells out the null/NaN normalization contract), and the SAME
-  * eviction arithmetic — the heap's head is the worst kept element
-  * under `(value ASC, id DESC)`, so a new row displaces it exactly
-  * when the batch update() would. The spec pins stream == batch on
-  * identical input across micro-batch splits.
+  * It IS the batch aggregate, run as a Spark streaming aggregation:
+  * `groupBy(grp).agg(TopK.topK(value, id, k))`, whose partial buffer
+  * (the k-element heap) is the per-group state. So the ordering
+  * contract, (value DESC, id ASC) on null-free input (the batch doc
+  * spells out the null/NaN normalization contract), and the eviction
+  * arithmetic are one definition for both modes. The spec pins
+  * stream == batch on identical input across micro-batch splits.
   *
   * Every micro-batch re-emits each touched group's refreshed
-  * leaderboard (Update mode), one row per position.
+  * leaderboard (Update mode), one row per position. The state schema
+  * is the aggregate's buffer, so a checkpoint written by the former
+  * `flatMapGroupsWithState` form cannot be restored.
   */
 object StreamingTopK {
 
@@ -32,40 +34,12 @@ object StreamingTopK {
     require(k > 0, s"invalid k=$k")
     val spark = rows.sparkSession
     import spark.implicits._
-
-    // worst-first ordering: head = smallest value, ties broken so the
-    // LARGER id evicts first (matches value DESC, id ASC retention).
-    // Deliberately NOT implicit — an implicit Ordering[(Double, Long)]
-    // in scope would also capture sortBy's (-value, id) key below and
-    // invert the emitted leaderboard.
-    val worstFirst: Ordering[(Double, Long)] =
-      Ordering.fromLessThan[(Double, Long)] { case ((v1, i1), (v2, i2)) =>
-        v1 > v2 || (v1 == v2 && i1 < i2)
-      }
-
-    def update(grp: String, it: Iterator[Scored],
-        state: GroupState[Seq[(Double, Long)]]): Iterator[TopRow] = {
-      val heap = mutable.PriorityQueue.empty[(Double, Long)](worstFirst)
-      heap ++= state.getOption.getOrElse(Seq.empty)
-      it.foreach { r =>
-        if (heap.size < k) heap.enqueue((r.value, r.id))
-        else {
-          val worst = heap.head
-          if (r.value > worst._1 || (r.value == worst._1 && r.id < worst._2)) {
-            heap.dequeue(); heap.enqueue((r.value, r.id))
-          }
-        }
-      }
-      val kept = heap.toSeq
-      state.update(kept)
-      kept.sortBy { case (v, i) => (-v, i) }.zipWithIndex.iterator
-        .map { case ((v, i), pos) => TopRow(grp, pos, i, v) }
-    }
-
-    rows
-      .groupByKey(_.grp)
-      .flatMapGroupsWithState(
-        OutputMode.Update(), GroupStateTimeout.NoTimeout())(update)
+    rows.groupBy(col("grp"))
+      .agg(TopK.topK(col("value"), col("id"), k).as("top"))
+      .select(col("grp"), posexplode(col("top")).as(Seq("pos", "e")))
+      .select(col("grp"), col("pos"), col("e.id").as("id"),
+        col("e.value").as("value"))
+      .as[TopRow]
   }
 
   /** Column-name adapter from a raw frame. */
@@ -73,7 +47,6 @@ object StreamingTopK {
       k: Int): Dataset[TopRow] = {
     val spark = df.sparkSession
     import spark.implicits._
-    import org.apache.spark.sql.functions.col
     topK(df.select(col(grpCol).cast("string").as("grp"),
       col(idCol).cast("long").as("id"),
       col(valueCol).cast("double").as("value")).as[Scored], k)

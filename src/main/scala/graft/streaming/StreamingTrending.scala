@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** A57s: streaming rank-movement trending — the live twin of the
   * per-day event-type leaderboard (`AnalyticsQueries.qTrending`).
@@ -12,17 +11,17 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * stateful counting in the stream, ranking downstream over the
   * latest emit per key):
   *
-  *   - [[counts]] (stateful): ONE LONG of state per (day, event_type)
-  *     — the running count, re-emitted on every touched micro-batch
-  *     (Update mode). Counts are order-independent, so late events
-  *     fold EXACTLY at any depth while the day's state lives; keying
-  *     by (day, type) also distributes a single hot day across the
-  *     full type domain instead of funneling it through one task —
-  *     the shape that survives a 100 TB/day stream. Production
-  *     expires closed days with a processing-time timeout
-  *     (`GroupStateTimeout.ProcessingTimeTimeout`) once a day is past
-  *     its late-arrival horizon; the operator itself never needs a
-  *     watermark because count state is a commutative monoid.
+  *   - [[counts]] (stateful): a streaming `count` aggregation — ONE
+  *     LONG of state per (day, event_type), the running count
+  *     re-emitted on every touched micro-batch (Update mode). Counts
+  *     are order-independent, so late events fold EXACTLY at any
+  *     depth while the day's state lives; keying by (day, type) also
+  *     distributes a single hot day across the full type domain
+  *     instead of funneling it through one task —
+  *     the shape that survives a 100 TB/day stream. The operator
+  *     never needs a watermark because count state is a commutative
+  *     monoid; closed days are not expired (the key is an epoch-day
+  *     number, not an event-time column a watermark could close).
   *   - [[leaderboard]] (stateless): the batch query's tail verbatim —
   *     deterministic rank via (n_events DESC, event_type) and the
   *     day+1 self-join for the movement delta — applied to the
@@ -45,18 +44,8 @@ object StreamingTrending {
   def counts(events: Dataset[DayTypeEvent]): Dataset[DayTypeCount] = {
     val spark = events.sparkSession
     import spark.implicits._
-
-    def update(key: (Int, String), rows: Iterator[DayTypeEvent],
-        state: GroupState[Long]): Iterator[DayTypeCount] = {
-      var n = state.getOption.getOrElse(0L)
-      rows.foreach(_ => n += 1L)
-      state.update(n)
-      Iterator.single(DayTypeCount(key._1, key._2, n))
-    }
-
-    events.groupByKey(e => (e.day, e.eventType))
-      .flatMapGroupsWithState(
-        OutputMode.Update(), GroupStateTimeout.NoTimeout())(update)
+    events.groupBy(col("day"), col("eventType").as("event_type"))
+      .agg(count(lit(1)).as("n_events")).as[DayTypeCount]
   }
 
   /** Column-name adapter from a raw (timestamp, type) frame. */

@@ -35,20 +35,40 @@ class HeavyHittersSpec extends SparkSuite {
     assert(topItems(out) == Seq(("a", 5L), ("b", 3L), ("c", 1L)))
   }
 
-  test("per-group aggregation and SQL registration") {
+  test("per-group aggregation") {
     val df = Seq(("g1", "x"), ("g1", "x"), ("g1", "y"), ("g2", "z"))
       .toDF("g", "w")
-    df.createOrReplaceTempView("hh_input")
-    val out = spark.sql(
-      "SELECT g, graft_heavy_hitters(w, 4) AS hh FROM hh_input GROUP BY g ORDER BY g")
-      .collect()
+    val out = df.groupBy("g")
+      .agg(HeavyHitters.heavyHitters(col("w"), 4).as("hh"))
+      .orderBy("g").collect()
     assert(out.length == 2)
     assert(topItems(out(0).getSeq[Row](1)) == Seq(("x", 2L), ("y", 1L)))
     assert(topItems(out(1).getSeq[Row](1)) == Seq(("z", 1L)))
-    // bigint literal for k works too
-    val viaLong = spark.sql(
-      "SELECT graft_heavy_hitters(w, 4L) AS hh FROM hh_input")
-      .collect().head.getSeq[Row](0)
-    assert(topItems(viaLong).toMap == Map("x" -> 2L, "y" -> 1L, "z" -> 1L))
+  }
+
+  test("ties at the cut keep the smallest items, whatever the row order and partitioning") {
+    val hot = Seq.fill(5)("hot")
+    val tied = ('a' to 'l').flatMap(c => Seq.fill(3)(s"w$c"))
+    val outs = for (seed <- 1 to 4; parts <- Seq(1, 3, 7)) yield {
+      val rows = new scala.util.Random(seed).shuffle(hot ++ tied)
+      topItems(rows.toDF("w").repartition(parts)
+        .agg(HeavyHitters.heavyHitters(col("w"), 6).as("hh"))
+        .collect().head.getSeq[Row](0))
+    }
+    val expected = ("hot", 5L) +: Seq("wa", "wb", "wc", "wd", "we").map(_ -> 3L)
+    outs.foreach(o => assert(o == expected))
+  }
+
+  test("counts stay exact past k while the distinct items fit the sketch") {
+    // 5,000 distinct items (1-3 each) plus one hot item, k = 10: far
+    // more distinct items than k, well inside the tracked capacity
+    val data = Seq.fill(700)("hot") ++
+      (0 until 5000).flatMap(i => Seq.fill(1 + i % 3)(s"i$i"))
+    val df = data.toDF("w").repartition(5)
+    val out = topItems(df.agg(HeavyHitters.heavyHitters(col("w"), 10).as("hh"))
+      .collect().head.getSeq[Row](0))
+    val exact = data.groupBy(identity).map { case (w, ws) => (w, ws.size.toLong) }
+    assert(out.head == ("hot", 700L))
+    assert(out == exact.toSeq.sortBy { case (w, c) => (-c, w) }.take(10))
   }
 }

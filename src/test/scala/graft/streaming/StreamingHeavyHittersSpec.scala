@@ -35,7 +35,7 @@ class StreamingHeavyHittersSpec extends SparkSuite {
     } finally query.stop()
   }
 
-  test("state stays bounded at k and the true heavy hitter survives") {
+  test("output is capped at k and the true heavy hitter survives") {
     implicit val ctx = spark.sqlContext
     // 40 occurrences of "hot" + 30 singleton items, k=4:
     // freq(hot)=40 > n/(k+1)=14 -> MG guarantees presence
@@ -57,5 +57,44 @@ class StreamingHeavyHittersSpec extends SparkSuite {
       // undercount bounded by n/(k+1) = 14
       assert(hot.count >= 40L - 14L && hot.count <= 40L)
     } finally query.stop()
+  }
+
+  /** Runs the twin over one group's `batches` and returns its last
+    * emitted list, in position order.
+    */
+  private def lastList(name: String, batches: Seq[Seq[Item]], k: Int)
+      : Seq[(String, Long)] = {
+    implicit val ctx = spark.sqlContext
+    val in = MemoryStream[Item]
+    val query = StreamingHeavyHitters.topK(in.toDF(), k)
+      .writeStream.format("memory").queryName(name).outputMode("update")
+      .start()
+    try {
+      batches.foreach { b => in.addData(b: _*); query.processAllAvailable() }
+      // the sink appends each emission in order, each from pos 0
+      val rows = spark.table(name).as[StreamingHeavyHitters.TopItem].collect()
+      rows.drop(rows.lastIndexWhere(_.pos == 0)).map(r => (r.item, r.count)).toSeq
+    } finally query.stop()
+  }
+
+  test("ties at the cut keep the smallest items, whatever the arrival order and batching") {
+    val hot = Seq.fill(5)(Item("g", "hot"))
+    val tied = ('a' to 'l').flatMap(c => Seq.fill(3)(Item("g", s"w$c")))
+    val expected = ("hot", 5L) +: Seq("wa", "wb", "wc", "wd", "we").map(_ -> 3L)
+    for (seed <- 1 to 3; nBatches <- Seq(1, 4)) {
+      val rows = new scala.util.Random(seed).shuffle(hot ++ tied)
+      val batches = rows.grouped((rows.size + nBatches - 1) / nBatches).toSeq
+      assert(lastList(s"hh_ties_${seed}_$nBatches", batches, k = 6) == expected)
+    }
+  }
+
+  test("counts stay exact past k while the distinct items fit the sketch") {
+    val rows = Seq.fill(700)(Item("g", "hot")) ++
+      (0 until 5000).flatMap(i => Seq.fill(1 + i % 3)(Item("g", s"i$i")))
+    val shuffled = new scala.util.Random(7).shuffle(rows)
+    val out = lastList("hh_range", shuffled.grouped(4000).toSeq, k = 10)
+    val exact = rows.groupBy(_.item).map { case (w, ws) => (w, ws.size.toLong) }
+    assert(out.head == ("hot", 700L))
+    assert(out == exact.toSeq.sortBy { case (w, c) => (-c, w) }.take(10))
   }
 }
