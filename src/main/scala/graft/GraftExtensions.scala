@@ -3,8 +3,9 @@ package graft
 import org.apache.spark.sql.{AnalysisException, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.graftbridge.Bridge
 
-import graft.functions.{BytesToIp6, CmsEstimate, CountMinAgg, DotProduct, Ip4ToNum, Ip6ToBytes, MomentsAgg, NumToIp4, TopKAgg, ZOrder2}
+import graft.functions.{BytesToIp6, CountMin, DotProduct, Ip4ToNum, Ip6ToBytes, MomentsAgg, NumToIp4, TopKAgg, ZOrder2}
 
 /** Spark extension entry point: registers graft's native expressions
   * into the session's function registry, so the library's surface is
@@ -82,15 +83,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         TopKAgg(args(0), args(1), k).toAggregateExpression()
       }))
     ext.injectFunction((
-      FunctionIdentifier("graft_cms"),
-      new ExpressionInfo(classOf[CountMinAgg].getName, "graft_cms"),
-      (args: Seq[Expression]) => {
-        arity("graft_cms", 3, args)
-        CountMinAgg(args(0),
-          intLiteral("graft_cms", args(1)),
-          intLiteral("graft_cms", args(2))).toAggregateExpression()
-      }))
-    ext.injectFunction((
       FunctionIdentifier("graft_moments"),
       new ExpressionInfo(classOf[MomentsAgg].getName, "graft_moments"),
       (args: Seq[Expression]) => {
@@ -100,12 +92,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       }))
     ext.injectFunction((
       FunctionIdentifier("graft_cms_estimate"),
-      new ExpressionInfo(classOf[CmsEstimate].getName, "graft_cms_estimate"),
+      new ExpressionInfo(CountMin.getClass.getName, "graft_cms_estimate"),
       (args: Seq[Expression]) => {
-        arity("graft_cms_estimate", 4, args)
-        CmsEstimate(args(0), args(1),
-          intLiteral("graft_cms_estimate", args(2)),
-          intLiteral("graft_cms_estimate", args(3)))
+        arity("graft_cms_estimate", 2, args)
+        Bridge.converted(
+          CountMin.estimate(Bridge.column(args(0)), Bridge.column(args(1))))
       }))
   }
 }

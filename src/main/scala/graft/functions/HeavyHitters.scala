@@ -7,9 +7,10 @@ import org.apache.spark.sql.functions.{array_sort, call_function, lit, slice, wh
   * most frequent items of a column per group, the sketch counterpart
   * of an exact groupBy(item).count().orderBy.limit(k), which shuffles
   * every distinct item. The batch form calls `approx_top_k`; the
-  * streaming twin ([[graft.streaming.StreamingHeavyHitters]]) keeps an
-  * `approx_top_k_accumulate` sketch as its aggregation state and reads
-  * it with `approx_top_k_estimate`. Both pass through [[top]].
+  * streaming twins ([[graft.streaming.StreamingHeavyHitters]] and
+  * `StreamingProfiling.keySkew`) keep an [[accumulate]] sketch as
+  * their aggregation state and read it with [[topOfSketch]]. All pass
+  * through [[top]].
   *
   * Range: counts are EXACT while a group's distinct items fit the
   * sketch's capacity ([[MaxItemsTracked]], Spark's default
@@ -38,6 +39,16 @@ object HeavyHitters {
     top(call_function("approx_top_k", c, lit(MaxItemsTracked),
       lit(MaxItemsTracked)), k)
       .cast("array<struct<item:string,count:bigint>>")
+
+  /** Streaming-aggregation state for `c`: an `approx_top_k_accumulate`
+    * sketch tracking [[MaxItemsTracked]] items. */
+  def accumulate(c: Column): Column =
+    call_function("approx_top_k_accumulate", c, lit(MaxItemsTracked))
+
+  /** The first k items of an [[accumulate]] sketch by
+    * (count DESC, item ASC). */
+  def topOfSketch(sketch: Column, k: Int): Column =
+    top(call_function("approx_top_k_estimate", sketch, lit(MaxItemsTracked)), k)
 
   /** The first k of a sketch's array<struct<item, count>> by
     * (count DESC, item ASC).

@@ -935,17 +935,17 @@ object AnalyticsQueries {
   // A53: count-min sketch frequency estimates — same banded-self-check
   // device as A10/A11: the CMS point estimate for every event type
   // must sit in [exact, exact + 3 * total / width] (the one-sided CMS
-  // overcount guarantee with slack over the e/width expectation; the
-  // lower bound is structural — CMS never undercounts). Raw grid
-  // values stay in CountMinSpec; one depth x width grid aggregates
-  // the whole scan (mergeable, map-side combined), estimates read the
-  // broadcast result.
+  // overcount guarantee with slack over the sketch's 2/width bound;
+  // the lower bound is structural — CMS never undercounts). Sketch shape
+  // checks stay in CountMinSpec; one depth x width Spark count-min
+  // sketch aggregates the whole scan (mergeable, map-side combined),
+  // estimates read the broadcast result.
   def qSketchCms(s: SparkSession, dir: String): DataFrame = {
     val depth = 5
     val width = 1024
     val e = t(s, dir, "events")
     val sk = e.agg(CountMin.sketch(col("event_type"), depth, width).as("sk"))
-    val est = CountMin.estimate(col("sk"), col("event_type"), depth, width)
+    val est = CountMin.estimate(col("sk"), col("event_type"))
     e.groupBy(col("event_type")).agg(count(lit(1)).as("exact_n"))
       .withColumn("__total", sum(col("exact_n")).over(Window.partitionBy()))
       .crossJoin(broadcast(sk))

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.functions.{call_function, col, lit, posexplode}
+import org.apache.spark.sql.functions.{col, posexplode}
 
 import graft.functions.HeavyHitters
 
@@ -33,13 +33,10 @@ object StreamingHeavyHitters {
   def topK(items: DataFrame, k: Int): Dataset[TopItem] = {
     val spark = items.sparkSession
     import spark.implicits._
-    val tracked = lit(HeavyHitters.MaxItemsTracked)
     items.as[Item].groupBy(col("grp"))
-      .agg(call_function("approx_top_k_accumulate", col("item"), tracked)
-        .as("sketch"))
-      .select(col("grp"), posexplode(HeavyHitters.top(
-        call_function("approx_top_k_estimate", col("sketch"), tracked), k))
-        .as(Seq("pos", "e")))
+      .agg(HeavyHitters.accumulate(col("item")).as("sketch"))
+      .select(col("grp"),
+        posexplode(HeavyHitters.topOfSketch(col("sketch"), k)).as(Seq("pos", "e")))
       .select(col("grp"), col("pos"), col("e.item").as("item"),
         col("e.count").as("count"))
       .as[TopItem]

@@ -11,15 +11,22 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * Spark-first way:
   *
   *   1. [[closedSessions]] is the stateful half: the A6s gap/timeout
-  *     session machine ([[StreamingSessionize]]'s contract exactly),
-  *     but buffering the open session's (ts, event id, type) rows so
-  *     a CLOSED session emits its totally-ordered PATH (sorted by
+  *     session rule of [[StreamingSessionize]] (an event at most the
+  *     gap after the open session's last event joins it), but
+  *     buffering the open session's (ts, event id, type) rows so a
+  *     CLOSED session emits its totally-ordered PATH (sorted by
   *     (ts, id) at close — arrival order inside the session is free).
   *     State per user is one open session's events — bounded by the
   *     gap parameter, not history — with a hard `maxBuffer` cap for
   *     runaway keys (a bot that never pauses): past it, events are
   *     DROPPED AND COUNTED (`n_dropped` rides on the emit, the
   *     honesty-meter discipline) instead of growing state without
+  *     bound. A late event more than the gap before the open
+  *     session's first event belongs to an earlier, separate session
+  *     that the one-session state cannot hold; it is dropped and
+  *     counted too, so `n_dropped = 0` means the path is exact. It
+  *     stays a fold rather than a `collect_list` under
+  *     `session_window`: Spark's session state has no `maxBuffer`
   *     bound.
   *   2. [[trigrams]] is the stateless half: consecutive-trigram
   *     explode over closed paths — row-local, the batch expression
@@ -36,12 +43,12 @@ object StreamingPaths extends Serializable {
   final case class ClosedPath(user_id: Long, session_start_us: Long,
       path: Seq[String], n_dropped: Long)
 
-  /** Open-session buffer (public: the GroupState encoder's generated
-    * code needs constructor access, as with
-    * [[StreamingSessionize.OpenSession]]).
+  /** Open-session buffer: the kept events, the session's first and
+    * last event time, and the drop count (public: the GroupState
+    * encoder's generated code needs constructor access).
     */
   final case class OpenBuf(evs: Vector[(Long, Long, String)],
-      endUs: Long, dropped: Long)
+      startUs: Long, endUs: Long, dropped: Long)
 
   def closedSessions(events: DataFrame, gapSeconds: Long,
       watermarkDelay: String, maxBuffer: Int = 100000)
@@ -70,18 +77,21 @@ object StreamingPaths extends Serializable {
         sorted.foreach { e =>
           val us = e.ts.getTime * 1000L
           open match {
+            case Some(s) if s.startUs - us > gapUs =>
+              open = Some(s.copy(dropped = s.dropped + 1))
             case Some(s) if us - s.endUs <= gapUs =>
               open = Some(
                 if (s.evs.length >= maxBuffer)
-                  s.copy(endUs = math.max(s.endUs, us),
-                    dropped = s.dropped + 1)
+                  s.copy(startUs = math.min(s.startUs, us),
+                    endUs = math.max(s.endUs, us), dropped = s.dropped + 1)
                 else s.copy(evs = s.evs :+ ((us, e.event_id, e.etype)),
+                  startUs = math.min(s.startUs, us),
                   endUs = math.max(s.endUs, us)))
             case Some(s) =>
               closed += closeOf(uid, s)
-              open = Some(OpenBuf(Vector((us, e.event_id, e.etype)), us, 0L))
+              open = Some(OpenBuf(Vector((us, e.event_id, e.etype)), us, us, 0L))
             case None =>
-              open = Some(OpenBuf(Vector((us, e.event_id, e.etype)), us, 0L))
+              open = Some(OpenBuf(Vector((us, e.event_id, e.etype)), us, us, 0L))
           }
         }
         open.foreach { s =>

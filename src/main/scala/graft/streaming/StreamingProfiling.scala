@@ -3,22 +3,27 @@ package graft.streaming
 import scala.collection.mutable
 
 import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.functions.{bin, col, count, length, lit, posexplode}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+
+import graft.functions.HeavyHitters
 
 /** Streaming twins of the batch profiling audit (graft.operators
   * .Profiling) — the live drift detectors a pipeline runs NEXT TO the
   * batch audit so a partition/salt decision made at deploy time keeps
   * getting re-checked as the stream's shape moves:
   *
-  *   - [[keySkew]]: sharded Misra-Gries top talkers + exact per-shard
-  *     row totals. Per-key exact counting over an unbounded stream
-  *     needs unbounded state; the salt-or-not decision only needs the
-  *     HOT keys, which is exactly the MG guarantee (any key with
-  *     frequency > n/(k+1) per shard is present; counts undercount by
-  *     at most n/(k+1); EXACT while a shard's distinct keys stay <= k).
-  *     Sharding by key hash keeps state and per-batch work distributed
-  *     — one state cell per shard, O(k) each, and a key's counts never
-  *     split across shards so the guarantees survive the merge.
+  *   - [[keySkew]]: sharded top talkers + exact per-shard row totals,
+  *     a Spark streaming aggregation. Per-key exact counting over an
+  *     unbounded stream needs unbounded state; the salt-or-not decision
+  *     only needs the HOT keys. Each shard's state is its row count and
+  *     an `approx_top_k_accumulate` sketch, read each micro-batch and
+  *     cut to k by [[graft.functions.HeavyHitters.topOfSketch]]
+  *     (count DESC, key ASC):
+  *     counts are EXACT while a shard's distinct keys fit the sketch's
+  *     capacity (`HeavyHitters.MaxItemsTracked`, also the largest k),
+  *     whatever k is. Sharding by key hash keeps state and per-batch
+  *     work distributed, and a key's counts never split across shards.
   *   - [[histogram]]: per-group bounded value histogram with EXACT
   *     min/max state. Equi-width bins over an evolving [min, max]
   *     cannot be maintained directly (old rows cannot be re-binned),
@@ -31,10 +36,16 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *     reconstructible bin-for-bin ([[toEquiWidthBin]] — asserted
   *     against Profiling.histogram in the spec); past that the
   *     histogram degrades gracefully to weighted centroids with exact
-  *     total mass and exact range.
+  *     total mass and exact range. It stays a fold: Spark's
+  *     `histogram_numeric` does not combine equal centroids when it
+  *     merges partial histograms (40 rows of 3 distinct values in 4
+  *     partitions gave 12 bins, `x = 0.0` four times), so it cannot
+  *     keep one exact bin per distinct value.
   *
   * Both emit their group's refreshed summary per micro-batch (Update
   * mode); state is bounded by construction, so no watermark is needed.
+  * The key-skew state schema is the sketch, so a checkpoint written by
+  * the former Misra-Gries fold cannot be restored.
   */
 object StreamingProfiling {
 
@@ -42,54 +53,30 @@ object StreamingProfiling {
 
   final case class Keyed(key: String)
 
-  /** One row per retained (shard, key): the MG count, the shard's exact
-    * row total, and the batch audit's integer log2 bucket for the
-    * count (floor(log2 n) via bit length — same arithmetic as
-    * Profiling.keySkew's `length(bin(n)) - 1`, never a float log).
+  /** One row per retained (shard, key): the key's count, the shard's
+    * exact row total, and the batch audit's integer log2 bucket for the
+    * count (floor(log2 n) via bit length — Profiling.keySkew's
+    * `length(bin(n)) - 1`, never a float log).
     */
   final case class SkewItem(shard: Int, pos: Int, key: String,
       count: Long, shardRows: Long, bucket: Int)
-
-  private def log2Bucket(n: Long): Int =
-    63 - java.lang.Long.numberOfLeadingZeros(n)
-
-  final case class ShardState(total: Long, counts: Map[String, Long])
 
   def keySkew(rows: Dataset[Keyed], k: Int, nShards: Int): Dataset[SkewItem] = {
     require(k > 0, s"invalid k=$k")
     require(nShards > 0, s"invalid nShards=$nShards")
     val spark = rows.sparkSession
     import spark.implicits._
-
-    def update(shard: Int, it: Iterator[Keyed],
-        state: GroupState[ShardState]): Iterator[SkewItem] = {
-      val prev = state.getOption.getOrElse(ShardState(0L, Map.empty))
-      var total = prev.total
-      val buf = mutable.HashMap.empty[String, Long]
-      buf ++= prev.counts
-      it.foreach { r =>
-        total += 1
-        buf.get(r.key) match {
-          case Some(c) => buf.update(r.key, c + 1)
-          case None if buf.size < k => buf.update(r.key, 1L)
-          case None => // Misra-Gries decrement-all
-            val dead = mutable.ArrayBuffer.empty[String]
-            buf.keysIterator.foreach { key =>
-              val c = buf(key) - 1
-              if (c <= 0) dead += key else buf.update(key, c)
-            }
-            dead.foreach(buf.remove)
-        }
-      }
-      state.update(ShardState(total, buf.toMap))
-      buf.toSeq.sortBy { case (key, c) => (-c, key) }.zipWithIndex.iterator
-        .map { case ((key, c), pos) =>
-          SkewItem(shard, pos, key, c, total, log2Bucket(c)) }
-    }
-
-    rows.groupByKey(r => math.floorMod(r.key.hashCode, nShards))
-      .flatMapGroupsWithState(
-        OutputMode.Update(), GroupStateTimeout.NoTimeout())(update)
+    rows.map(r => (math.floorMod(r.key.hashCode, nShards), r.key))
+      .toDF("shard", "key")
+      .groupBy(col("shard"))
+      .agg(count(lit(1)).as("shardRows"),
+        HeavyHitters.accumulate(col("key")).as("sketch"))
+      .select(col("shard"), col("shardRows"),
+        posexplode(HeavyHitters.topOfSketch(col("sketch"), k)).as(Seq("pos", "e")))
+      .select(col("shard"), col("pos"), col("e.item").as("key"),
+        col("e.count").as("count"), col("shardRows"),
+        (length(bin(col("e.count"))) - 1).as("bucket"))
+      .as[SkewItem]
   }
 
   // -------------------------------------------------------------- histogram

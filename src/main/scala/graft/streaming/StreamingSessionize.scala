@@ -4,21 +4,26 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Gap-based sessionization over a stream — the continuous counterpart
-  * of the batch lag+cumsum query (AnalyticsQueries.qSessionize), built
-  * on flatMapGroupsWithState: per-user state is one open session
-  * (count/sum/bounds), sessions close when the event-time gap exceeds
-  * the threshold or the user goes idle past the watermark (state
-  * timeout -> no unbounded state).
+  * of the batch lag+cumsum query (AnalyticsQueries.qSessionize), on
+  * Spark's native `session_window`: per user, events at most the gap
+  * apart (an event exactly one gap after the last joins the session)
+  * form one session. State is the open sessions of active users, and a
+  * session is emitted (Append mode) once the watermark passes its last
+  * event plus the gap, so no state outlives the watermark.
+  *
+  * Out-of-order events inside the watermark land in the session their
+  * time belongs to: one inside the gap extends an open session
+  * downward, one more than a gap before it opens an earlier, separate
+  * session, as in the batch query. `sum_value` is added in Spark's
+  * partial-aggregation order. The state schema is Spark's session
+  * state, so a checkpoint written by the former `flatMapGroupsWithState`
+  * fold cannot be restored.
   */
 object StreamingSessionize {
 
   final case class SessionEvent(user_id: Long, ts: Timestamp, value: Double)
-
-  final case class OpenSession(
-      startUs: Long, endUs: Long, nEvents: Long, sumValue: Double)
 
   final case class ClosedSession(
       user_id: Long,
@@ -27,58 +32,21 @@ object StreamingSessionize {
       n_events: Long,
       sum_value: Double)
 
-  /** events (streaming, watermarked by caller or here) -> closed
-    * sessions. `gapSeconds` is the inactivity gap that splits
-    * sessions.
+  /** events (streaming, watermarked here) -> closed sessions.
+    * `gapSeconds` is the inactivity gap that splits sessions.
     */
   def sessions(events: DataFrame, gapSeconds: Long,
       watermarkDelay: String): Dataset[ClosedSession] = {
     val spark = events.sparkSession
     import spark.implicits._
-    val gapUs = gapSeconds * 1000000L
-
-    def update(
-        userId: Long,
-        rows: Iterator[SessionEvent],
-        state: GroupState[OpenSession]): Iterator[ClosedSession] = {
-      if (state.hasTimedOut) {
-        val s = state.get
-        state.remove()
-        Iterator(ClosedSession(userId, s.startUs, s.endUs, s.nEvents, s.sumValue))
-      } else {
-        val sorted = rows.toSeq.sortBy(e => (e.ts.getTime, e.value))
-        var open = state.getOption
-        val closed = Seq.newBuilder[ClosedSession]
-        sorted.foreach { e =>
-          val us = e.ts.getTime * 1000L
-          open match {
-            case Some(s) if us - s.endUs <= gapUs =>
-              // startUs can move DOWN: an out-of-order event (still
-              // inside the watermark) may predate the open session.
-              open = Some(s.copy(startUs = math.min(s.startUs, us),
-                endUs = math.max(s.endUs, us),
-                nEvents = s.nEvents + 1, sumValue = s.sumValue + e.value))
-            case Some(s) =>
-              closed += ClosedSession(userId, s.startUs, s.endUs, s.nEvents, s.sumValue)
-              open = Some(OpenSession(us, us, 1L, e.value))
-            case None =>
-              open = Some(OpenSession(us, us, 1L, e.value))
-          }
-        }
-        open.foreach { s =>
-          state.update(s)
-          // close the session once the watermark passes end + gap
-          state.setTimeoutTimestamp(s.endUs / 1000L + gapSeconds * 1000L)
-        }
-        closed.result().iterator
-      }
-    }
-
     events
       .withWatermark("ts", watermarkDelay)
-      .as[SessionEvent]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout())(update)
+      .groupBy(col("user_id"), session_window(col("ts"), s"$gapSeconds seconds"))
+      .agg(min(unix_micros(col("ts"))).as("start_us"),
+        max(unix_micros(col("ts"))).as("end_us"),
+        count(lit(1)).as("n_events"),
+        sum(col("value")).as("sum_value"))
+      .select("user_id", "start_us", "end_us", "n_events", "sum_value")
+      .as[ClosedSession]
   }
 }

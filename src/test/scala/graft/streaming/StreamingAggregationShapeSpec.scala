@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.streaming.operators.stateful.StateStoreSaveExec
+import org.apache.spark.sql.execution.streaming.operators.stateful.{SessionWindowStateStoreSaveExec, StateStoreSaveExec}
 import org.apache.spark.sql.execution.streaming.operators.stateful.flatmapgroupswithstate.FlatMapGroupsWithStateExec
 import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
 
@@ -10,8 +10,9 @@ import graft.SparkSuite
 
 /** The twins whose state is nothing but an aggregation buffer run as
   * Spark streaming aggregations of their batch aggregate: each plan
-  * saves its state through `StateStoreSaveExec`, and none holds a
-  * hand-written `flatMapGroupsWithState` fold.
+  * saves its state through `StateStoreSaveExec` (gap sessions through
+  * `SessionWindowStateStoreSaveExec`), and none holds a hand-written
+  * `flatMapGroupsWithState` fold.
   */
 class StreamingAggregationShapeSpec extends SparkSuite {
   import spark.implicits._
@@ -20,9 +21,9 @@ class StreamingAggregationShapeSpec extends SparkSuite {
     * returns the executed plan of that batch.
     */
   private def executedPlan[T](name: String, in: MemoryStream[T], rows: Seq[T],
-      out: Dataset[_]): SparkPlan = {
+      out: Dataset[_], mode: String = "update"): SparkPlan = {
     val query = out.writeStream.format("memory").queryName(name)
-      .outputMode("update").start()
+      .outputMode(mode).start()
     try {
       in.addData(rows: _*)
       query.processAllAvailable()
@@ -93,5 +94,28 @@ class StreamingAggregationShapeSpec extends SparkSuite {
     assertAggregation(executedPlan("shape_heavy_hitters", in,
       Seq(StreamingHeavyHitters.Item("g", "a"), StreamingHeavyHitters.Item("g", "b")),
       StreamingHeavyHitters.topK(in.toDF(), k = 2)))
+  }
+
+  test("StreamingProfiling.keySkew is a streaming aggregation") {
+    implicit val ctx = spark.sqlContext
+    val in = MemoryStream[StreamingProfiling.Keyed]
+    assertAggregation(executedPlan("shape_key_skew", in,
+      Seq(StreamingProfiling.Keyed("a"), StreamingProfiling.Keyed("b")),
+      StreamingProfiling.keySkew(in.toDS(), k = 2, nShards = 2)))
+  }
+
+  test("StreamingSessionize.sessions is a session-window aggregation") {
+    implicit val ctx = spark.sqlContext
+    val in = MemoryStream[StreamingSessionize.SessionEvent]
+    // session windows run in append mode; they do not support update
+    val plan = executedPlan("shape_sessions", in,
+      Seq(StreamingSessionize.SessionEvent(1L,
+        java.sql.Timestamp.valueOf("2024-01-01 10:00:00"), 1.0)),
+      StreamingSessionize.sessions(in.toDF(), gapSeconds = 1800L,
+        watermarkDelay = "0 seconds"), mode = "append")
+    assert(plan.collect { case s: SessionWindowStateStoreSaveExec => s }.nonEmpty,
+      plan.treeString)
+    assert(plan.collect { case f: FlatMapGroupsWithStateExec => f }.isEmpty,
+      plan.treeString)
   }
 }

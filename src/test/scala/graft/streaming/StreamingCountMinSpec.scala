@@ -43,7 +43,7 @@ class StreamingCountMinSpec extends SparkSuite {
       val items = df.distinct()
       val expected = items.join(batch, "grp")
         .select(col("grp"), col("item"),
-          CountMin.estimate(col("sk"), col("item"), depth, width).as("est"),
+          CountMin.estimate(col("sk"), col("item")).as("est"),
           col("n"))
         .as[(String, String, Long, Long)].collect()
         .map(r => (r._1, r._2) -> ((r._3, r._4))).toMap

@@ -173,4 +173,30 @@ class StreamingPathsSpec extends SparkSuite {
         rows.head._2 == 3L)
     } finally query.stop()
   }
+
+  test("a late event more than a gap before the open session is dropped and counted") {
+    implicit val ctx = spark.sqlContext
+    val in = MemoryStream[PathEvent]
+    val query = StreamingPaths.closedSessions(
+        in.toDF(), gapSec, watermarkDelay = "2 hours")
+      .writeStream.format("memory").queryName("paths_late")
+      .outputMode("append").start()
+    try {
+      // 09:40 arrives after 10:20, inside the watermark but 40 min
+      // before it: it belongs to an earlier session the state cannot hold
+      in.addData(PathEvent(1L, Timestamp.valueOf("2024-01-01 10:20:00"), 1L, "view"))
+      query.processAllAvailable()
+      in.addData(PathEvent(1L, Timestamp.valueOf("2024-01-01 09:40:00"), 2L, "click"))
+      query.processAllAvailable()
+      in.addData(PathEvent(999L, Timestamp.valueOf("2024-01-02 00:00:00"), 9L, "end"))
+      query.processAllAvailable()
+      in.addData(PathEvent(999L, Timestamp.valueOf("2024-01-02 00:01:00"), 8L, "end"))
+      query.processAllAvailable()
+      val rows = spark.table("paths_late").filter(col("user_id") === 1L)
+        .select("session_start_us", "path", "n_dropped")
+        .as[(Long, Seq[String], Long)].collect().toSeq
+      assert(rows == Seq((Timestamp.valueOf("2024-01-01 10:20:00").getTime * 1000L,
+        Seq("view"), 1L)), s"got $rows")
+    } finally query.stop()
+  }
 }

@@ -84,4 +84,42 @@ class StreamingSessionizeSpec extends SparkSuite {
       assert(rows.toSeq == Seq((2L, expectStart, expectEnd)), s"got ${rows.toSeq}")
     } finally query.stop()
   }
+
+  test("a late event more than a gap before the open session opens an earlier one") {
+    val sq = spark
+    import sq.implicits._
+    implicit val ctx = sq.sqlContext
+
+    val mem = MemoryStream[SessionEvent]
+    val out = StreamingSessionize.sessions(
+      mem.toDF(), gapSeconds = 1800L, watermarkDelay = "2 hours")
+
+    val query = out.writeStream
+      .format("memory")
+      .queryName("sessions_late")
+      .outputMode("append")
+      .start()
+    try {
+      // 09:40 arrives after 10:20, inside the watermark but 40 min
+      // before it: the batch qSessionize splits them into two sessions
+      mem.addData(SessionEvent(1L, ts("2024-01-01 10:20:00"), 1.0))
+      query.processAllAvailable()
+      mem.addData(SessionEvent(1L, ts("2024-01-01 09:40:00"), 2.0))
+      query.processAllAvailable()
+      mem.addData(SessionEvent(2L, ts("2024-01-02 00:00:00"), 9.0))
+      query.processAllAvailable()
+
+      def us(s: String) = ts(s).getTime * 1000L
+      val rows = spark.table("sessions_late")
+        .filter(col("user_id") === 1L)
+        .collect()
+        .map(r => (r.getAs[Long]("start_us"), r.getAs[Long]("end_us"),
+          r.getAs[Long]("n_events"), r.getAs[Double]("sum_value")))
+        .toSeq.sorted
+      assert(rows == Seq(
+        (us("2024-01-01 09:40:00"), us("2024-01-01 09:40:00"), 1L, 2.0),
+        (us("2024-01-01 10:20:00"), us("2024-01-01 10:20:00"), 1L, 1.0)),
+        s"got $rows")
+    } finally query.stop()
+  }
 }
