@@ -19,16 +19,10 @@ object Hashing {
   def md5Long60Sql(e: String): String =
     s"CAST('0x' || substr(md5($e), 1, 15) AS BIGINT)"
 
-  /** 30-bit variant, safe to multiply by another 30-bit value. */
+  /** 30-bit variant, safe to multiply by another 30-bit value: the
+    * token hash of every shingle path (`Dedup.hashTokens`).
+    */
   def h30(c: Column): Column = md5Long60(c) % 1073741824L
 
   def h30Sql(e: String): String = s"(${md5Long60Sql(e)} % 1073741824)"
-
-  /** Production fast path: xxHash64 masked to 60 bits — an order of
-    * magnitude cheaper than md5 per value at 100 TB. Not available in
-    * the oracle's SQL dialect, so oracle-checked queries keep
-    * [[md5Long60]]; the dedup operators accept either.
-    */
-  def xx60(c: Column): Column =
-    xxhash64(c).bitwiseAND(lit((1L << 60) - 1))
 }

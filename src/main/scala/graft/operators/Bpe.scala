@@ -13,8 +13,7 @@ import org.apache.spark.sql.functions._
   * only that table — at 100 TB the corpus is read ONCE; the k merge
   * rounds run over a words table that is orders of magnitude smaller
   * and lineage-truncated each round through the [[Materializer]] seam
-  * (so round N never replays rounds 1..N-1, and a cluster run can
-  * point the frontier at reliable storage).
+  * (so round N never replays rounds 1..N-1).
   *
   * Each iteration: (1) weighted symbol-pair counts — one map-side-
   * combinable aggregation over the words table; (2) the argmax pair

@@ -1,9 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-
-import graft.functions.Hashing
 
 /** C1: train/test contamination detection — for every eval-split
   * document, the fraction of its word-n-gram shingles that also occur
@@ -32,10 +30,9 @@ object Contamination {
     */
   def ngramOverlap(df: DataFrame, idCol: String, textCol: String,
       splitCol: String, n: Int, trainVal: String = "train",
-      testVal: String = "test", thrNum: Long = 1, thrDen: Long = 5,
-      tokenHash: Column => Column = Hashing.h30): DataFrame =
+      testVal: String = "test", thrNum: Long = 1, thrDen: Long = 5): DataFrame =
     perDocOverlap(df, idCol, textCol, splitCol, Seq.empty, n,
-        trainVal, testVal, tokenHash)
+        trainVal, testVal)
       .select(col("doc_id"), col("n_shingles"), col("n_hit"),
         round(col("n_hit") / col("n_shingles"), 4).as("overlap_frac"),
         (col("n_hit") * thrDen >= col("n_shingles") * thrNum).as("contaminated"))
@@ -47,7 +44,7 @@ object Contamination {
     */
   private def perDocOverlap(df: DataFrame, idCol: String, textCol: String,
       splitCol: String, extraCols: Seq[String], n: Int, trainVal: String,
-      testVal: String, tokenHash: Column => Column): DataFrame = {
+      testVal: String): DataFrame = {
     // only train/test docs are shingled — a 'val' split (or anything
     // else) must not pay the tokenize+hash+explode pass at corpus scale
     val relevant = df.filter(col(splitCol).isin(trainVal, testVal))
@@ -58,7 +55,7 @@ object Contamination {
     // data-sized doc-table broadcast in front of the planner
     val sets = Dedup.shingleSetsWith(
       relevant.withColumn("__split", col(splitCol)),
-      idCol, textCol, n, tokenHash, "__split" +: extraCols)
+      idCol, textCol, n, "__split" +: extraCols)
     // materialized + explicitly sized (Dedup.sizedGramSide): Spark
     // does not model explode fan-out, so the static estimate of a
     // post-explode distinct can underestimate by orders of magnitude
@@ -114,13 +111,12 @@ object Contamination {
   def ngramOverlapBy(df: DataFrame, idCol: String, textCol: String,
       splitCol: String, suiteCol: String, n: Int,
       trainVal: String = "train", testVal: String = "test",
-      thrNum: Long = 1, thrDen: Long = 5,
-      tokenHash: Column => Column = Hashing.h30): DataFrame = {
+      thrNum: Long = 1, thrDen: Long = 5): DataFrame = {
     val totals = df.filter(col(splitCol) === testVal)
       .groupBy(col(suiteCol).as("__suite_t"))
       .agg(count(lit(1)).as("__n_total"))
     perDocOverlap(df, idCol, textCol, splitCol, Seq(suiteCol), n,
-        trainVal, testVal, tokenHash)
+        trainVal, testVal)
       .groupBy(col(suiteCol).as("suite"))
       .agg(count(lit(1)).as("n_docs"),
         sum((col("n_hit") * thrDen >= col("n_shingles") * thrNum)
@@ -151,13 +147,12 @@ object Contamination {
     * a broadcast of a 100 TB reference), per-doc counts integer-exact.
     */
   def noveltyVsReference(df: DataFrame, reference: DataFrame,
-      idCol: String, textCol: String, n: Int,
-      tokenHash: Column => Column = Hashing.h30): DataFrame = {
-    val docSets = Dedup.shingleSets(df, idCol, textCol, n, tokenHash)
+      idCol: String, textCol: String, n: Int): DataFrame = {
+    val docSets = Dedup.shingleSets(df, idCol, textCol, n)
     // materialized + sized — same rogue-broadcast guard as
     // [[ngramOverlap]]'s trainSh
     val refSh = Dedup.sizedGramSide(Materializer.of(df.sparkSession)(
-      Dedup.shingleSets(reference, idCol, textCol, n, tokenHash)
+      Dedup.shingleSets(reference, idCol, textCol, n)
         .select("sh").distinct().withColumn("__hit", lit(1L))))
     docSets.join(refSh, Seq("sh"), "left")
       .groupBy("doc_id")

@@ -99,20 +99,40 @@ object Dedup {
   val ShingleCoef: Vector[Long] =
     Vector(1000003L, 999983L, 31L, 10007L, 257L, 65537L, 8191L, 127L)
 
+  /** The token hashes of a token array: [[Hashing.h30]] of each token,
+    * the value the oracle computes with `Hashing.h30Sql`. Every shingle
+    * path hashes its tokens with this, once per token.
+    */
+  private[graft] def hashTokens(toks: Column): Column =
+    transform(toks, Hashing.h30(_))
+
+  /** The word-`n`-gram hashes of a [[hashTokens]] column `th`, in
+    * position order: gram i is `Σ_k ShingleCoef(k) * th[i + k]`.
+    * Defined only where `size(th) >= n`, so callers filter or guard on
+    * that. Give `th` a projection of its own: the lambda reads it `n`
+    * times per gram, and an inline token-hash expression would hash
+    * the whole document again for every gram.
+    */
+  private[graft] def gramHashes(th: Column, n: Int): Column = {
+    require(n >= 1 && n <= ShingleCoef.length,
+      s"n=$n (want 1..${ShingleCoef.length})")
+    transform(sequence(lit(0), size(th) - n), i => (0 until n)
+      .map(k => lit(ShingleCoef(k)) * element_at(th, i + (k + 1)))
+      .reduce(_ + _))
+  }
+
   /** (doc_id, sh): the distinct word-`n`-gram shingle hashes of each
     * document. Documents with fewer than `n` tokens have no shingles
     * and drop out (same as the oracle's empty-list unnest).
     *
     * Each TOKEN is hashed once and gram hashes are linear combinations
-    * of the token hashes — n times fewer hash invocations and no gram
-    * string materialization vs hashing each gram's concatenation
-    * (measured ~30% off the shingle stage). `tokenHash` must yield
-    * 30-bit values; default is the oracle-replicable md5 variant,
-    * production uses `c => Hashing.xx60(c) % (1 << 30)`.
+    * of the token hashes ([[gramHashes]]) — n times fewer hash
+    * invocations and no gram string materialization vs hashing each
+    * gram's concatenation (measured ~30% off the shingle stage).
     */
-  def shingleSets(df: DataFrame, idCol: String, textCol: String, n: Int,
-      tokenHash: Column => Column = Hashing.h30): DataFrame =
-    shingleSetsWith(df, idCol, textCol, n, tokenHash, Seq.empty)
+  def shingleSets(df: DataFrame, idCol: String, textCol: String,
+      n: Int): DataFrame =
+    shingleSetsWith(df, idCol, textCol, n, Seq.empty)
 
   /** Planned-split estimate for the narrow single-scan pipelines
     * [[withScanParallelism]] wraps, WITHOUT compiling a physical plan
@@ -203,27 +223,20 @@ object Dedup {
     * explode costs neither (guide §2.4: remove shuffles outright).
     */
   def shingleSetsWith(df: DataFrame, idCol: String, textCol: String,
-      n: Int, tokenHash: Column => Column,
-      extraCols: Seq[String]): DataFrame = {
-    require(n <= ShingleCoef.length, s"n=$n exceeds ${ShingleCoef.length}")
-    val combine = (0 until n)
-      .map(k => s"${ShingleCoef(k)}L * element_at(th, i + ${k + 1})")
-      .mkString(" + ")
+      n: Int, extraCols: Seq[String]): DataFrame =
     withScanParallelism(
         df.select(col(idCol).as("doc_id") +: extraCols.map(col) :+
           col(textCol).as("__text"): _*), Seq(col("doc_id")))
       .select(col("doc_id") +: extraCols.map(col) :+
         tokens(col("__text")).as("toks"): _*)
       .filter(size(col("toks")) >= n)
-      .withColumn("th", transform(col("toks"), t => tokenHash(t)))
+      .withColumn("th", hashTokens(col("toks")))
       .select(col("doc_id") +: extraCols.map(col) :+
         // distinct-within-doc happens on the in-row gram array
         // (array_distinct), NOT via .distinct() after the explode:
         // (doc_id, sh) is already unique across docs, so the global
         // distinct was a full shuffle buying nothing
-        explode(array_distinct(expr(
-          s"transform(sequence(0, size(th) - $n), i -> $combine)"))).as("sh"): _*)
-  }
+        explode(array_distinct(gramHashes(col("th"), n))).as("sh"): _*)
 
   /** Per-pair shared-shingle counts via the inverted index: shuffle on
     * shingle hash, pairs emerge only inside buckets.
@@ -311,10 +324,8 @@ object Dedup {
     * the full index (the obvious plan) measured ~19x slower.
     */
   def ngramJaccard(df: DataFrame, idCol: String, textCol: String,
-      n: Int, num: Long, den: Long,
-      tokenHash: Column => Column = Hashing.h30,
-      maxDf: Long = 0): DataFrame = {
-    val sets = shingleSets(df, idCol, textCol, n, tokenHash)
+      n: Int, num: Long, den: Long, maxDf: Long = 0): DataFrame = {
+    val sets = shingleSets(df, idCol, textCol, n)
     if (maxDf <= 0) jaccardFilter(sharedCounts(sets), sets, num, den)
     else cappedJaccardPairs(sets, num, den, maxDf)
   }
@@ -330,8 +341,8 @@ object Dedup {
     * window with the [[hotShingles]] semi/anti-join split — no sort,
     * no df column carried on every row). An index build IS a
     * materialization — at cluster scale this stores (doc, sh) rows
-    * once instead of re-reading the corpus per consumer; a
-    * fault-tolerant run sets graft.materializer=reliable.
+    * once instead of re-reading the corpus per consumer
+    * (`graft.materializer=lazy` re-reads it instead).
     */
   private def cappedJaccardPairs(sets: DataFrame, num: Long, den: Long,
       maxDf: Long): DataFrame = {
@@ -627,14 +638,14 @@ object Dedup {
     * only tunes sensitivity.
     */
   def dupPassages(df: DataFrame, idCol: String, textCol: String, n: Int,
-      minDocs: Long = 2, tokenHash: Column => Column = Hashing.h30): DataFrame = {
+      minDocs: Long = 2): DataFrame = {
     // r18 (VERDICT #5, positions-as-array): [[coveredPositions]] now
     // returns per-doc SPAN ARRAYS merged in-row ([[spanArrays]]) — the
     // covered-token count, span count and covered-position list are
     // row-local folds over the (ascending, disjoint) spans, so the
     // former gaps-and-islands window + per-doc re-aggregation are gone
     // and the base join is doc-level 1:1.
-    val (base, spans) = coveredPositions(df, idCol, textCol, n, minDocs, tokenHash)
+    val (base, spans) = coveredPositions(df, idCol, textCol, n, minDocs)
     // kept positions via array_except (hash-set membership, O(n + dup)
     // per doc) instead of filter+array_contains (a linear scan of the
     // covered list PER TOKEN, O(n * dup) — a 100k-token doc that is 90%
@@ -676,12 +687,7 @@ object Dedup {
     * df-cap is needed for safety — `minDocs` only tunes sensitivity.
     */
   private def coveredPositions(df: DataFrame, idCol: String, textCol: String,
-      n: Int, minDocs: Long, tokenHash: Column => Column,
-      extraCols: Seq[String] = Nil): (DataFrame, DataFrame) = {
-    require(n <= ShingleCoef.length, s"n=$n exceeds ${ShingleCoef.length}")
-    val combine = (0 until n)
-      .map(k => s"${ShingleCoef(k)}L * element_at(th, i + ${k + 1})")
-      .mkString(" + ")
+      n: Int, minDocs: Long, extraCols: Seq[String] = Nil): (DataFrame, DataFrame) = {
     val mat = Materializer.of(df.sparkSession)
     // withScanParallelism: the tokenize+hash pass must not run inside
     // a single under-split scan task (see the helper's scaladoc)
@@ -691,14 +697,13 @@ object Dedup {
       .select(col("doc_id") +: tokens(col("__text")).as("toks") +:
         extraCols.map(col): _*)
       .filter(size(col("toks")) >= n)
-      .withColumn("th", transform(col("toks"), t => tokenHash(t))))
+      .withColumn("th", hashTokens(col("toks"))))
     // positions are 1-based (pos p covers tokens [p, p+n-1]); grams
     // keep duplicates here — positions matter, and the distinct-doc
     // count below dedups per doc on its own
     val grams = mat(base
       .select(col("doc_id"),
-        posexplode(expr(s"transform(sequence(0, size(th) - $n), i -> $combine)"))
-          .as(Seq("pos0", "sh")))
+        posexplode(gramHashes(col("th"), n)).as(Seq("pos0", "sh")))
       .select(col("doc_id"), (col("pos0") + 1).as("pos"), col("sh")))
     val dupSh = grams.groupBy(col("sh"))
       .agg(countDistinct(col("doc_id")).as("__d"))
@@ -779,11 +784,11 @@ object Dedup {
     * frame ~|corpus| / mean span length. Nothing driver-side.
     */
   def dupSubstrings(df: DataFrame, idCol: String, textCol: String, n: Int,
-      minDocs: Long = 2, tokenHash: Column => Column = Hashing.h30): DataFrame = {
+      minDocs: Long = 2): DataFrame = {
     // r18: spans arrive as per-doc arrays ([[spanArrays]]) — the base
     // join is doc-level 1:1 and spans re-explode only here, where the
     // per-span content hash genuinely needs a row per span
-    val (base, spans) = coveredPositions(df, idCol, textCol, n, minDocs, tokenHash)
+    val (base, spans) = coveredPositions(df, idCol, textCol, n, minDocs)
     spans.join(base, "doc_id")
       .select(col("doc_id"), col("toks"), explode(col("__spans")).as("sp"))
       .select(col("doc_id"),
@@ -812,12 +817,11 @@ object Dedup {
     * key. Output: (`byCol`, span_len, n_spans, n_docs, n_substrings).
     */
   def dupSubstringsBy(df: DataFrame, idCol: String, textCol: String,
-      byCol: String, n: Int, minDocs: Long = 2,
-      tokenHash: Column => Column = Hashing.h30): DataFrame = {
+      byCol: String, n: Int, minDocs: Long = 2): DataFrame = {
     // r18: same positions-as-array shape as [[dupSubstrings]]; the
     // facet column still rides the base frame
     val (base, spans) = coveredPositions(df, idCol, textCol, n, minDocs,
-      tokenHash, extraCols = Seq(byCol))
+      extraCols = Seq(byCol))
     spans.join(base, "doc_id")
       .select(col(byCol), col("doc_id"), col("toks"),
         explode(col("__spans")).as("sp"))
@@ -850,11 +854,10 @@ object Dedup {
     * (O(n + dup) per doc — see [[dupPassages]]' rationale).
     */
   def dupCleanAtThreshold(df: DataFrame, idCol: String, textCol: String,
-      n: Int, minSpanLen: Int, minDocs: Long = 2,
-      tokenHash: Column => Column = Hashing.h30): DataFrame = {
+      n: Int, minSpanLen: Int, minDocs: Long = 2): DataFrame = {
     require(minSpanLen >= n,
       s"minSpanLen=$minSpanLen < n=$n: no span can be shorter than one gram")
-    val (base, spans) = coveredPositions(df, idCol, textCol, n, minDocs, tokenHash)
+    val (base, spans) = coveredPositions(df, idCol, textCol, n, minDocs)
     cleanCoveredAtThreshold(base, spans, minSpanLen)
   }
 
@@ -904,11 +907,10 @@ object Dedup {
     * assembly unchanged.
     */
   def scrubContamination(train: DataFrame, eval: DataFrame, idCol: String,
-      textCol: String, n: Int, minSpanLen: Int,
-      tokenHash: Column => Column = Hashing.h30): DataFrame = {
+      textCol: String, n: Int, minSpanLen: Int): DataFrame = {
     require(minSpanLen >= n,
       s"minSpanLen=$minSpanLen < n=$n: no span can be shorter than one gram")
-    val (base, grams) = scrubFrames(train, idCol, textCol, n, tokenHash)
+    val (base, grams) = scrubFrames(train, idCol, textCol, n)
     // materialized, then explicitly SIZED ([[sizedGramSide]]): the
     // static planner broadcast a 5.5M-row / 384 MiB eval gram relation
     // off its unmodeled post-explode estimate, and checkpoint stats
@@ -917,7 +919,7 @@ object Dedup {
     // graceful and exact: broadcast while the eval set is genuinely
     // small, spill-safe sort-merge past the cap.
     val evalSh = sizedGramSide(Materializer.of(train.sparkSession)(
-      shingleSets(eval, idCol, textCol, n, tokenHash)
+      shingleSets(eval, idCol, textCol, n)
         .select("sh").distinct()))
     cleanCoveredAtThreshold(base, spanArrays(
       grams.join(evalSh, Seq("sh"), "left_semi").select("doc_id", "pos"), n),
@@ -953,21 +955,16 @@ object Dedup {
     * ([[scrubAttribution]]) wrap it themselves.
     */
   private def scrubFrames(train: DataFrame, idCol: String, textCol: String,
-      n: Int, tokenHash: Column => Column): (DataFrame, DataFrame) = {
-    require(n <= ShingleCoef.length, s"n=$n exceeds ${ShingleCoef.length}")
-    val combine = (0 until n)
-      .map(k => s"${ShingleCoef(k)}L * element_at(th, i + ${k + 1})")
-      .mkString(" + ")
+      n: Int): (DataFrame, DataFrame) = {
     val base = Materializer.of(train.sparkSession)(withScanParallelism(
         train.select(col(idCol).as("doc_id"), col(textCol).as("__text")),
         Seq(col("doc_id")))
       .select(col("doc_id"), tokens(col("__text")).as("toks"))
       .filter(size(col("toks")) >= n)
-      .withColumn("th", transform(col("toks"), t => tokenHash(t))))
+      .withColumn("th", hashTokens(col("toks"))))
     val grams = base
       .select(col("doc_id"),
-        posexplode(expr(s"transform(sequence(0, size(th) - $n), i -> $combine)"))
-          .as(Seq("pos0", "sh")))
+        posexplode(gramHashes(col("th"), n)).as(Seq("pos0", "sh")))
       .select(col("doc_id"), (col("pos0") + 1).as("pos"), col("sh"))
     (base, grams)
   }
@@ -995,12 +992,12 @@ object Dedup {
     * here.
     */
   def scrubAttribution(train: DataFrame, eval: DataFrame, idCol: String,
-      textCol: String, suiteCol: String, n: Int, minSpanLen: Int,
-      tokenHash: Column => Column = Hashing.h30): DataFrame = {
+      textCol: String, suiteCol: String, n: Int,
+      minSpanLen: Int): DataFrame = {
     require(minSpanLen >= n,
       s"minSpanLen=$minSpanLen < n=$n: no span can be shorter than one gram")
     val mat = Materializer.of(train.sparkSession)
-    val (base, grams0) = scrubFrames(train, idCol, textCol, n, tokenHash)
+    val (base, grams0) = scrubFrames(train, idCol, textCol, n)
     val grams = mat(grams0)
     // both eval-side tables materialized AND explicitly sized — the
     // same rogue-broadcast guard as [[scrubContamination]]'s evalSh
@@ -1010,7 +1007,7 @@ object Dedup {
     // could carry for free
     val evalSuiteSh = mat(shingleSetsWith(
         eval.withColumn("__suite", col(suiteCol)),
-        idCol, textCol, n, tokenHash, Seq("__suite"))
+        idCol, textCol, n, Seq("__suite"))
       .select(col("__suite").as("suite"), col("sh")).distinct())
     val evalSuiteShSized = sizedGramSide(evalSuiteSh)
     val evalSh = sizedGramSide(mat(evalSuiteSh.select("sh").distinct()))
@@ -1044,6 +1041,7 @@ object Dedup {
   val MinhashP: Long = 2147483647L
   val MinhashK: Int = 16
   val BandRows: Int = 4
+  val NBands: Int = MinhashK / BandRows
 
   val minhashPerms: Vector[(Long, Long)] = {
     var x = 1234567891L
@@ -1054,15 +1052,34 @@ object Dedup {
     Vector.fill(MinhashK)((next() | 1L, next()))
   }
 
+  /** Permutation `i` of one gram hash: ((sh mod 2^30) * a_i + b_i) mod P. */
+  private def minhash(sh: Column, i: Int): Column = {
+    val (a, b) = minhashPerms(i)
+    (sh % 1073741824L * a + b) % MinhashP
+  }
+
+  /** Band `j`'s bucket hash: md5 of its [[BandRows]] minhash values
+    * `mh(i)`, joined by "_".
+    */
+  private def bandHash(mh: Int => Column, j: Int): Column =
+    md5(concat_ws("_", (0 until BandRows).map(k => mh(BandRows * j + k)): _*))
+
   /** k-column minhash signature per doc — a single groupBy over the
     * shingle rows computes all k mins (no explode-by-k).
     */
   def minhashSignatures(sets: DataFrame): DataFrame = {
-    val h = col("sh") % 1073741824L
-    val aggs = minhashPerms.zipWithIndex.map { case ((a, b), i) =>
-      min((h * a + b) % MinhashP).as(s"mh_$i")
-    }
+    val aggs = (0 until MinhashK).map(i => min(minhash(col("sh"), i)).as(s"mh_$i"))
     sets.groupBy(col("doc_id")).agg(aggs.head, aggs.tail: _*)
+  }
+
+  /** The per-row twin of [[minhashSignatures]] + [[bandHashes]]: the
+    * [[NBands]] band hashes of one doc's distinct gram-hash array
+    * `grams`, in band order. Give `grams` a projection of its own:
+    * every minhash reads it.
+    */
+  private[graft] def rowBandHashes(grams: Column): Seq[Column] = {
+    val mh = (i: Int) => array_min(transform(grams, minhash(_, i)))
+    (0 until NBands).map(bandHash(mh, _))
   }
 
   /** (doc_id, band, bh): md5 of each band's minhash slice. Bands are
@@ -1072,10 +1089,8 @@ object Dedup {
     * hides stats from AQE and the candidate join planned badly.)
     */
   def bandHashes(sig: DataFrame): DataFrame = {
-    val nBands = MinhashK / BandRows
-    val bandStructs = (0 until nBands).map { j =>
-      val parts = (0 until BandRows).map(k => col(s"mh_${BandRows * j + k}"))
-      struct(lit(j).as("band"), md5(concat_ws("_", parts: _*)).as("bh"))
+    val bandStructs = (0 until NBands).map { j =>
+      struct(lit(j).as("band"), bandHash(i => col(s"mh_$i"), j).as("bh"))
     }
     sig.select(col("doc_id"), explode(array(bandStructs: _*)).as("b"))
       .select(col("doc_id"), col("b.band").as("band"), col("b.bh").as("bh"))
@@ -1101,9 +1116,7 @@ object Dedup {
     * A negative `maxBucket` is rejected ([[requireBucketCap]]).
     */
   def minhashLsh(df: DataFrame, idCol: String, textCol: String,
-      n: Int, num: Long, den: Long,
-      tokenHash: Column => Column = Hashing.h30,
-      maxBucket: Long = 0): DataFrame = {
+      n: Int, num: Long, den: Long, maxBucket: Long = 0): DataFrame = {
     // materialize the shingle index once ([[Materializer]], same
     // device as the capped ngram path): its four consumers — the
     // signature aggregation, both exact-verify probes, and the size
@@ -1116,7 +1129,7 @@ object Dedup {
     // SLOWER (the write costs more than re-running the one-pass agg
     // on each join side saves).
     val sets = Materializer.of(df.sparkSession)(
-      shingleSets(df, idCol, textCol, n, tokenHash))
+      shingleSets(df, idCol, textCol, n))
     lshPairsFromSets(sets, num, den, maxBucket)
   }
 
@@ -1164,10 +1177,9 @@ object Dedup {
     * Output: (bucket, n_true, n_hit, recall), bucket num*10/den..10.
     */
   def lshRecall(df: DataFrame, idCol: String, textCol: String, n: Int,
-      num: Long, den: Long, tokenHash: Column => Column = Hashing.h30,
-      maxDf: Long = 0): DataFrame = {
+      num: Long, den: Long, maxDf: Long = 0): DataFrame = {
     val sets = Materializer.of(df.sparkSession)(
-      shingleSets(df, idCol, textCol, n, tokenHash))
+      shingleSets(df, idCol, textCol, n))
     val truth = if (maxDf <= 0) jaccardFilter(sharedCounts(sets), sets, num, den)
       else cappedJaccardPairs(sets, num, den, maxDf)
     // r18 (the annRecallCandidates predicate device, applied to the
@@ -1185,14 +1197,10 @@ object Dedup {
     // md5-slice expressions as [[bandHashes]], so collisions (and
     // therefore hits) are bit-identical to the standalone chain
     // (spec-pinned in DedupSpec against the two-tower reference).
-    val nBands = MinhashK / BandRows
-    val bandArr = array((0 until nBands).map { j =>
-      md5(concat_ws("_",
-        (0 until BandRows).map(k => col(s"mh_${BandRows * j + k}")): _*))
-    }: _*)
+    val bandArr = array((0 until NBands).map(bandHash(i => col(s"mh_$i"), _)): _*)
     val bands = minhashSignatures(sets)
       .select(col("doc_id"), bandArr.as("__bands"))
-    val isHit = (1 to nBands).map(j =>
+    val isHit = (1 to NBands).map(j =>
       element_at(col("__ba"), j) === element_at(col("__bb"), j))
       .reduce(_ || _)
     truth
@@ -1225,8 +1233,8 @@ object Dedup {
     * shingles and can only match exactly.
     */
   def incremental(existing: DataFrame, incoming: DataFrame,
-      idCol: String, textCol: String, n: Int, num: Long, den: Long,
-      tokenHash: Column => Column = Hashing.h30): DataFrame = {
+      idCol: String, textCol: String, n: Int, num: Long,
+      den: Long): DataFrame = {
     val ex = existing.select(col(idCol).as("doc_id"), col(textCol).as("text"))
     val inc = incoming.select(col(idCol).as("doc_id"), col(textCol).as("text"))
     // exact: hash-keyed equi join; existing collapses to one row per
@@ -1244,8 +1252,8 @@ object Dedup {
     // median at sf0.1 locally; the win grows with corpus size since
     // the existing side dominates).
     val mat = Materializer.of(existing.sparkSession)
-    val exSets = mat(shingleSets(ex, "doc_id", "text", n, tokenHash))
-    val incSets = mat(shingleSets(inc, "doc_id", "text", n, tokenHash))
+    val exSets = mat(shingleSets(ex, "doc_id", "text", n))
+    val incSets = mat(shingleSets(inc, "doc_id", "text", n))
     val exBands = bandHashes(minhashSignatures(exSets))
     val incBands = bandHashes(minhashSignatures(incSets))
     val cand = incBands.as("x")

@@ -1,10 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-
-import graft.functions.Hashing
 
 /** Entity resolution (SURVEY.md §2.3 ER1/ER2): fuzzy-join two
   * ARBITRARY tables on text similarity, then resolve the pair set to a
@@ -41,11 +39,10 @@ object EntityResolution {
     */
   def fuzzyJoin(left: DataFrame, right: DataFrame, idCol: String,
       textCol: String, n: Int, num: Long, den: Long,
-      tokenHash: Column => Column = Hashing.h30,
       maxDf: Long = 0): DataFrame = {
-    val ls = Dedup.shingleSets(left, idCol, textCol, n, tokenHash)
+    val ls = Dedup.shingleSets(left, idCol, textCol, n)
       .select(col("doc_id").as("left_id"), col("sh"))
-    val rs = Dedup.shingleSets(right, idCol, textCol, n, tokenHash)
+    val rs = Dedup.shingleSets(right, idCol, textCol, n)
       .select(col("doc_id").as("right_id"), col("sh"))
     if (maxDf <= 0) {
       val shared = ls.join(rs, "sh")

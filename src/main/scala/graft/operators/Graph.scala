@@ -33,10 +33,10 @@ import org.apache.spark.sql.functions._
   * is truncated per round via [[Materializer]] so round N's plan does
   * not replay rounds 1..N-1 — the standard iterative-frontier
   * discipline shared with [[Dedup.clusters]]. The integer ladder also
-  * buys an EXACT early exit (`earlyExit`, default on): a round whose
-  * ranks reproduce the previous round's bit-for-bit is a permanent
-  * fixpoint of the deterministic map, so the remaining rounds are
-  * skipped — no epsilon argument needed, result-identical either way.
+  * buys an EXACT early exit: a round whose ranks reproduce the
+  * previous round's bit-for-bit is a permanent fixpoint of the
+  * deterministic map, so the remaining rounds are skipped — no
+  * epsilon argument needed, result-identical to running them.
   *
   * Overflow honesty: inflow sums accumulate in decimal(38,0) (a long
   * sum would wrap silently past 2^63 under non-ANSI semantics — the
@@ -57,17 +57,16 @@ object Graph {
     * convention (r₀ = scale).
     */
   def pageRank(edges: DataFrame, iters: Int, scale: Long = 1000000000L,
-      dampNum: Long = 85, dampDen: Long = 100,
-      earlyExit: Boolean = true): DataFrame =
-    pageRankCounted(edges, iters, scale, dampNum, dampDen, earlyExit)._1
+      dampNum: Long = 85, dampDen: Long = 100): DataFrame =
+    pageRankCounted(edges, iters, scale, dampNum, dampDen)._1
 
   /** [[pageRank]] plus the number of rounds actually executed — the
     * early-exit observability hook the specs (and a deployment's job
     * metrics) read.
     */
   private[graft] def pageRankCounted(edges: DataFrame, iters: Int,
-      scale: Long = 1000000000L, dampNum: Long = 85, dampDen: Long = 100,
-      earlyExit: Boolean = true): (DataFrame, Int) = {
+      scale: Long = 1000000000L, dampNum: Long = 85,
+      dampDen: Long = 100): (DataFrame, Int) = {
     require(iters >= 0, s"iters=$iters (want >= 0)")
     require(scale > 0 && dampNum >= 0 && dampDen > 0 && dampNum <= dampDen,
       s"bad fixed-point config: scale=$scale damp=$dampNum/$dampDen")
@@ -97,11 +96,10 @@ object Graph {
     // before any round is skipped, so a (astronomically unlikely) xor
     // collision costs one wasted verify join, never a wrong result.
     val fpExpr = expr("bit_xor(xxhash64(node, rank_fp))")
-    def fpOf(df: DataFrame): Long = {
-      val r = df.agg(fpExpr).head()
+    var prevFp = {
+      val r = ranks.agg(fpExpr).head()
       if (r.isNullAt(0)) 0L else r.getLong(0)
     }
-    var prevFp: Option[Long] = if (earlyExit) Some(fpOf(ranks)) else None
     var executed = 0
     var converged = false
     for (i <- 1 to iters if !converged) {
@@ -132,36 +130,18 @@ object Graph {
       // detection is the free observed fingerprint (see fpExpr above);
       // only a fingerprint-equal round pays the exact node-keyed
       // verify join. Float PageRank needs an epsilon argument here;
-      // the fixed-point ladder makes "unchanged" well-defined.
-      // Result-identical with the check off. The last round's check
-      // could only skip work that no longer exists — never pay it.
-      val (nextM, thisFp) =
-        if (earlyExit && i < iters) {
-          val obs = org.apache.spark.sql.Observation()
-          val cp = mat.eager(next.observe(obs, fpExpr.as("__fp")))
-          val f = try {
-            import scala.concurrent.{Await, Future, blocking}
-            import scala.concurrent.duration.DurationInt
-            // blocking{} for the same reason as Materializer.eagerCounted
-            // (ADVICE r17): a timed-out waiter must not pin a global-EC
-            // pool thread forever.
-            val v = Await.result(
-              Future(blocking(obs.get))(scala.concurrent.ExecutionContext.global),
-              30.seconds)("__fp")
-            Some(if (v == null) 0L else v.asInstanceOf[Long])
-          } catch {
-            case _: java.util.concurrent.TimeoutException => Some(fpOf(cp))
-          }
-          (cp, f)
-        } else (mat.eager(next), None)
-      if (earlyExit && i < iters && thisFp == prevFp) {
-        converged = nextM.as("n")
+      // the fixed-point ladder makes "unchanged" well-defined. The
+      // last round's check could only skip work that no longer
+      // exists — never pay it.
+      if (i < iters) {
+        val (nextM, fp) = Materializer.eagerObserved(mat, next, fpExpr)
+        converged = fp == prevFp && nextM.as("n")
           .join(ranks.select(col("node"), col("rank_fp").as("__prev")), "node")
           .filter(col("rank_fp") =!= col("__prev"))
           .isEmpty
-      }
-      prevFp = thisFp
-      ranks = nextM
+        prevFp = fp
+        ranks = nextM
+      } else ranks = mat.eager(next)
       executed = i
     }
     (ranks, executed)

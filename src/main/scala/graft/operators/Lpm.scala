@@ -19,8 +19,7 @@ import graft.functions.IpFunctions
   *      anchor-sized children (bounded fanout on the SMALL side;
   *      anchor - len <= 16 enforced), blocks at/under it keep one row;
   *   2. DISTINCT host numbers equi-join the expanded table on the
-  *      anchor key (broadcast by default — a routing table is MBs;
-  *      `broadcastBlocks = false` for a data-sized block table), then
+  *      anchor key (broadcast — a routing table is MBs), then
   *      one integer shift-compare verifies real containment;
   *   3. the winner per host value is max_by(preflen) — exact because a
   *      host matches at most ONE block per length (cidr uniqueness
@@ -68,10 +67,7 @@ object Lpm {
   }
 
   def lpmEnrich(df: DataFrame, hostCol: String, blocks: DataFrame,
-      cidrCol: String, anchor: Int = 16,
-      broadcastBlocks: Boolean = true): DataFrame = {
-    val bcast: DataFrame => DataFrame =
-      if (broadcastBlocks) broadcast else identity
+      cidrCol: String, anchor: Int = 16): DataFrame = {
     val attrs = blocks.columns.filter(_ != cidrCol).toSeq
 
     val expanded = expandedIndex(blocks, cidrCol, anchor)
@@ -83,7 +79,7 @@ object Lpm {
     val hosts = df.select(hostNum.as("__hn")).distinct()
     val cand = hosts
       .withColumn("__ak", expr(s"shiftright(__hn, ${32 - anchor})"))
-      .join(bcast(expanded), "__ak")
+      .join(broadcast(expanded), "__ak")
       .filter(expr("shiftright(__hn, 32 - __len) = shiftright(__base, 32 - __len)"))
 
     // (3) most specific block per host value — unique by construction
@@ -185,10 +181,7 @@ object Lpm {
     * anchor equi-join — keep NULL block columns.
     */
   def lpmEnrich6(df: DataFrame, hostCol: String, blocks: DataFrame,
-      cidrCol: String, anchor: Int = 40,
-      broadcastBlocks: Boolean = true): DataFrame = {
-    val bcast: DataFrame => DataFrame =
-      if (broadcastBlocks) broadcast else identity
+      cidrCol: String, anchor: Int = 40): DataFrame = {
     val attrs = blocks.columns.filter(_ != cidrCol).toSeq
 
     val expanded = expandedIndex6(blocks, cidrCol, anchor)
@@ -200,7 +193,7 @@ object Lpm {
       .withColumn("__hlo", be64(substring(col("__hb"), 9, 8)))
     val cand = hosts
       .withColumn("__ak", expr(s"shiftrightunsigned(__hhi, ${64 - anchor})"))
-      .join(bcast(expanded), "__ak")
+      .join(broadcast(expanded), "__ak")
       .filter(expr(contains6Sql("__hhi", "__hlo", "__len", "__bhi", "__blo")))
 
     val blkStruct = struct(

@@ -48,13 +48,9 @@ object RankSelect {
     * `num` clamps to rank 1, the group minimum (ceil gives rank 0,
     * which selects no element).
     *
-    * `broadcastGroups`: the per-group stats/targets tables carry ONE
-    * row per group (per group x quantile for targets), and the default
-    * broadcasts them — right when groups are an enumerable dimension
-    * (event types, networks). A HIGH-CARDINALITY group key (user ids,
-    * URLs) makes those tables data-sized: set `broadcastGroups=false`
-    * and the same plan runs the lookups as shuffled joins — identical
-    * results, no driver-sized collect anywhere.
+    * The per-group stats/targets tables carry ONE row per group (per
+    * group x quantile for targets) and are broadcast: groups are an
+    * enumerable dimension (event types, networks) in every caller.
     */
   /** Exact global `row_number()` over `(valueCol [desc], tieBreak...)`
     * WITHOUT a corpus-sized SinglePartition sort — the same
@@ -147,13 +143,10 @@ object RankSelect {
 
   def quantiles(df: DataFrame, groupCol: String, valueCol: String,
       qs: Seq[(String, Long, Long)], buckets: Int = 1024,
-      countCol: Option[String] = None,
-      broadcastGroups: Boolean = true): DataFrame = {
+      countCol: Option[String] = None): DataFrame = {
     require(qs.nonEmpty && qs.forall { case (_, num, den) =>
       num >= 0 && den > 0 && num <= den }, s"invalid quantile spec: $qs")
     require(buckets >= 2, s"need >= 2 buckets, got $buckets")
-    val bcast: DataFrame => DataFrame =
-      if (broadcastGroups) broadcast else identity
     val g = col(groupCol)
     val v = col(valueCol)
     val base = df.select(g, v).filter(v.isNotNull)
@@ -169,7 +162,7 @@ object RankSelect {
     // (2) order-preserving range bucket: floor((v-lo)/(hi-lo)*buckets)
     // clamped to [0, buckets-1]. Monotonic in v, so equal values share
     // a bucket and bucket boundaries respect the value order.
-    val keyed = base.join(bcast(stats), groupCol)
+    val keyed = base.join(broadcast(stats), groupCol)
       .withColumn("__b",
         when(col("__hi") === col("__lo"), lit(0))
           .otherwise(least(lit(buckets - 1),
@@ -205,7 +198,7 @@ object RankSelect {
 
     // (5) rank ONLY the target buckets' rows; local rank + offset is
     // the global rank, and the window is (group, bucket, name)-keyed
-    val picked = keyed.join(bcast(targets), Seq(groupCol, "__b"))
+    val picked = keyed.join(broadcast(targets), Seq(groupCol, "__b"))
       .withColumn("__rn", row_number().over(
         Window.partitionBy(g, col("__b"), col("__name")).orderBy(v)))
       .filter(col("__rn") === col("__r"))

@@ -120,21 +120,15 @@ object Sampling {
     * its leading bits — so the kept set is IDENTICAL to
     * [[quotaSample]]'s row for row (q_quota_sample_rs gates this
     * against the window form's unchanged oracle). Strata at/under
-    * quota skip the kernel entirely (keep-all).
-    *
-    * `broadcastGroups = false` switches the stratum-sized side tables
-    * to shuffled joins for high-cardinality stratum keys (the
-    * RankSelect.quantiles contract).
+    * quota skip the kernel entirely (keep-all). The stratum-sized side
+    * tables are broadcast, as in RankSelect.quantiles.
     */
   def quotaSampleRankSelect(df: DataFrame, stratumCol: String, idCol: String,
-      n: Int, salt: String = "quota", buckets: Int = 1024,
-      broadcastGroups: Boolean = true): DataFrame = {
+      n: Int, salt: String = "quota", buckets: Int = 1024): DataFrame = {
     require(n > 0, s"invalid quota n=$n")
     require(buckets >= 2 && Integer.bitCount(buckets) == 1 && buckets <= (1 << 20),
       s"buckets=$buckets must be a power of two in [2, 2^20]")
     val shift = 60 - Integer.numberOfTrailingZeros(buckets)
-    val bcast: DataFrame => DataFrame =
-      if (broadcastGroups) broadcast else identity
     val cols = df.columns.map(col).toSeq
     val base = df
       .withColumn("__g", keyOf(col(stratumCol)))
@@ -144,10 +138,10 @@ object Sampling {
     val stats = base.groupBy(col("__g")).agg(count(lit(1)).as("__n"))
     // under-quota strata: keep-all, no kernel work
     val small = base
-      .join(bcast(stats.filter(col("__n") <= n).select(col("__g"))), "__g")
+      .join(broadcast(stats.filter(col("__n") <= n).select(col("__g"))), "__g")
       .select(cols: _*)
     val big = base
-      .join(bcast(stats.filter(col("__n") > n).select(col("__g"))), "__g")
+      .join(broadcast(stats.filter(col("__n") > n).select(col("__g"))), "__g")
       .withColumn("__b", shiftright(col("__p"), shift))
     val hist = big.groupBy(col("__g"), col("__b")).agg(count(lit(1)).as("__c"))
     val off = hist.withColumn("__off",
@@ -157,14 +151,14 @@ object Sampling {
       .filter(col("__off") < n && lit(n.toLong) <= col("__off") + col("__c"))
       .select(col("__g"), col("__b"), (lit(n.toLong) - col("__off")).as("__r"))
     // sort only the boundary bucket, by the FULL window-form ordering
-    val thr = big.join(bcast(target), Seq("__g", "__b"))
+    val thr = big.join(broadcast(target), Seq("__g", "__b"))
       .withColumn("__rn", row_number().over(
         Window.partitionBy(col("__g"), col("__b"))
           .orderBy(col("__k"), col(idCol))))
       .filter(col("__rn") === col("__r"))
       .select(col("__g"), col("__p").as("__tp"), col("__k").as("__tk"),
         col(idCol).as("__tid"))
-    val kept = big.join(bcast(thr), "__g")
+    val kept = big.join(broadcast(thr), "__g")
       .filter(col("__p") < col("__tp") ||
         (col("__p") === col("__tp") &&
           struct(col("__k"), col(idCol)) <= struct(col("__tk"), col("__tid"))))

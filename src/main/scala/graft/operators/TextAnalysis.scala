@@ -318,14 +318,11 @@ object TextAnalysis {
     * binary-value nearest). Pure map: zero shuffles.
     */
   def linearScore(df: DataFrame, idCol: String, textCol: String,
-      threshold: Double,
-      tokenHash: Column => Column = Hashing.md5Long60): DataFrame = {
+      threshold: Double): DataFrame = {
     // integer weight of one token: hash-derived, uniform over
-    // [-1000, 1000]. md5 by default (oracle parity); pass Hashing.xx60
-    // for the xxhash64 production path — same plumbing, ~an order of
-    // magnitude less per-token hashing cost, no oracle twin.
+    // [-1000, 1000]; md5, so the oracle computes the same weight
     def weightOf(t: Column): Column =
-      tokenHash(t) % 2001L - 1000L
+      Hashing.md5Long60(t) % 2001L - 1000L
     val toks = tokens(col(textCol))
     par(df).select(col(idCol).as("doc_id"), toks.as("toks"))
       .filter(size(col("toks")) >= 1)

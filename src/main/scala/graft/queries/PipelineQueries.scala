@@ -41,21 +41,21 @@ object PipelineQueries {
   // D2: n-gram (3-shingle) Jaccard near-dup, tau = 1/2, with the
   // posting-list cap on (runs the production candidate path).
   def qDedupNgram(s: SparkSession, dir: String): DataFrame =
-    Dedup.ngramJaccard(dupCorpus(s, dir), "doc_id", "text", 3, 1, 2, Hashing.h30,
+    Dedup.ngramJaccard(dupCorpus(s, dir), "doc_id", "text", 3, 1, 2,
         maxDf = NgramMaxDf)
       .orderBy("doc_a", "doc_b")
 
   // D3: MinHash+LSH near-dup, same threshold — candidates via band
   // buckets instead of the full inverted index.
   def qDedupMinhash(s: SparkSession, dir: String): DataFrame =
-    Dedup.minhashLsh(dupCorpus(s, dir), "doc_id", "text", 3, 1, 2, Hashing.h30)
+    Dedup.minhashLsh(dupCorpus(s, dir), "doc_id", "text", 3, 1, 2)
       .orderBy("doc_a", "doc_b")
 
   // D10: dedup recall gate — D3 LSH recall against the D2 exact
   // truth set, bucketed by true Jaccard (floor(10j), integer
   // arithmetic); one shared shingle index feeds both chains.
   def qDedupRecall(s: SparkSession, dir: String): DataFrame =
-    Dedup.lshRecall(dupCorpus(s, dir), "doc_id", "text", 3, 1, 2, Hashing.h30,
+    Dedup.lshRecall(dupCorpus(s, dir), "doc_id", "text", 3, 1, 2,
       maxDf = NgramMaxDf)
 
   // C7: near-dup split-leakage audit — the check C1's n-gram
@@ -68,7 +68,7 @@ object PipelineQueries {
   // prevent, audited rather than assumed.
   def qSplitLeakage(s: SparkSession, dir: String): DataFrame = {
     val corpus = dupCorpus(s, dir)
-    val pairs = Dedup.minhashLsh(corpus, "doc_id", "text", 3, 1, 2, Hashing.h30)
+    val pairs = Dedup.minhashLsh(corpus, "doc_id", "text", 3, 1, 2)
       .select(col("doc_a"), col("doc_b"))
     // r17 opt: the split is a pure hash of the doc id
     // (Sampling.hashSplitCol), so both endpoint labels compute
@@ -105,7 +105,7 @@ object PipelineQueries {
   // minimum doc id (singletons label themselves).
   def qDedupClusters(s: SparkSession, dir: String): DataFrame = {
     val corpus = dupCorpus(s, dir)
-    val pairs = Dedup.minhashLsh(corpus, "doc_id", "text", 3, 1, 2, Hashing.h30)
+    val pairs = Dedup.minhashLsh(corpus, "doc_id", "text", 3, 1, 2)
       .select("doc_a", "doc_b")
     // pairsCanonical: minhashLsh emits unique doc_a < doc_b pairs
     Dedup.clusters(corpus, "doc_id", pairs, pairsCanonical = true)
@@ -118,7 +118,7 @@ object PipelineQueries {
   // tie, so the rule's deterministic arm is what gets verified).
   def qDedupKeep(s: SparkSession, dir: String): DataFrame = {
     val corpus = dupCorpus(s, dir)
-    val pairs = Dedup.minhashLsh(corpus, "doc_id", "text", 3, 1, 2, Hashing.h30)
+    val pairs = Dedup.minhashLsh(corpus, "doc_id", "text", 3, 1, 2)
       .select("doc_a", "doc_b")
     Dedup.keepCanonical(corpus, "doc_id", length(col("text")), pairs,
         pairsCanonical = true)
@@ -131,7 +131,7 @@ object PipelineQueries {
   // operator's point is finding shared passages inside otherwise
   // distinct documents.
   def qDupPassages(s: SparkSession, dir: String): DataFrame =
-    Dedup.dupPassages(t(s, dir, "documents"), "doc_id", "text", 5, 2, Hashing.h30)
+    Dedup.dupPassages(t(s, dir, "documents"), "doc_id", "text", 5, 2)
       .orderBy("doc_id")
 
   // D7b: maximal repeated-substring distribution — the ExactSubstr
@@ -139,20 +139,20 @@ object PipelineQueries {
   // maximal spans, grouped by span length with doc and distinct-
   // substring counts.
   def qDupSubstrings(s: SparkSession, dir: String): DataFrame =
-    Dedup.dupSubstrings(t(s, dir, "documents"), "doc_id", "text", 5, 2, Hashing.h30)
+    Dedup.dupSubstrings(t(s, dir, "documents"), "doc_id", "text", 5, 2)
 
   // D7d: the D7b distribution faceted by crawl source — which slice
   // carries the boilerplate; the repeated-gram test stays global.
   def qDupSubstringsBy(s: SparkSession, dir: String): DataFrame =
     Dedup.dupSubstringsBy(t(s, dir, "documents"), "doc_id", "text",
-      "source", 5, 2, Hashing.h30)
+      "source", 5, 2)
 
   // D7c: the ExactSubstr removal step at threshold 8 — delete only
   // maximal repeated spans of >= 8 tokens (short incidental overlaps
   // survive), report the cleaned-content hash per affected doc.
   def qDupClean(s: SparkSession, dir: String): DataFrame =
     Dedup.dupCleanAtThreshold(t(s, dir, "documents"), "doc_id", "text", 5,
-        minSpanLen = 8, 2, Hashing.h30)
+        minSpanLen = 8, 2)
       .orderBy("doc_id")
 
   // C8b: per-eval-suite decontamination attribution — the same global
@@ -164,7 +164,7 @@ object PipelineQueries {
     Dedup.scrubAttribution(
       docs.filter(col("doc_id") % 10 =!= 7),
       docs.filter(col("doc_id") % 10 === 7),
-      "doc_id", "text", "source", 5, minSpanLen = 8, Hashing.h30)
+      "doc_id", "text", "source", 5, minSpanLen = 8)
   }
 
   // C8: decontamination scrubbing — remove spans (>= 8 tokens at
@@ -175,7 +175,7 @@ object PipelineQueries {
     Dedup.scrubContamination(
         docs.filter(col("doc_id") % 10 =!= 7),
         docs.filter(col("doc_id") % 10 === 7),
-        "doc_id", "text", 5, minSpanLen = 8, Hashing.h30)
+        "doc_id", "text", 5, minSpanLen = 8)
       .orderBy("doc_id")
   }
 
@@ -278,7 +278,7 @@ object PipelineQueries {
         .select((col("doc_id") + 4000000L).as("doc_id"),
           concat(lit("qqa"), idStr, lit(" qqb"), idStr,
             lit(" qqc"), idStr, lit(" qqd"), idStr).as("text")))
-    Dedup.incremental(docs, incoming, "doc_id", "text", 3, 1, 2, Hashing.h30)
+    Dedup.incremental(docs, incoming, "doc_id", "text", 3, 1, 2)
       .orderBy("doc_id")
   }
 
@@ -1199,7 +1199,7 @@ object PipelineQueries {
     val d = t(s, dir, "documents").select(col("doc_id"), col("text"))
     graft.operators.Contamination.noveltyVsReference(
         d.filter(col("doc_id") % 7 =!= 0), d.filter(col("doc_id") % 7 === 0),
-        "doc_id", "text", 3, Hashing.h30)
+        "doc_id", "text", 3)
       .orderBy("doc_id")
   }
 
@@ -1262,7 +1262,7 @@ object PipelineQueries {
   def qErPairs(s: SparkSession, dir: String): DataFrame = {
     val (l, r) = erSides(s, dir)
     graft.operators.EntityResolution
-      .fuzzyJoin(l, r, "doc_id", "text", 3, 2, 5, Hashing.h30, maxDf = ErMaxDf)
+      .fuzzyJoin(l, r, "doc_id", "text", 3, 2, 5, maxDf = ErMaxDf)
       .orderBy("left_id", "right_id")
   }
 
@@ -1271,7 +1271,7 @@ object PipelineQueries {
     val (l, r) = erSides(s, dir)
     graft.operators.EntityResolution.bestMatch(
         graft.operators.EntityResolution
-          .fuzzyJoin(l, r, "doc_id", "text", 3, 2, 5, Hashing.h30, maxDf = ErMaxDf))
+          .fuzzyJoin(l, r, "doc_id", "text", 3, 2, 5, maxDf = ErMaxDf))
       .orderBy("left_id")
   }
 

@@ -1,10 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-import graft.functions.Hashing
 import graft.operators.Dedup
 
 /** C8s: streaming decontamination scrubbing — the ingest-time twin of
@@ -55,29 +54,22 @@ object StreamingDecontaminate {
     * bit-for-bit the batch operator's columns.
     */
   def scrub(stream: DataFrame, eval: DataFrame, idCol: String,
-      textCol: String, n: Int, minSpanLen: Int,
-      tokenHash: Column => Column = Hashing.h30): Dataset[Scrubbed] = {
+      textCol: String, n: Int, minSpanLen: Int): Dataset[Scrubbed] = {
     require(minSpanLen >= n,
       s"minSpanLen=$minSpanLen < n=$n: no span can be shorter than one gram")
-    require(n <= Dedup.ShingleCoef.length,
-      s"n=$n exceeds ${Dedup.ShingleCoef.length}")
     val spark = stream.sparkSession
     import spark.implicits._
 
-    val evalSh = Dedup.shingleSets(eval, idCol, textCol, n, tokenHash)
+    val evalSh = Dedup.shingleSets(eval, idCol, textCol, n)
       .select("sh").distinct()
 
-    val combine = (0 until n)
-      .map(k => s"${Dedup.ShingleCoef(k)}L * element_at(th, i + ${k + 1})")
-      .mkString(" + ")
     val grams = stream
       .select(col(idCol).as("doc_id"), col(textCol).as("__text"))
       .withColumn("toks", Dedup.tokens(col("__text")))
       .filter(size(col("toks")) >= n)
-      .withColumn("th", transform(col("toks"), t => tokenHash(t)))
+      .withColumn("th", Dedup.hashTokens(col("toks")))
       .select(col("doc_id"), col("toks"),
-        posexplode(expr(s"transform(sequence(0, size(th) - $n), i -> $combine)"))
-          .as(Seq("pos0", "sh")))
+        posexplode(Dedup.gramHashes(col("th"), n)).as(Seq("pos0", "sh")))
       .select(col("doc_id"), (col("pos0") + 1).cast("int").as("pos"),
         col("toks"), col("sh"))
     // evalSh is distinct on sh and each gram row carries one sh, so

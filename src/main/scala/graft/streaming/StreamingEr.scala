@@ -1,9 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.functions.Hashing
 import graft.operators.Dedup
 
 /** ER3: streaming entity resolution — a live stream of entities
@@ -35,19 +34,6 @@ import graft.operators.Dedup
   */
 object StreamingEr {
 
-  private val NBands = Dedup.MinhashK / Dedup.BandRows
-
-  /** In-row distinct gram-hash array (empty under `n` tokens). */
-  private def gramArray(text: Column, n: Int,
-      tokenHash: Column => Column): Column = {
-    val th = transform(Dedup.tokens(text), t => tokenHash(t))
-    val grams = transform(sequence(lit(0), size(th) - n),
-      i => (0 until n).map(k =>
-        lit(Dedup.ShingleCoef(k)) * element_at(th, i + k + 1)).reduce(_ + _))
-    when(size(th) >= n, array_distinct(grams))
-      .otherwise(array().cast("array<bigint>"))
-  }
-
   /** Match a stream of (`idCol`, `textCol`) entities against the
     * static `reference` table: one APPEND row per verified pair —
     * (left_id, right_id, shared, n_l, n_r, jaccard) with Jaccard >=
@@ -55,11 +41,11 @@ object StreamingEr {
     * output columns.
     */
   def matchAgainst(stream: DataFrame, reference: DataFrame,
-      idCol: String, textCol: String, n: Int, num: Long, den: Long,
-      tokenHash: Column => Column = Hashing.h30): DataFrame = {
+      idCol: String, textCol: String, n: Int, num: Long,
+      den: Long): DataFrame = {
     val ref = reference.select(col(idCol).as("right_id"),
       col(textCol).as("text"))
-    val refSets = Dedup.shingleSets(ref, "right_id", "text", n, tokenHash)
+    val refSets = Dedup.shingleSets(ref, "right_id", "text", n)
     // reference-side indexes, built once at query start:
     // right_id -> (gram array, size) for in-row verification
     val refGrams = refSets.groupBy(col("doc_id").as("right_id"))
@@ -68,7 +54,7 @@ object StreamingEr {
     // per band: bh -> candidate right-id array (collect_set dedups)
     val bands = Dedup.bandHashes(Dedup.minhashSignatures(
       refSets.select(col("doc_id"), col("sh"))))
-    val bucketIdx = (0 until NBands).map { j =>
+    val bucketIdx = (0 until Dedup.NBands).map { j =>
       bands.filter(col("band") === j)
         .groupBy(col("bh").as(s"__bh_$j"))
         .agg(collect_set(col("doc_id")).as(s"__cand_$j"))
@@ -76,20 +62,16 @@ object StreamingEr {
 
     var out = stream
       .select(col(idCol).as("left_id"), col(textCol).as("text"))
-      .withColumn("__lg", gramArray(col("text"), n, tokenHash))
-    for (i <- 0 until Dedup.MinhashK) {
-      val (a, b) = Dedup.minhashPerms(i)
-      out = out.withColumn(s"__mh_$i", array_min(transform(col("__lg"),
-        s => ((s % 1073741824L) * a + b) % Dedup.MinhashP)))
-    }
-    for (j <- 0 until NBands) {
-      val parts = (0 until Dedup.BandRows)
-        .map(k => col(s"__mh_${Dedup.BandRows * j + k}"))
-      out = out.withColumn(s"__bh_$j", md5(concat_ws("_", parts: _*)))
+      .withColumn("__th", Dedup.hashTokens(Dedup.tokens(col("text"))))
+      // in-row distinct gram array, empty under `n` tokens
+      .withColumn("__lg", when(size(col("__th")) >= n,
+          array_distinct(Dedup.gramHashes(col("__th"), n)))
+        .otherwise(array().cast("array<bigint>")))
+    for ((bh, j) <- Dedup.rowBandHashes(col("__lg")).zipWithIndex)
+      out = out.withColumn(s"__bh_$j", bh)
         .join(bucketIdx(j), Seq(s"__bh_$j"), "left")
-    }
     // union of per-band hits = the candidate set, deduped in-row
-    val candAll = array_distinct(concat((0 until NBands).map(j =>
+    val candAll = array_distinct(concat((0 until Dedup.NBands).map(j =>
       coalesce(col(s"__cand_$j"), array().cast("array<bigint>"))): _*))
     out
       .withColumn("right_id", explode(candAll))

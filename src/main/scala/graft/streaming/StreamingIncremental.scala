@@ -1,9 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.functions.Hashing
 import graft.operators.Dedup
 
 /** Streaming incremental dedup — the continuous counterpart of
@@ -29,60 +28,41 @@ import graft.operators.Dedup
   */
 object StreamingIncremental {
 
-  private val NBands = Dedup.MinhashK / Dedup.BandRows
-
-  /** In-row distinct gram-hash array of `textCol` (empty when the doc
-    * has fewer than `n` tokens) — the streaming twin of
-    * Dedup.shingleSets' per-doc set.
-    */
-  private def gramArray(text: Column, n: Int,
-      tokenHash: Column => Column): Column = {
-    val th = transform(Dedup.tokens(text), t => tokenHash(t))
-    val grams = transform(sequence(lit(0), size(th) - n),
-      i => (0 until n).map(k =>
-        lit(Dedup.ShingleCoef(k)) * element_at(th, i + k + 1)).reduce(_ + _))
-    when(size(th) >= n, array_distinct(grams))
-      .otherwise(array().cast("array<bigint>"))
-  }
-
   /** Classify a stream of (`idCol`, `textCol`) docs against a static
     * corpus: one output row per incoming doc with `status` and, for
     * exact duplicates, the smallest matching corpus id (`match_id`;
     * null otherwise — near candidates resolve in the batch pass).
     */
   def classify(stream: DataFrame, corpus: DataFrame,
-      idCol: String, textCol: String, n: Int,
-      tokenHash: Column => Column = Hashing.h30): DataFrame = {
+      idCol: String, textCol: String, n: Int): DataFrame = {
     val ex = corpus.select(col(idCol).as("doc_id"), col(textCol).as("text"))
     val hashIdx = ex.groupBy(md5(col("text")).as("__h"))
       .agg(min(col("doc_id")).as("__exact_match"))
     val bucketIdx = Dedup.bandHashes(Dedup.minhashSignatures(
-        Dedup.shingleSets(ex, "doc_id", "text", n, tokenHash)))
+        Dedup.shingleSets(ex, "doc_id", "text", n)))
       .select(col("band"), col("bh")).distinct()
 
     var out = stream
       .select(col(idCol).as("doc_id"), col(textCol).as("text"))
       .withColumn("__h", md5(col("text")))
-      .withColumn("__sh", gramArray(col("text"), n, tokenHash))
-    for (i <- 0 until Dedup.MinhashK) {
-      val (a, b) = Dedup.minhashPerms(i)
-      out = out.withColumn(s"__mh_$i", array_min(transform(col("__sh"),
-        s => ((s % 1073741824L) * a + b) % Dedup.MinhashP)))
-    }
-    for (j <- 0 until NBands) {
-      val parts = (0 until Dedup.BandRows).map(k => col(s"__mh_${Dedup.BandRows * j + k}"))
-      out = out.withColumn(s"__bh_$j", md5(concat_ws("_", parts: _*)))
-    }
+      .withColumn("__th", Dedup.hashTokens(Dedup.tokens(col("text"))))
+      // the in-row twin of Dedup.shingleSets' per-doc set: distinct
+      // gram hashes, empty under `n` tokens
+      .withColumn("__sh", when(size(col("__th")) >= n,
+          array_distinct(Dedup.gramHashes(col("__th"), n)))
+        .otherwise(array().cast("array<bigint>")))
+    for ((bh, j) <- Dedup.rowBandHashes(col("__sh")).zipWithIndex)
+      out = out.withColumn(s"__bh_$j", bh)
     // stream-static equi joins; unhinted so the planner picks broadcast
     // when the corpus index fits and a shuffled join when it doesn't
     out = out.join(hashIdx, Seq("__h"), "left")
-    for (j <- 0 until NBands) {
+    for (j <- 0 until Dedup.NBands) {
       out = out.join(
         bucketIdx.filter(col("band") === j)
           .select(col("bh").as(s"__bh_$j"), lit(true).as(s"__hit_$j")),
         Seq(s"__bh_$j"), "left")
     }
-    val anyHit = (0 until NBands).map(j => col(s"__hit_$j").isNotNull)
+    val anyHit = (0 until Dedup.NBands).map(j => col(s"__hit_$j").isNotNull)
       .reduce(_ || _)
     out.select(col("doc_id"),
       when(col("__exact_match").isNotNull, "dup_exact")

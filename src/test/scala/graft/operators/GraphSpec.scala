@@ -46,12 +46,11 @@ class GraphSpec extends SparkSuite {
 
   test("early exit: a stationary graph stops after one round, " +
       "result-identical to the full run") {
-    val edges = Seq((1L, 2L), (2L, 1L)).toDF("src", "dst")
-    val (df, executed) = Graph.pageRankCounted(edges, iters = 25)
+    val edges = Seq((1L, 2L), (2L, 1L))
+    val (df, executed) = Graph.pageRankCounted(edges.toDF("src", "dst"), iters = 25)
     assert(executed == 1, s"executed $executed rounds, wanted 1")
     val got = df.select("node", "rank_fp").as[(Long, Long)].collect().toMap
-    val full = Graph.pageRank(edges, iters = 25, earlyExit = false)
-      .select("node", "rank_fp").as[(Long, Long)].collect().toMap
+    val full = referencePageRank(edges, 25)
     assert(got == full)
   }
 

@@ -14,10 +14,9 @@ class Lpm6Spec extends SparkSuite {
     ("2001:db8:1:0:2:3::/96", "rack"),
     ("fd00::/24", "lab")).toDF("cidr", "owner")
 
-  private def enrich(hosts: Seq[String], anchor: Int = 40,
-      bcast: Boolean = true): Map[String, (String, String)] =
-    Lpm.lpmEnrich6(hosts.toDF("host"), "host", blocks, "cidr",
-        anchor = anchor, broadcastBlocks = bcast)
+  private def enrich(hosts: Seq[String],
+      anchor: Int = 40): Map[String, (String, String)] =
+    Lpm.lpmEnrich6(hosts.toDF("host"), "host", blocks, "cidr", anchor = anchor)
       .collect()
       .map(r => r.getAs[String]("host") ->
         (r.getAs[String]("matched_cidr"), r.getAs[String]("owner")))
@@ -55,9 +54,8 @@ class Lpm6Spec extends SparkSuite {
     val base = enrich(hosts)
     // anchor must keep lenLo = anchor - 16 at or under the fixture's
     // shortest block (/24), so the legal sweep here is 16..40
-    for (a <- Seq(16, 24, 32, 40); b <- Seq(true, false))
-      assert(enrich(hosts, anchor = a, bcast = b) == base,
-        s"divergence at anchor=$a broadcast=$b")
+    for (a <- Seq(16, 24, 32, 40))
+      assert(enrich(hosts, anchor = a) == base, s"divergence at anchor=$a")
   }
 
   test("a /128 host route wins over everything") {

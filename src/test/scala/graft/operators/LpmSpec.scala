@@ -12,10 +12,9 @@ class LpmSpec extends SparkSuite {
     ("10.1.2.128/25", "rack"),
     ("192.168.0.0/16", "lab")).toDF("cidr", "owner")
 
-  private def enrich(hosts: Seq[String], anchor: Int = 16,
-      bcast: Boolean = true): Map[String, (String, String)] =
-    Lpm.lpmEnrich(hosts.toDF("host"), "host", blocks, "cidr",
-        anchor = anchor, broadcastBlocks = bcast)
+  private def enrich(hosts: Seq[String],
+      anchor: Int = 16): Map[String, (String, String)] =
+    Lpm.lpmEnrich(hosts.toDF("host"), "host", blocks, "cidr", anchor = anchor)
       .collect()
       .map(r => r.getAs[String]("host") ->
         (r.getAs[String]("matched_cidr"), r.getAs[String]("owner")))
@@ -50,9 +49,8 @@ class LpmSpec extends SparkSuite {
     val hosts = Seq("10.1.2.200", "10.1.2.5", "10.1.9.1", "10.7.0.1",
       "192.168.3.4", "172.16.0.1")
     val base = enrich(hosts)
-    for (a <- Seq(8, 20, 24); b <- Seq(true, false))
-      assert(enrich(hosts, anchor = a, bcast = b) == base,
-        s"divergence at anchor=$a broadcast=$b")
+    for (a <- Seq(8, 20, 24))
+      assert(enrich(hosts, anchor = a) == base, s"divergence at anchor=$a")
   }
 
   test("duplicate host rows all receive the same enrichment") {

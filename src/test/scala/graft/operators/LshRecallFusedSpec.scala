@@ -30,7 +30,7 @@ class LshRecallFusedSpec extends SparkSuite {
 
   private def reference(maxDf: Long) = {
     val sets = Materializer.of(spark)(
-      Dedup.shingleSets(corpus, "doc_id", "text", 3, graft.functions.Hashing.h30))
+      Dedup.shingleSets(corpus, "doc_id", "text", 3))
     val truth =
       if (maxDf <= 0) Dedup.jaccardFilter(Dedup.sharedCounts(sets), sets, 1, 2)
       else Dedup.ngramJaccard(corpus, "doc_id", "text", 3, 1, 2, maxDf = maxDf)

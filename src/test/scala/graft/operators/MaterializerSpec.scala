@@ -4,10 +4,10 @@ import org.apache.spark.sql.DataFrame
 
 import graft.SparkSuite
 
-/** The materialization seam must be RESULT-INVISIBLE: every strategy
-  * (executor-local checkpoint, reliable checkpoint, table write+read,
-  * none) produces identical rows from the dedup operators it backs —
-  * the strategy only chooses where the materialized index lives.
+/** The materialization seam must be RESULT-INVISIBLE: both strategies
+  * (executor-local checkpoint, none) produce identical rows from the
+  * dedup operators they back — the strategy only chooses whether the
+  * index is stored once or recomputed per consumer.
   */
 class MaterializerSpec extends SparkSuite {
   import spark.implicits._
@@ -52,25 +52,23 @@ class MaterializerSpec extends SparkSuite {
   }
 
   test("every strategy yields identical dedup results") {
-    val ckptDir = java.nio.file.Files.createTempDirectory("graft_ckpt")
-    val tblDir = java.nio.file.Files.createTempDirectory("graft_mat")
-    spark.sparkContext.setCheckpointDir(ckptDir.toString)
     val baseline = runAll() // default: local
-    for (strategy <- Seq("local-lazy", "reliable", "lazy", s"table:$tblDir")) {
-      spark.conf.set(Materializer.ConfKey, strategy)
-      try {
-        val got = runAll()
-        assert(got.keySet == baseline.keySet)
-        for ((k, v) <- baseline)
-          assert(got(k) == v, s"strategy $strategy diverged on $k")
-      } finally spark.conf.unset(Materializer.ConfKey)
-    }
+    spark.conf.set(Materializer.ConfKey, "lazy")
+    try {
+      val got = runAll()
+      assert(got.keySet == baseline.keySet)
+      for ((k, v) <- baseline)
+        assert(got(k) == v, s"strategy lazy diverged on $k")
+    } finally spark.conf.unset(Materializer.ConfKey)
   }
 
   test("unknown strategy fails loudly at the seam") {
-    spark.conf.set(Materializer.ConfKey, "replicate-3x")
-    try intercept[IllegalArgumentException](Materializer.of(spark))
-    finally spark.conf.unset(Materializer.ConfKey)
+    // the removed modes are unknown too: only local and lazy remain
+    for (strategy <- Seq("replicate-3x", "local-lazy", "reliable", "table:/x")) {
+      spark.conf.set(Materializer.ConfKey, strategy)
+      try intercept[IllegalArgumentException](Materializer.of(spark))
+      finally spark.conf.unset(Materializer.ConfKey)
+    }
   }
 
   test("results are non-trivial (the equivalence test has teeth)") {

@@ -136,17 +136,4 @@ class RankSelectSpec extends SparkSuite {
       .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
     assert(got == Map("a" -> 1.5, "b" -> -2.0))
   }
-
-  test("broadcastGroups=false (high-cardinality fallback) selects identically") {
-    val rng = new scala.util.Random(23)
-    val rows = (1 to 3000).map(i => (s"g${i % 97}", rng.nextDouble() * 10))
-    val df = rows.toDF("g", "v").repartition(5)
-    val a = RankSelect.quantiles(df, "g", "v", qs, countCol = Some("n"))
-      .collect().map(r => r.getString(0) -> r.toSeq.tail).toMap
-    val b = RankSelect.quantiles(df, "g", "v", qs, countCol = Some("n"),
-        broadcastGroups = false)
-      .collect().map(r => r.getString(0) -> r.toSeq.tail).toMap
-    assert(a == b)
-    assert(a.size == 97)
-  }
 }

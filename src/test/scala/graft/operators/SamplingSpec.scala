@@ -198,14 +198,4 @@ class SamplingSpec extends SparkSuite {
       assert(kernel == window, s"mismatch at n=$n buckets=$bk")
     }
   }
-
-  test("quotaSampleRankSelect: shuffled-join arm matches the broadcast arm") {
-    val df = (1 to 500).map(i => (i.toLong, s"s${i % 4}")).toDF("doc_id", "src")
-    val b = Sampling.quotaSampleRankSelect(df, "src", "doc_id", 30)
-      .select("doc_id").as[Long].collect().toSet
-    val s = Sampling.quotaSampleRankSelect(df, "src", "doc_id", 30,
-        broadcastGroups = false)
-      .select("doc_id").as[Long].collect().toSet
-    assert(b == s && b.size == 4 * 30)
-  }
 }

@@ -154,14 +154,12 @@ class TextAnalysisSpec extends SparkSuite {
 
   test("linear scorer fast-hash path: same plumbing, stable, exact bounds") {
     val docs = Seq((1L, "alpha beta gamma delta"), (2L, "one two")).toDF("doc_id", "text")
-    val out = TextAnalysis.linearScore(docs, "doc_id", "text", 0.0,
-      graft.functions.Hashing.xx60)
+    val out = TextAnalysis.linearScore(docs, "doc_id", "text", 0.0)
     val rows = out.collect().map(r => r.getAs[Long]("doc_id") -> r.getAs[Double]("score")).toMap
     // weights live in [-1000, 1000] -> mean score in [-1, 1]
     assert(rows.values.forall(s => s >= -1.0 && s <= 1.0))
     // deterministic under repartitioning (pure map, hash-only state)
-    val again = TextAnalysis.linearScore(docs.repartition(5), "doc_id", "text", 0.0,
-      graft.functions.Hashing.xx60)
+    val again = TextAnalysis.linearScore(docs.repartition(5), "doc_id", "text", 0.0)
       .collect().map(r => r.getAs[Long]("doc_id") -> r.getAs[Double]("score")).toMap
     assert(again == rows)
   }
