@@ -238,139 +238,137 @@ object Dedup {
         // distinct was a full shuffle buying nothing
         explode(array_distinct(gramHashes(col("th"), n))).as("sh"): _*)
 
-  /** Per-pair shared-shingle counts via the inverted index: shuffle on
-    * shingle hash, pairs emerge only inside buckets.
+  /** An (id, sh) side with its id column named `id`. The id is the
+    * side's one column besides `sh` (a USING join on `sh` moves `sh`
+    * first, so not its position); a side whose id already has that
+    * name passes through unprojected.
     */
-  def sharedCounts(sets: DataFrame): DataFrame = {
-    val a = sets.select(col("doc_id").as("doc_a"), col("sh"))
-    val b = sets.select(col("doc_id").as("doc_b"), col("sh"))
-    a.join(b, Seq("sh"))
-      .filter(col("doc_a") < col("doc_b"))
-      .groupBy("doc_a", "doc_b")
+  private def named(side: DataFrame, id: String): DataFrame = {
+    val own = side.columns.filterNot(_ == "sh").head
+    if (own == id) side else side.select(col(own).as(id), col("sh"))
+  }
+
+  /** Per-pair shared-shingle counts between two (id, sh) sides — the
+    * one overlap count every near-dup and ER path runs. The output
+    * names the sides' ids `ids` ([[named]]) and keeps the
+    * pairs `pair` accepts (`doc_a < doc_b` for a self-join, `lit(true)`
+    * for two tables): (ids._1, ids._2, shared). The shuffle keys on the
+    * shingle hash, so pairs emerge only inside buckets.
+    *
+    * `hot` (None = uncapped) is the materialized set of shingles over
+    * the posting-list cap ([[hotShingles]]; the caller decides over
+    * which index df is counted). Shared counts then come from the rare
+    * postings alone — one bounded-bucket shuffle, the uncapped shape —
+    * and the hot shingles' contribution is added back by
+    * [[exactShared]] ONLY for pairs already candidates via a rare
+    * shingle (the hot side is a tiny table). Every emitted pair carries
+    * its exact |A∩B|; only pairs overlapping SOLELY in hot shingles are
+    * missed, and those sit far below any useful threshold.
+    * Materializing the candidate set and recounting against the full
+    * index (the obvious plan) measured ~19x slower.
+    */
+  def sharedCounts(a: DataFrame, b: DataFrame, ids: (String, String),
+      pair: Column, hot: Option[DataFrame]): DataFrame = {
+    val (ia, ib) = ids
+    def postings(side: DataFrame, how: String) =
+      hot.fold(side)(side.join(_, Seq("sh"), how))
+    val shared = named(postings(a, "left_anti"), ia)
+      .join(named(postings(b, "left_anti"), ib), Seq("sh"))
+      .filter(pair)
+      .groupBy(ia, ib)
       .agg(count(lit(1)).as("shared"))
+    if (hot.isEmpty) shared
+    else {
+      val hotShared = exactShared(shared.select(ia, ib),
+          postings(a, "left_semi"), postings(b, "left_semi"))
+        .withColumnRenamed("shared", "__hot")
+      shared.join(hotShared, Seq(ia, ib), "left")
+        .select(col(ia), col(ib),
+          (col("shared") + coalesce(col("__hot"), lit(0L))).as("shared"))
+    }
   }
 
-  /** Attach set sizes and keep pairs with Jaccard >= num/den. The
-    * threshold test is pure integer arithmetic
-    * ((den+num)*shared >= num*(n_a+n_b)), so no float boundary can
-    * disagree with the oracle; `jaccard` is display-only.
+  /** Exact shared-shingle counts for an explicit candidate-pair set:
+    * `cand`'s first two columns are the pair's ids, `a` and `b` the
+    * (id, sh) sides they index ([[named]]). Output (idA, idB, shared);
+    * shuffles on id / (id, shingle), never a bucket fanout.
     */
-  def jaccardFilter(pairsShared: DataFrame, sets: DataFrame,
-      num: Long, den: Long): DataFrame =
-    jaccardFilterSizes(pairsShared,
-      sets.groupBy(col("doc_id")).agg(count(lit(1)).as("n")), num, den)
-
-  /** [[jaccardFilter]] against a precomputed (doc_id, n) size table —
-    * lets the capped ngram path size from its materialized index
-    * instead of re-running the shingle pipeline.
-    */
-  def jaccardFilterSizes(pairsShared: DataFrame, sizes: DataFrame,
-      num: Long, den: Long): DataFrame =
-    pairsShared
-      .join(sizes.select(col("doc_id").as("doc_a"), col("n").as("n_a")), "doc_a")
-      .join(sizes.select(col("doc_id").as("doc_b"), col("n").as("n_b")), "doc_b")
-      .filter(lit(den + num) * col("shared") >= lit(num) * (col("n_a") + col("n_b")))
-      .withColumn("jaccard",
-        round(col("shared") / (col("n_a") + col("n_b") - col("shared")), 4))
-      .select("doc_a", "doc_b", "shared", "n_a", "n_b", "jaccard")
-
-  /** Candidate pairs from the shingle inverted index. `maxDf > 0`
-    * drops shingles whose document frequency exceeds maxDf from
-    * candidate generation (posting-list cap, standard in production
-    * dedup): one stop-phrase shingle shared by 10^6 docs would emit
-    * O(df²) pairs in a single bucket — the straggler task that kills a
-    * 100 TB run. Verification recounts over the FULL sets, so only
-    * pairs whose entire overlap is hot shingles are missed — by
-    * construction those are far below any useful Jaccard threshold.
-    */
-  def shingleCandidates(sets: DataFrame, maxDf: Long): DataFrame = {
-    // hot-postings split via the tiny aggregated hot table (same
-    // device as the band joins' hotBuckets anti join): the previous
-    // df count-window shuffled AND sorted the full shingle index —
-    // and, un-materialized here, ran once per self-join side
-    val idx =
-      if (maxDf <= 0) sets
-      else sets.join(hotShingles(sets, maxDf), Seq("sh"), "left_anti")
-    idx.select(col("doc_id").as("doc_a"), col("sh"))
-      .join(idx.select(col("doc_id").as("doc_b"), col("sh")), Seq("sh"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select("doc_a", "doc_b")
-      .distinct()
-  }
-
-  /** Exact shared-shingle counts for an explicit candidate-pair set
-    * (shuffles on doc id / (doc id, shingle) — never a bucket fanout).
-    */
-  def exactShared(cand: DataFrame, sets: DataFrame): DataFrame =
+  def exactShared(cand: DataFrame, a: DataFrame, b: DataFrame): DataFrame = {
+    val Array(ia, ib) = cand.columns.take(2)
     cand
-      .join(sets.select(col("doc_id").as("doc_a"), col("sh")), "doc_a")
-      .join(sets.select(col("doc_id").as("doc_b"), col("sh")), Seq("doc_b", "sh"))
-      .groupBy("doc_a", "doc_b")
+      .join(named(a, ia), ia)
+      .join(named(b, ib), Seq(ib, "sh"))
+      .groupBy(ia, ib)
       .agg(count(lit(1)).as("shared"))
+  }
+
+  /** Jaccard(A, B) >= num/den for |A∩B| = `shared` and set sizes `nA`,
+    * `nB`, as pure integer arithmetic ((den+num)*shared >=
+    * num*(nA+nB)), so no float boundary can disagree with the oracle.
+    */
+  def jaccardAtLeast(shared: Column, nA: Column, nB: Column, num: Long,
+      den: Long): Column =
+    lit(den + num) * shared >= lit(num) * (nA + nB)
+
+  /** The display Jaccard, round-4; no threshold test reads it. */
+  def jaccardRounded(shared: Column, nA: Column, nB: Column): Column =
+    round(shared / (nA + nB - shared), 4)
+
+  /** Attach set sizes to (idA, idB, shared) pairs and keep those with
+    * Jaccard >= num/den ([[jaccardAtLeast]]). `sizesA` is (idA, nA) and
+    * `sizesB` (idB, nB), named as the caller outputs them. Output
+    * (idA, idB, shared, nA, nB, jaccard).
+    */
+  def jaccardFilterSizes(shared: DataFrame, sizesA: DataFrame,
+      sizesB: DataFrame, num: Long, den: Long): DataFrame = {
+    val Array(ia, na) = sizesA.columns
+    val Array(ib, nb) = sizesB.columns
+    shared.join(sizesA, ia).join(sizesB, ib)
+      .filter(jaccardAtLeast(col("shared"), col(na), col(nb), num, den))
+      .withColumn("jaccard", jaccardRounded(col("shared"), col(na), col(nb)))
+      .select(ia, ib, "shared", na, nb, "jaccard")
+  }
+
+  /** [[jaccardFilterSizes]] for (doc_a, doc_b) pairs of one (doc_id, sh)
+    * index, sized from that index.
+    */
+  def jaccardFilter(shared: DataFrame, sets: DataFrame, num: Long,
+      den: Long): DataFrame = {
+    val sizes = sets.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
+    jaccardFilterSizes(shared,
+      sizes.select(col("doc_id").as("doc_a"), col("n").as("n_a")),
+      sizes.select(col("doc_id").as("doc_b"), col("n").as("n_b")), num, den)
+  }
+
+  /** The (doc_a, doc_b) pairs of one (doc_id, sh) index with Jaccard >=
+    * num/den and their exact |A∩B|: [[sharedCounts]] as a self-join,
+    * posting-list cap `maxDf` (0 = uncapped) counted over the index.
+    * The capped arm reads the index six times (both rare sides, both
+    * hot add-back probes, the size lookup, the df count), so callers
+    * pass a materialized one.
+    */
+  def jaccardPairs(sets: DataFrame, num: Long, den: Long,
+      maxDf: Long): DataFrame = {
+    val hot = if (maxDf <= 0) None else Some(hotShingles(sets, maxDf))
+    jaccardFilter(sharedCounts(sets, sets, ("doc_a", "doc_b"),
+      col("doc_a") < col("doc_b"), hot), sets, num, den)
+  }
 
   /** D2: n-gram Jaccard near-dup — inverted index candidates + exact
-    * Jaccard, threshold num/den. `maxDf > 0` enables the posting-list
-    * cap; 0 keeps the single-pass exact index.
-    *
-    * Capped plan: the index splits into rare (df <= maxDf) and hot
-    * postings. Shared counts come from the rare index alone — one
-    * bounded-bucket shuffle, identical shape to the uncapped pass —
-    * and the hot shingles' contribution is then added back ONLY for
-    * pairs already candidates via a rare shingle (the hot side is a
-    * tiny table: few distinct shingles exceed any sane df cap). Exact
-    * |A∩B| for every emitted pair; only pairs overlapping SOLELY in
-    * hot shingles are missed, and those sit far below any useful
-    * threshold. Materializing the candidate set and recounting against
-    * the full index (the obvious plan) measured ~19x slower.
+    * Jaccard, threshold num/den ([[jaccardPairs]]). `maxDf > 0` enables
+    * the posting-list cap (standard in production dedup: one
+    * stop-phrase shingle shared by 10^6 docs would emit O(df²) pairs
+    * in a single bucket — the straggler task that kills a 100 TB run)
+    * and materializes the shingle index once ([[Materializer]];
+    * measured 4.1 -> 2.9 s median at sf0.1 when it landed), since the
+    * capped plan reads it six times; 0 keeps the single-pass exact
+    * index.
     */
   def ngramJaccard(df: DataFrame, idCol: String, textCol: String,
       n: Int, num: Long, den: Long, maxDf: Long = 0): DataFrame = {
     val sets = shingleSets(df, idCol, textCol, n)
-    if (maxDf <= 0) jaccardFilter(sharedCounts(sets), sets, num, den)
-    else cappedJaccardPairs(sets, num, den, maxDf)
-  }
-
-  /** The capped (production) n-gram Jaccard path over a prebuilt
-    * shingle-set frame. MATERIALIZES the shingle index once (strategy
-    * from [[Materializer]]; default executor-local): its six
-    * consumers — both sides of the rare self-join, both hot add-back
-    * probes, the size lookup, and the hot-shingle aggregation — would
-    * each re-run the whole scan+shingle pipeline otherwise (measured
-    * 4.1 -> 2.9 s median at sf0.1 when this landed in r12, then with
-    * a df-annotation window under the checkpoint; r14 replaced that
-    * window with the [[hotShingles]] semi/anti-join split — no sort,
-    * no df column carried on every row). An index build IS a
-    * materialization — at cluster scale this stores (doc, sh) rows
-    * once instead of re-reading the corpus per consumer
-    * (`graft.materializer=lazy` re-reads it instead).
-    */
-  private def cappedJaccardPairs(sets: DataFrame, num: Long, den: Long,
-      maxDf: Long): DataFrame = {
-    val mat = Materializer.of(sets.sparkSession)
-    // r14: the rare/hot split rides the tiny aggregated hot-shingle
-    // table (semi/anti joins AQE broadcasts) instead of a per-row df
-    // count-window annotation — the split never needed the df VALUE,
-    // only the threshold side, and the window shuffled AND sorted the
-    // whole index under the checkpoint (the band joins' hotBuckets
-    // finding, applied to the flagship path)
-    val idx = mat(sets)
-    val hotSh = hotShingles(idx, maxDf)
-    val rare = idx.join(hotSh, Seq("sh"), "left_anti")
-    val hot = idx.join(hotSh, Seq("sh"), "left_semi")
-    val rareShared = sharedCounts(rare)
-    val hotShared = rareShared.select("doc_a", "doc_b")
-      .join(hot.select(col("doc_id").as("doc_a"), col("sh")), "doc_a")
-      .join(hot.select(col("doc_id").as("doc_b"), col("sh")), Seq("doc_b", "sh"))
-      .groupBy("doc_a", "doc_b")
-      .agg(count(lit(1)).as("__hot"))
-    val shared = rareShared.join(hotShared, Seq("doc_a", "doc_b"), "left")
-      .select(col("doc_a"), col("doc_b"),
-        (col("shared") + coalesce(col("__hot"), lit(0L))).as("shared"))
-    // sizes from the SAME materialized rows (rare and hot partition
-    // the index, so the per-doc counts are identical to the raw
-    // shingle sets')
-    jaccardFilterSizes(shared,
-      idx.groupBy(col("doc_id")).agg(count(lit(1)).as("n")), num, den)
+    jaccardPairs(if (maxDf > 0) Materializer.of(df.sparkSession)(sets) else sets,
+      num, den, maxDf)
   }
 
   /** D6: near-dup cluster resolution — connected components over the
@@ -1153,7 +1151,7 @@ object Dedup {
       .filter(col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
       .distinct()
-    jaccardFilter(exactShared(cand, sets), sets, num, den)
+    jaccardFilter(exactShared(cand, sets, sets), sets, num, den)
   }
 
   /** D10: the dedup family's measured recall gate — the S4 pattern
@@ -1168,9 +1166,11 @@ object Dedup {
     * SAMPLE before committing the config, exactly like S4's
     * recall/nprobe sweep.
     *
-    * Both chains share ONE materialized shingle index (the truth
-    * chain's df-annotation and the LSH chain's signatures read the
-    * same stored rows — the corpus is scanned once). The Jaccard
+    * Both chains share ONE shingle index, materialized here and only
+    * here: the truth chain ([[jaccardPairs]], the same verifier as
+    * [[ngramJaccard]], cap `maxDf` counted over this index) and the
+    * LSH chain's signatures read the same stored rows — the corpus is
+    * scanned once. The Jaccard
     * bucket is pure integer arithmetic
     * (`10*shared div (n_a+n_b-shared)` — floor of 10j with no float
     * boundary), so bucket membership cannot disagree with the oracle.
@@ -1180,15 +1180,14 @@ object Dedup {
       num: Long, den: Long, maxDf: Long = 0): DataFrame = {
     val sets = Materializer.of(df.sparkSession)(
       shingleSets(df, idCol, textCol, n))
-    val truth = if (maxDf <= 0) jaccardFilter(sharedCounts(sets), sets, num, den)
-      else cappedJaccardPairs(sets, num, den, maxDf)
+    val truth = jaccardPairs(sets, num, den, maxDf)
     // r18 (the annRecallCandidates predicate device, applied to the
     // dedup gate): for a TRUTH pair, membership in the LSH arm's
     // output is a ROW-LOCAL predicate — the uncapped LSH chain emits
     // exactly the pairs that (a) share >= 1 band bucket at the same
     // band index and (b) pass the same exact-Jaccard threshold the
     // truth row already passed with the same full-set shared/n_a/n_b
-    // (cappedJaccardPairs adds the hot overlap back, so truth `shared`
+    // (the capped count adds the hot overlap back, so truth `shared`
     // IS the full |A∩B|). So the whole hit tower — band explode +
     // band-bucket self-join + candidate distinct + exactShared's two
     // shingle joins + jaccardFilter's two size joins — collapses into
@@ -1224,8 +1223,9 @@ object Dedup {
     * duplicates resolve on the content hash; near-dups come from
     * minhash band buckets joined incoming x corpus ONLY — corpus
     * bands never join each other — then verified by exact shingle
-    * Jaccard at `num/den`, the same integer-arithmetic test as
-    * [[minhashLsh]].
+    * Jaccard at `num/den`: [[exactShared]] recounts each candidate over
+    * the two indexes and [[jaccardAtLeast]] is the integer test every
+    * near-dup and ER path applies.
     *
     * One row per incoming doc: `status` in dup_exact | near_dup | new
     * (exact wins when both hold), `match_id` = the smallest matching
@@ -1260,17 +1260,12 @@ object Dedup {
       .join(exBands.as("y"), Seq("band", "bh"))
       .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
       .distinct()
-    val shared = cand
-      .join(incSets.select(col("doc_id").as("doc_a"), col("sh")), "doc_a")
-      .join(exSets.select(col("doc_id").as("doc_b"), col("sh")), Seq("doc_b", "sh"))
-      .groupBy(col("doc_a"), col("doc_b"))
-      .agg(count(lit(1)).as("shared"))
-    val near = shared
+    val near = exactShared(cand, incSets, exSets)
       .join(incSets.groupBy(col("doc_id").as("doc_a"))
         .agg(count(lit(1)).as("n_a")), "doc_a")
       .join(exSets.groupBy(col("doc_id").as("doc_b"))
         .agg(count(lit(1)).as("n_b")), "doc_b")
-      .filter(lit(den + num) * col("shared") >= lit(num) * (col("n_a") + col("n_b")))
+      .filter(jaccardAtLeast(col("shared"), col("n_a"), col("n_b"), num, den))
       .groupBy(col("doc_a").as("doc_id"))
       .agg(min(col("doc_b")).as("near_match"))
     exact.join(near, Seq("doc_id"), "left")

@@ -8,6 +8,8 @@ import javax.imageio.stream.{MemoryCacheImageInputStream, MemoryCacheImageOutput
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.functions.Rounding
+
 /** One decoded frame from a media payload. */
 final case class MediaFrame(
     doc_id: Long,
@@ -555,8 +557,7 @@ object Multimodal {
               val n = if (declared >= 0) declared else pcm.length.toLong / frameSize
               val rate =
                 if (n <= 1) 0.0
-                else BigDecimal(crossings.toDouble / (n - 1))
-                  .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+                else Rounding.round6(crossings.toDouble / (n - 1))
               AudioZcr(id, n, crossings, rate)
     } finally in.close()
   }
@@ -701,8 +702,7 @@ object Multimodal {
       }
       val rate =
         if (n <= 1) 0.0
-        else BigDecimal(crossings.toDouble / (n - 1))
-          .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+        else Rounding.round6(crossings.toDouble / (n - 1))
       AudioZcr(id, n, crossings, rate)
     }
 

@@ -68,62 +68,35 @@ object Profiling {
     * n_distinct) with exact counts. `n_distinct` counts non-null
     * distinct values (COUNT(DISTINCT c) semantics on both engines).
     *
-    * Two physical strategies, identical output (spec-asserted):
-    *
-    *   - `"fused"` (default): ONE scan computes the n_rows leg and all
-    *     k n_null legs as k conditional sums inside a single partial
-    *     aggregate (exploded to per-column rows), plus k scans each
-    *     pruned to ONE column for its COUNT(DISTINCT) leg. The row
-    *     count is computed once instead of k times, and each distinct
-    *     scan ships only its own column.
-    *   - `"expand"`: ONE scan total — all legs in a single aggregate,
-    *     letting Catalyst's multi-distinct rewrite Expand each row
-    *     (k+1)-fold. Map-side combine on (gid, value) collapses
-    *     duplicate values per partition BEFORE the shuffle, so shuffle
-    *     volume is per-partition-distinct, not k x rows — the win when
-    *     the table is IO-bound and columns repeat (enum/type columns);
-    *     near-unique key columns push the shuffle back toward k x n.
+    * ONE scan computes the n_rows leg and all k n_null legs as k
+    * conditional sums inside a single partial aggregate (exploded to
+    * per-column rows), plus k scans each pruned to ONE column for its
+    * COUNT(DISTINCT) leg. The row count is computed once instead of k
+    * times, and each distinct scan ships only its own column.
     *
     * A single-scan no-Expand variant (encode every column to one
     * comparable type and explode) was rejected: a lossy-at-the-margin
     * cast (e.g. double -0.0 vs 0.0 stringify differently but group
     * identically) can silently change the distinct count.
     */
-  def columnProfile(df: DataFrame, cols: Seq[String],
-      strategy: String = "fused"): DataFrame = {
+  def columnProfile(df: DataFrame, cols: Seq[String]): DataFrame = {
     require(cols.nonEmpty, "no columns to profile")
-    strategy match {
-      case "expand" =>
-        val aggs = count(lit(1)).as("n_rows") +:
-          cols.flatMap(c => Seq(
-            sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"__null_$c"),
-            countDistinct(col(c)).as(s"__dist_$c")))
-        df.agg(aggs.head, aggs.tail: _*)
-          .select(col("n_rows"), explode(array(cols.map(c =>
-            struct(lit(c).as("col_name"), col(s"__null_$c").as("n_null"),
-              col(s"__dist_$c").as("n_distinct"))): _*)).as("__e"))
-          .select(col("__e.col_name"), col("n_rows"), col("__e.n_null"),
-            col("__e.n_distinct"))
-      case "fused" =>
-        val aggs = count(lit(1)).as("n_rows") +:
-          cols.map(c => sum(when(col(c).isNull, 1L).otherwise(0L))
-            .as(s"__null_$c"))
-        val nulls = df.agg(aggs.head, aggs.tail: _*)
-          .select(col("n_rows"), explode(array(cols.map(c =>
-            struct(lit(c).as("col_name"), col(s"__null_$c").as("n_null"))): _*))
-            .as("__e"))
-          .select(col("__e.col_name"), col("n_rows"), col("__e.n_null"))
-        val distincts = cols.map { c =>
-          df.select(col(c))
-            .agg(countDistinct(col(c)).as("n_distinct"))
-            .select(lit(c).as("col_name"), col("n_distinct"))
-        }.reduce(_.unionAll(_))
-        nulls.join(distincts, "col_name")
-          .select(col("col_name"), col("n_rows"), col("n_null"),
-            col("n_distinct"))
-      case other => throw new IllegalArgumentException(
-        s"columnProfile strategy=$other (want fused | expand)")
-    }
+    val aggs = count(lit(1)).as("n_rows") +:
+      cols.map(c => sum(when(col(c).isNull, 1L).otherwise(0L))
+        .as(s"__null_$c"))
+    val nulls = df.agg(aggs.head, aggs.tail: _*)
+      .select(col("n_rows"), explode(array(cols.map(c =>
+        struct(lit(c).as("col_name"), col(s"__null_$c").as("n_null"))): _*))
+        .as("__e"))
+      .select(col("__e.col_name"), col("n_rows"), col("__e.n_null"))
+    val distincts = cols.map { c =>
+      df.select(col(c))
+        .agg(countDistinct(col(c)).as("n_distinct"))
+        .select(lit(c).as("col_name"), col("n_distinct"))
+    }.reduce(_.unionAll(_))
+    nulls.join(distincts, "col_name")
+      .select(col("col_name"), col("n_rows"), col("n_null"),
+        col("n_distinct"))
   }
 
   /** SQL-side twin of [[histogram]]'s bin expression for oracle

@@ -110,29 +110,4 @@ object Shared {
     val p = math.pow(10, k)
     floor(c * p) / p
   }
-  def cutSql(x: String, k: Int): String = {
-    // integer literals like avg4Sql's proven form: a bare 10000.0
-    // would parse as DECIMAL in DuckDB and change the arithmetic type
-    val p = math.pow(10, k).toLong
-    s"floor(($x) * $p) / $p"
-  }
-
-  /** DuckDB twin of Spark's `round(double, k)` — NOT DuckDB's own
-    * round. The two engines implement different functions on doubles
-    * (Spark rounds the shortest-decimal re-rendering HALF_UP via
-    * BigDecimal.valueOf; DuckDB multiplies by 10^k and rounds the
-    * binary product half-away-from-zero), and they disagree on ~5% of
-    * tie-neighborhood renderings (SURVEY §30.4, §32.3). The mirror
-    * routes DuckDB through the SAME kernel Spark uses: double →
-    * VARCHAR is the shortest-roundtrip rendering (digit sequence
-    * unique per double, identical to what BigDecimal.valueOf sees),
-    * parsed exactly into a wide decimal (scale 18 ≥ every fractional
-    * digit a ≥1e-1-magnitude rendering can carry), rounded HALF_UP as
-    * decimal — bit-equal to Spark on the full synthesized boundary
-    * population, both signs (SURVEY §32.3: 0/140454). Use this
-    * for every oracle `round(<double>, k)`; plain round stays correct
-    * for DECIMAL operands (exact in both engines).
-    */
-  def roundSql(x: String, k: Int): String =
-    s"CAST(round(CAST(CAST(($x) AS VARCHAR) AS DECIMAL(38,18)), $k) AS DOUBLE)"
 }

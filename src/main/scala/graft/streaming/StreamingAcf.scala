@@ -1,9 +1,11 @@
 package graft.streaming
 
-import java.math.{BigInteger, RoundingMode}
+import java.math.BigInteger
 
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+
+import graft.functions.Rounding
 
 /** A67s: streaming lag-k autocorrelation — the live twin of
   * `graft.operators.Autocorr.acf`, continuously answering "is this
@@ -100,14 +102,8 @@ object StreamingAcf {
     val num = n.multiply(sxy).subtract(sx.multiply(sy)).doubleValue()
     val d1 = n.multiply(sxx).subtract(sx.multiply(sx)).doubleValue()
     val d2 = n.multiply(syy).subtract(sy.multiply(sy)).doubleValue()
-    // BigDecimal.valueOf (shortest-decimal), NOT the exact-binary
-    // constructor: Spark's Round(double) goes through valueOf, and the
-    // two disagree on representational near-ties — parity with the
-    // batch operator means reproducing its exact rounding path
     val r = if (d1 > 0.0 && d2 > 0.0)
-      Some(java.math.BigDecimal
-        .valueOf(num / (math.sqrt(d1) * math.sqrt(d2)))
-        .setScale(6, RoundingMode.HALF_UP).doubleValue())
+      Some(Rounding.round6(num / (math.sqrt(d1) * math.sqrt(d2))))
     else None
     (sums(b), r)
   }

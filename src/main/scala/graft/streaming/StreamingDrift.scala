@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.functions.Rounding
 import graft.operators.Drift
 
 /** Streaming twin of Drift.psi (C3): PSI of a LIVE stream against a
@@ -88,7 +89,7 @@ object StreamingDrift extends Serializable {
       }
       i += 1
     }
-    BigDecimal(acc).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+    Rounding.round6(acc)
   }
 
   final case class KsRow(grp: String, nCur: Long, dNum: Long, ks: Double)
@@ -205,8 +206,7 @@ object StreamingDrift extends Serializable {
       val e = (nCur * (cRef + alpha)) / (nRef + alpha * k)
       acc += (cCur - e) * (cCur - e) / e
     }
-    (k.toLong,
-      BigDecimal(acc).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
+    (k.toLong, Rounding.round6(acc))
   }
 
   /** C6s: streaming chi-square categorical drift vs a static reference

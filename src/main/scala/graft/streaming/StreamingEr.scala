@@ -17,8 +17,8 @@ import graft.operators.Dedup
   * multi-band hits — a streaming `distinct` would need state), and
   * `shared` is computed per candidate with `array_intersect` against
   * the reference side's materialized gram array — row-local, exact,
-  * the same integer threshold arithmetic as
-  * [[graft.operators.EntityResolution.fuzzyJoin]].
+  * and tested with [[graft.operators.Dedup.jaccardAtLeast]], the
+  * integer Jaccard test of every batch near-dup and ER path.
   *
   * Candidate recall is the MinHash-band trade (the D3/D8 contract, not
   * ER1's complete shingle index): pairs sharing no band are missed —
@@ -38,7 +38,10 @@ object StreamingEr {
     * static `reference` table: one APPEND row per verified pair —
     * (left_id, right_id, shared, n_l, n_r, jaccard) with Jaccard >=
     * num/den, exactly [[graft.operators.EntityResolution.fuzzyJoin]]'s
-    * output columns.
+    * output columns. `shared` is the in-row `array_intersect` size and
+    * the threshold and display are [[graft.operators.Dedup]]'s
+    * `jaccardAtLeast` and `jaccardRounded` column helpers, evaluated
+    * per row.
     */
   def matchAgainst(stream: DataFrame, reference: DataFrame,
       idCol: String, textCol: String, n: Int, num: Long,
@@ -79,9 +82,9 @@ object StreamingEr {
       .withColumn("shared",
         size(array_intersect(col("__lg"), col("__rgrams"))).cast("long"))
       .withColumn("n_l", size(col("__lg")).cast("long"))
-      .filter(lit(den + num) * col("shared") >= lit(num) * (col("n_l") + col("n_r")))
+      .filter(Dedup.jaccardAtLeast(col("shared"), col("n_l"), col("n_r"), num, den))
       .withColumn("jaccard",
-        round(col("shared") / (col("n_l") + col("n_r") - col("shared")), 4))
+        Dedup.jaccardRounded(col("shared"), col("n_l"), col("n_r")))
       .select("left_id", "right_id", "shared", "n_l", "n_r", "jaccard")
   }
 }

@@ -3,6 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.functions.Rounding
+
 /** R27s: streaming heavy-change — the deltoids question ("which keys'
   * counts changed most between the two most recent windows") asked
   * continuously. The batch operator
@@ -66,11 +68,9 @@ object StreamingHeavyChange {
         else late += 1
       }
       state.update((bucket, nCur, nPrev, late))
-      // the batch display rounding verbatim: Spark round(double, 6) is
-      // shortest-decimal + HALF_UP, so emits compare bit-equal to a
+      // the batch display rounding, so emits compare bit-equal to a
       // DataFrame round() of the same division
-      val ratio = java.math.BigDecimal.valueOf(nCur / (nPrev + 1.0))
-        .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+      val ratio = Rounding.round6(nCur / (nPrev + 1.0))
       Iterator.single(KeyDelta(key, bucket, nCur, nPrev, nCur - nPrev,
         ratio, late))
     }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.functions.Rounding
+
 /** Streaming twin of the OLS trend baseline
   * (graft.operators.Changepoint.trendEvents, R21): a continuously
   * maintained per-key regression from SIX LONGS of state — (first-seen
@@ -68,11 +70,10 @@ object StreamingTrend extends Serializable {
     val den = s.n * s.sxx - s.sx * s.sx
     if (den == 0L) None
     else {
-      val slope = BigDecimal((s.n * s.sxy - s.sx * s.sy).toDouble / den.toDouble)
-        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-      val intercept = BigDecimal(
+      val slope = Rounding.round6(
+        (s.n * s.sxy - s.sx * s.sy).toDouble / den.toDouble)
+      val intercept = Rounding.round6(
         (s.sy.toDouble - slope * s.sx.toDouble) / s.n)
-        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
       Some((slope, intercept))
     }
   }

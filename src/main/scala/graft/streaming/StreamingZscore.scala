@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-import graft.functions.IpFunctions
+import graft.functions.{IpFunctions, Rounding}
 
 /** Streaming twin of the parametric z-score anomaly scorer
   * (graft.operators.Baseline.zscoreAnomaly, R23) — the cheapest live
@@ -29,9 +29,7 @@ import graft.functions.IpFunctions
   * 2^63 micro-units² while the batch decimal path keeps going, and
   * value² per row already reaches 10^18 at value ≈ 1500.
   */
-// Serializable: the state-update closure calls the object's round6
-// helper (shared with the spec), capturing the module reference.
-object StreamingZscore extends Serializable {
+object StreamingZscore {
 
   final case class Obs(key: String, v6: Long)
 
@@ -58,9 +56,6 @@ object StreamingZscore extends Serializable {
       .as[Obs]
   }
 
-  private[streaming] def round6(x: Double): Double =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-
   def perKey(obs: Dataset[Obs], kNum: Long, kDen: Long): Dataset[KeyZscore] = {
     val spark = obs.sparkSession
     import spark.implicits._
@@ -82,9 +77,9 @@ object StreamingZscore extends Serializable {
           val flag = devNum * devNum * (BigInt(kDen) * kDen) >
             BigInt(kNum) * kNum * m * m * varNum
           Iterator.single(KeyZscore(key, n, m,
-            round6(st.sx.toDouble / n / 1e6),
-            round6(math.sqrt(varNum.toDouble) / n / 1e6),
-            round6(sc.toDouble / m / 1e6),
+            Rounding.round6(st.sx.toDouble / n / 1e6),
+            Rounding.round6(math.sqrt(varNum.toDouble) / n / 1e6),
+            Rounding.round6(sc.toDouble / m / 1e6),
             if (flag) 1 else 0))
         } else Iterator.empty
       val sxx2 = vs.foldLeft(BigInt(0))((a, v) => a + BigInt(v) * BigInt(v))

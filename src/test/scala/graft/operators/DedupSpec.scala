@@ -66,12 +66,12 @@ class DedupSpec extends SparkSuite {
     assert(pairs((1L, 2L)) == 0L)
   }
 
-  test("xxhash fast path finds the same pair set as the md5 oracle path") {
-    val md5Pairs = Dedup.ngramJaccard(docs, "doc_id", "text", 3, 1, 2)
+  test("ngramJaccard gives the same non-empty pair set on a rerun") {
+    val first = Dedup.ngramJaccard(docs, "doc_id", "text", 3, 1, 2)
       .collect().map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"))).toSet
-    val xxPairs = Dedup.ngramJaccard(docs, "doc_id", "text", 3, 1, 2)
+    val again = Dedup.ngramJaccard(docs, "doc_id", "text", 3, 1, 2)
       .collect().map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"))).toSet
-    assert(xxPairs == md5Pairs && md5Pairs.nonEmpty)
+    assert(again == first && first.nonEmpty)
   }
 
   test("minhash signature is k stable columns") {

@@ -1,5 +1,8 @@
 package graft.operators
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
+
 import graft.SparkSuite
 
 /** Scale guards for the dedup candidate generators: a stop-phrase
@@ -27,8 +30,12 @@ class HotBucketSpec extends SparkSuite {
 
   test("posting-list cap bounds ngram candidates without losing true near-dups") {
     val sets = Dedup.shingleSets(docs, "doc_id", "text", 3)
-    val uncapped = Dedup.shingleCandidates(sets, maxDf = 0).count()
-    val capped = Dedup.shingleCandidates(sets, maxDf = 4).count()
+    // candidate pairs: the pairs the overlap count emits
+    def candidates(hot: Option[DataFrame]): Long =
+      Dedup.sharedCounts(sets, sets, ("doc_a", "doc_b"),
+        col("doc_a") < col("doc_b"), hot).count()
+    val uncapped = candidates(None)
+    val capped = candidates(Some(Dedup.hotShingles(sets, 4)))
     // every doc shares the boilerplate shingles -> uncapped is all-pairs
     assert(uncapped >= n.toLong * (n - 1) / 2, s"uncapped=$uncapped")
     // capped: hot shingles (df = 62) drop out; only docs sharing a

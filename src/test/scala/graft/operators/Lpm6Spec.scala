@@ -48,7 +48,7 @@ class Lpm6Spec extends SparkSuite {
     assert(out == Map("2001:dead::1" -> null, "not-an-ip" -> null))
   }
 
-  test("anchor choice and join strategy never change the result") {
+  test("anchor choice never changes the result") {
     val hosts = Seq("2001:db8:1:0:2:3::9", "2001:db8:1:0:2:99::1",
       "2001:db8:1:ffff::1", "2001:db8:77::1", "fd00::1", "2001:dead::1")
     val base = enrich(hosts)

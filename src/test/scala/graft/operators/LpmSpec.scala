@@ -45,7 +45,7 @@ class LpmSpec extends SparkSuite {
     assert(out.isNullAt(out.fieldIndex("owner")))
   }
 
-  test("anchor choice and join strategy never change the result") {
+  test("anchor choice never changes the result") {
     val hosts = Seq("10.1.2.200", "10.1.2.5", "10.1.9.1", "10.7.0.1",
       "192.168.3.4", "172.16.0.1")
     val base = enrich(hosts)

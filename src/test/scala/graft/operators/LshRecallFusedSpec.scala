@@ -1,5 +1,9 @@
 package graft.operators
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import graft.SparkSuite
 
@@ -32,7 +36,7 @@ class LshRecallFusedSpec extends SparkSuite {
     val sets = Materializer.of(spark)(
       Dedup.shingleSets(corpus, "doc_id", "text", 3))
     val truth =
-      if (maxDf <= 0) Dedup.jaccardFilter(Dedup.sharedCounts(sets), sets, 1, 2)
+      if (maxDf <= 0) Dedup.jaccardPairs(sets, 1, 2, maxDf = 0)
       else Dedup.ngramJaccard(corpus, "doc_id", "text", 3, 1, 2, maxDf = maxDf)
     val hits = Dedup.lshPairsFromSets(sets, 1, 2)
       .select(col("doc_a"), col("doc_b"), lit(1).as("__hit"))
@@ -50,7 +54,7 @@ class LshRecallFusedSpec extends SparkSuite {
   test("fused recall rows identical to the two-tower reference") {
     // the fusion rewrites only the HIT side (band membership as a
     // row-local predicate); the truth side is the shared
-    // cappedJaccardPairs code either way, so identity on a non-empty
+    // Dedup.jaccardPairs verifier either way, so identity on a non-empty
     // truth set at maxDf 0 and 100 (the production q_dedup_recall cap)
     // is what pins it — the capped path end-to-end is oracle-gated
     for (maxDf <- Seq(0L, 100L)) {
@@ -60,5 +64,51 @@ class LshRecallFusedSpec extends SparkSuite {
       assert(got == want, s"maxDf=$maxDf")
       assert(got.nonEmpty, s"maxDf=$maxDf produced an empty gate")
     }
+  }
+
+  /** Spark jobs started while `build` runs on this thread. The jobs
+    * run under a job group; a sentinel job in a second group, seen by
+    * the listener after them, proves every start event has arrived.
+    */
+  private def buildJobs(build: => Any): Int = {
+    val sc = spark.sparkContext
+    val group = s"build-${System.nanoTime}"
+    val jobs = new AtomicInteger
+    val drained = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => jobs.incrementAndGet()
+          case Some(g) if g == group + "-end" => drained.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "build")
+      build
+      sc.setJobGroup(group + "-end", "sentinel")
+      sc.parallelize(Seq(1), 1).count()
+      assert(drained.await(60, TimeUnit.SECONDS), "listener never drained")
+      jobs.get
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("capped lshRecall materializes its shingle index once") {
+    assert(Materializer.of(spark) == Materializer.Local)
+    // building runs only the eager materializations: the shingle index
+    // and the hot-shingle table, each exactly once
+    val parts = buildJobs {
+      val sets = Materializer.of(spark)(
+        Dedup.shingleSets(corpus, "doc_id", "text", 3))
+      Dedup.hotShingles(sets, 4)
+    }
+    val recall = buildJobs(
+      Dedup.lshRecall(corpus, "doc_id", "text", 3, 1, 2, maxDf = 4))
+    assert(parts > 0)
+    assert(recall == parts, s"lshRecall build jobs=$recall, index + hot table=$parts")
   }
 }

@@ -37,25 +37,20 @@ class ProfilingSpec extends SparkSuite {
       (Some(1L), Some("x")), (Some(1L), None),
       (Some(2L), Some("y")), (None, Some("x"))
     ).toDF("id", "s")
-    for (strategy <- Seq("fused", "expand")) {
-      val got = Profiling.columnProfile(df, Seq("id", "s"), strategy)
-        .orderBy("col_name")
-        .as[(String, Long, Long, Long)].collect().toSeq
-      assert(got == Seq(("id", 4L, 1L, 2L), ("s", 4L, 1L, 2L)),
-        s"strategy=$strategy")
-    }
+    val got = Profiling.columnProfile(df, Seq("id", "s"))
+      .orderBy("col_name")
+      .as[(String, Long, Long, Long)].collect().toSeq
+    assert(got == Seq(("id", 4L, 1L, 2L), ("s", 4L, 1L, 2L)))
   }
 
   test("columnProfile plans: expand reads the table once, fused counts rows once") {
     val df = (1 to 50).map(i => (i.toLong, s"v${i % 7}", i % 3))
       .toDF("a", "b", "c")
-    def scans(strategy: String): Int =
-      "LocalTableScan".r.findAllIn(Profiling
-        .columnProfile(df, Seq("a", "b", "c"), strategy)
+    val scans = "LocalTableScan".r.findAllIn(Profiling
+        .columnProfile(df, Seq("a", "b", "c"))
         .queryExecution.executedPlan.toString).length
-    assert(scans("expand") == 1)
     // fused: one wide count/null scan + one pruned scan per distinct leg
-    assert(scans("fused") == 4)
+    assert(scans == 4)
   }
 
   test("histogramBinSql mirrors the Scala bin expression") {

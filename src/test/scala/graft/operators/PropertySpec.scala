@@ -377,6 +377,58 @@ class PropertySpec extends SparkSuite {
     }, 15)
   }
 
+  test("ngramJaccard and fuzzyJoin count every pair's full overlap, capped or not") {
+    // num/den = 1/3. A cap of 2 makes the shingles of the shared
+    // boilerplate prefix (and the common ones of this 5-word
+    // vocabulary) hot, so pairs that also share a rare shingle need the
+    // exact hot add-back
+    val word = Gen.oneOf("aa", "bb", "cc", "dd", "ee")
+    val doc = for {
+      pre <- Gen.oneOf("", "xx yy zz ")
+      n <- Gen.chooseNum(1, 9); ws <- Gen.listOfN(n, word)
+    } yield pre + ws.mkString(" ")
+    val gen = for {
+      nl <- Gen.chooseNum(0, 7); nr <- Gen.chooseNum(0, 7)
+      ls <- Gen.listOfN(nl, doc); rs <- Gen.listOfN(nr, doc)
+    } yield (ls, rs)
+    def sh(t: String): Set[Seq[String]] = {
+      val tk = t.trim.split("\\s+").toSeq
+      if (tk.length < 3) Set.empty else tk.sliding(3).map(_.toSeq).toSet
+    }
+    // brute force: (id_a, id_b) -> (|A∩B|, |A|, |B|) over all pairs
+    def brute(as: Seq[(Long, String)], bs: Seq[(Long, String)],
+        keep: (Long, Long) => Boolean) = (for {
+      (ia, ta) <- as; (ib, tb) <- bs if keep(ia, ib)
+      a = sh(ta); b = sh(tb) if a.nonEmpty && b.nonEmpty
+    } yield (ia, ib) -> ((a.intersect(b).size.toLong, a.size.toLong,
+      b.size.toLong))).toMap
+    def passes(c: (Long, Long, Long)) = 4L * c._1 >= c._2 + c._3
+    // every emitted pair is exact; uncapped emits exactly the passing set
+    def agrees(got: Map[(Long, Long), (Long, Long, Long)],
+        truth: Map[(Long, Long), (Long, Long, Long)], maxDf: Long) =
+      got.forall { case (p, c) => truth.get(p).contains(c) && passes(c) } &&
+        (maxDf > 0 || got.keySet == truth.filter(t => passes(t._2)).keySet)
+    check(Prop.forAll(gen) { case (ls, rs) =>
+      val left = ls.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+      val right = rs.zipWithIndex.map { case (t, i) => (100L + i, t) }
+      Seq(0L, 2L).forall { maxDf =>
+        val self = Dedup.ngramJaccard(left.toDF("doc_id", "text"),
+            "doc_id", "text", 3, 1, 3, maxDf = maxDf)
+          .select("doc_a", "doc_b", "shared", "n_a", "n_b")
+          .as[(Long, Long, Long, Long, Long)].collect()
+          .map(r => (r._1, r._2) -> ((r._3, r._4, r._5))).toMap
+        val two = EntityResolution.fuzzyJoin(left.toDF("doc_id", "text"),
+            right.toDF("doc_id", "text"), "doc_id", "text", 3, 1, 3,
+            maxDf = maxDf)
+          .select("left_id", "right_id", "shared", "n_l", "n_r")
+          .as[(Long, Long, Long, Long, Long)].collect()
+          .map(r => (r._1, r._2) -> ((r._3, r._4, r._5))).toMap
+        agrees(self, brute(left, left, _ < _), maxDf) &&
+          agrees(two, brute(left, right, (_, _) => true), maxDf)
+      }
+    }, 10)
+  }
+
   test("cusum closed form equals the sequential recurrence for arbitrary series") {
     val gen = for {
       n <- Gen.chooseNum(1, 40)

@@ -152,7 +152,7 @@ class TextAnalysisSpec extends SparkSuite {
     assert(out("files.net").getAs[Boolean]("blocked"))
   }
 
-  test("linear scorer fast-hash path: same plumbing, stable, exact bounds") {
+  test("linear scorer: same plumbing, stable, exact bounds") {
     val docs = Seq((1L, "alpha beta gamma delta"), (2L, "one two")).toDF("doc_id", "text")
     val out = TextAnalysis.linearScore(docs, "doc_id", "text", 0.0)
     val rows = out.collect().map(r => r.getAs[Long]("doc_id") -> r.getAs[Double]("score")).toMap

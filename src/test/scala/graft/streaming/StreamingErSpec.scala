@@ -35,8 +35,8 @@ class StreamingErSpec extends SparkSuite {
     val cand = lb.as("x").join(rb.as("y"), Seq("band", "bh"))
       .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
       .distinct()
-    Dedup.jaccardFilter(Dedup.exactShared(cand,
-        ls.union(rs)), ls.union(rs), 1, 2)
+    Dedup.jaccardFilter(Dedup.exactShared(cand, ls, rs),
+        ls.union(rs), 1, 2)
       .select("doc_a", "doc_b", "shared", "n_a", "n_b")
       .as[(Long, Long, Long, Long, Long)].collect().toSet
   }
